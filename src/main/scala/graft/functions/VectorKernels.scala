@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen kernels for the three vector folds that sit on the
@@ -345,6 +346,19 @@ case class WeightedAvgExpr(nb: Expression, dim: Int) extends Expression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "weighted_vec_avg"
+
+  /** weightedAvg reads each entry as getStruct(k, 3) with getDouble(1) and
+    * getArray(2).getDouble(j): any other layout (a float weight, an
+    * array<float> vec) would decode as garbage doubles, so it must fail
+    * analysis instead.
+    */
+  override def checkInputDataTypes(): TypeCheckResult = nb.dataType match {
+    case ArrayType(StructType(Array(_, StructField(_, DoubleType, _, _),
+        StructField(_, ArrayType(DoubleType, _), _, _))), _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<struct<_, double, array<double>>>, got ${other.catalogString}")
+  }
 
   override def eval(input: InternalRow): Any = {
     val v = nb.eval(input)

@@ -214,7 +214,10 @@ object Features {
     */
   def sgVectors(edges: DataFrame, accountEmbeddings: DataFrame,
       dim: Int = CorpusGen.EmbDim): DataFrame = {
-    val emb = accountEmbeddings.select(col("accountId").as("dst"), col("vec"))
+    // the kernel reads array<double> only; a float-vector table is widened
+    // here (exact; a no-op cast on the double tables CorpusGen writes)
+    val emb = accountEmbeddings.select(col("accountId").as("dst"),
+      col("vec").cast("array<double>").as("vec"))
     edges.join(emb, Seq("dst"))
       .groupBy(col("src"))
       .agg(sort_array(collect_list(struct(col("dst"), col("w"), col("vec")))).as("nb"))

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
@@ -9,32 +10,59 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Deduplication operators for large-scale training-data pipelines, over a
   * documents(doc_id, text, …) table.
   *
-  * All variants follow the same scale shape:
+  * The four near-duplicate families run ONE LSH similarity join,
+  * [[lshJoin]]:
   *
-  *   1. exact-dup pre-pass — collapse sha256-identical docs to one
-  *      representative (a duplicate-heavy corpus is the NORM at 100 TB;
-  *      without this, every group of g identical docs lands g rows in the
-  *      same LSH bucket and the bucket join degenerates to O(g²) for pairs
-  *      the cheap hash already proves identical);
-  *   2. per-row signature — ONE compiled pass per doc (a scalar kernel that
-  *      reproduces Spark's xxhash64 values bit-for-bit via catalyst XXH64,
-  *      so the banding is identical to the equivalent built-in expression
-  *      form but ~50× cheaper than interpreted higher-order functions);
-  *   3. band bucket join with a SIZE CAP — bucket sizes are counted first
-  *      and buckets above `bucketCap` are dropped from pair generation
-  *      (with L independent bands a true near-dup pair still collides in
-  *      another band w.h.p.; the cap bounds worst-case fan-out to
-  *      O(buckets × cap²) instead of O(N²));
-  *   4. exact verification on the candidates only (the expensive token/gram
-  *      sets are computed for candidate doc_ids alone, via a semi-join);
-  *   5. pairs expanded back across exact-dup groups (identical docs have
-  *      identical signatures, so group-cross pairs inherit the
-  *      representative pair's similarity and in-group pairs are 1.0).
+  *   1. band signatures — (doc_id, band_id, band_hash), one compiled
+  *      kernel pass per doc (the minhash kernels reproduce Spark's hash
+  *      values bit-for-bit, so the banding equals the built-in expression
+  *      form at a fraction of its cost);
+  *   2. [[candidatePairs]] — bucket sizes counted first, buckets above the
+  *      family's cap dropped (with several bands a true near-dup pair
+  *      still collides in another band w.h.p.; the cap bounds fan-out to
+  *      O(buckets × cap²) instead of O(N²)), then the bucket self-join
+  *      and a distinct;
+  *   3. [[sizePrunedPairs]], for the two set families only — the lossless
+  *      set-size-ratio bound on Jaccard;
+  *   4. verify — each candidate's payload is computed ONCE, for candidate
+  *      doc_ids alone (semi-join), joined to both sides of every pair, and
+  *      the pairs whose similarity passes are kept.
   *
-  * No all-pairs joins anywhere; the only shuffles are the bucket groupBys
-  * and the candidate semi-join.
+  * A family is then a band function, a payload, a similarity expression
+  * and fixed constants (the DuckDB replays in OpsQueries bake the same
+  * values):
+  *
+  *   - minhash: lane-min bands of 3-token shingles; hashed shingle set;
+  *     Jaccard ≥ 0.7; cap 256;
+  *   - ngram: lane-min bands of char 4-grams; hashed gram set; Jaccard ≥
+  *     0.8; cap 256;
+  *   - simhash: the 64-bit SimHash cut into 4 × 16-bit bands; the SimHash;
+  *     bit_count(xor) ≤ 3; cap 4096;
+  *   - embedding: random-hyperplane sign bits, one band per table; the
+  *     vector; cosine ≥ threshold; cap 1024.
+  *
+  * The three text families run the join inside [[withExactPrepass]]:
+  * sha256-identical docs collapse to one representative first (a
+  * duplicate-heavy corpus is the norm at scale; g identical docs in one
+  * bucket would cost O(g²) pairs the cheap hash already proves
+  * identical), and the pairs are expanded back across the groups after.
+  *
+  * No all-pairs joins anywhere outside the brute-force ground truths.
   */
 object Dedup {
+
+  // Near-dup family constants.
+  private val ShingleK = 3
+  private val NgramN = 4
+  private val Lanes = 16
+  private val Bands = 4
+  private val MinhashThreshold = 0.7
+  private val NgramThreshold = 0.8
+  private val SetBucketCap = 256
+  private val MaxHamming = 3
+  private val SimBucketCap = 4096
+  private val EmbDim = 64
+  private val EmbBucketCap = 1024
 
   // ---------------------------------------------------------------- exact
 
@@ -127,6 +155,27 @@ object Dedup {
     Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows))
   }
 
+  /** [[minhashBandMins]] over `nWin` windows given by their FNV-1a hash —
+    * the shared core of the allocation-free shingle and n-gram kernels.
+    */
+  private def windowBandMins(nWin: Int, lanes: Int, bands: Int)(
+      windowFnv: Int => Long): Array[Array[Long]] = {
+    val mins = Array.fill(lanes)(-1L) // unsigned max
+    var i = 0
+    while (i < nWin) {
+      val f = windowFnv(i)
+      var l = 0
+      while (l < lanes) {
+        val h = graft.kg.CorpusGen.mix(f ^ laneConst(l))
+        if (java.lang.Long.compareUnsigned(h, mins(l)) < 0) mins(l) = h
+        l += 1
+      }
+      i += 1
+    }
+    val rows = lanes / bands
+    Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows))
+  }
+
   /** Jaccard over SORTED distinct long arrays (merge intersection — the
     * brute-force all-pairs path hashes each gram to 64 bits once per doc,
     * then every pair comparison is a primitive merge instead of string-set
@@ -144,11 +193,35 @@ object Dedup {
     inter.toDouble / union.toDouble
   }
 
+  /** [[sortedJaccard]] behind the lossless bound of [[sizePrunedPairs]]:
+    * a pair whose set-size ratio is below `t` − 1e-9 can never reach `t`,
+    * so it scores 0 without the O(|A|+|B|) merge.
+    */
+  private def boundedJaccard(t: Double)(a: Array[Long], b: Array[Long]): Double = {
+    val mn = math.min(a.length, b.length).toDouble
+    val mx = math.max(a.length, b.length).toDouble
+    if (mx > 0 && mn / mx >= t - 1e-9) sortedJaccard(a, b) else 0.0
+  }
+
   /** Distinct sorted 64-bit hashes of a string set (lane-0 xxhash). */
   def hashedSet(xs: Array[String]): Array[Long] = {
     val out = xs.map(x => xxLane(0, x)).distinct
     java.util.Arrays.sort(out)
     out
+  }
+
+  /** Sorts `hs` in place and drops adjacent duplicates — ≡ `.distinct`
+    * then sort on the hash values, as in [[hashedSet]].
+    */
+  private def sortedDistinct(hs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hs)
+    var out = 0
+    var i = 0
+    while (i < hs.length) {
+      if (out == 0 || hs(out - 1) != hs(i)) { hs(out) = hs(i); out += 1 }
+      i += 1
+    }
+    if (out == hs.length) hs else java.util.Arrays.copyOf(hs, out)
   }
 
   /** Primitive float[] view of a UDF's Seq[Float] input (avoids per-element
@@ -170,64 +243,35 @@ object Dedup {
 
   /** (doc_a, doc_b) candidate pairs from shared band keys, with hot buckets
     * (> bucketCap rows) excluded from pair generation. `sigs` is
-    * (doc_id, band_id, band_hash).
+    * (doc_id, band_id, band_hash); band_hash may be any groupable type.
+    *
+    * The one cap form for every family: the hot buckets come from the
+    * partial-aggregated [[droppedBuckets]] count and prune the signatures
+    * with an anti join (AQE broadcasts the small hot list; no hint, so a
+    * pathological hot list degrades to a shuffle join instead of a driver
+    * OOM). On a low-cardinality band domain (embedding sign bits) the
+    * count shuffles ~one row per bucket per partition; a window count
+    * would exchange every signature row. On a high-cardinality domain the
+    * two cost about the same. The DuckDB replays recompute the caps as
+    * window counts and gate the pair sets.
     *
     * The in-bucket pair generation stays a compiled SELF-JOIN — measured
     * against both a collect_list + pair-UDF form (+77% on the embedding
     * path: a near-cap 1024 bucket materializes ~cap²/2 tuples per row
     * before explode) and a collect_list + typed-flatMap-iterator form
     * (object-boundary serialization per generated pair; the join emits
-    * pairs entirely inside WholeStageCodegen). What the measured rewrite
-    * KEEPS is the eager localCheckpoint on the DISTINCT OUTPUT: every
-    * caller consumes the pair list 2-3× (size prune / candIds union /
-    * verify joins), and the join+distinct subtree previously re-executed
-    * per consumer.
+    * pairs entirely inside WholeStageCodegen). The distinct output is
+    * checkpointed eagerly: the verify consumes the pair list twice
+    * (candidate ids, and the size prune or verify joins), and the
+    * join+distinct subtree would otherwise re-execute per consumer.
     */
   def candidatePairs(sigs: DataFrame, bucketCap: Int): DataFrame = {
-    val sized = sigs.withColumn("bucket_sz",
-      count(lit(1)).over(Window.partitionBy(col("band_id"), col("band_hash"))))
-    // localCheckpoint: the self-join consumes this frame on BOTH sides —
-    // without it the whole signature kernel re-runs over the corpus twice.
-    // The frame is tiny (N × bands rows of (id, int, long)).
-    val ok = sized.filter(col("bucket_sz") <= bucketCap)
-      .select(col("doc_id"), col("band_id"), col("band_hash"))
+    // localCheckpoint: the signatures feed the bucket count and both
+    // self-join sides — without it the signature kernel runs three times.
+    // The frame is small (N × bands rows of (id, int, key)).
+    val sigsC = sigs.select(col("doc_id"), col("band_id"), col("band_hash"))
       .localCheckpoint(true)
-    ok.alias("l")
-      .join(ok.alias("r"),
-        col("l.band_id") === col("r.band_id") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-      .distinct()
-      .localCheckpoint(true)
-  }
-
-  /** candidatePairs for LOW-cardinality band domains (the embedding LSH:
-    * 2^planes buckets per table — a few hundred distinct (band_id,
-    * band_hash) keys total, most ABOVE the cap at bench scale). The
-    * generic path's window count Exchanges AND SORTS every signature row
-    * by bucket key just to count buckets; here the bucket sizes come from
-    * a partial-aggregated groupBy (the shuffle carries ~one row per
-    * bucket per input partition, not one per signature), and the hot-
-    * bucket list prunes the signatures with a map-side anti join (AQE
-    * broadcasts the tiny hot frame; no hint, so a pathological hot list
-    * degrades to a shuffle join instead of a driver OOM). The self-join
-    * then sorts only the SURVIVING rows. Filter semantics are identical
-    * to the window form (same per-bucket counts, same > cap drop), so the
-    * pair set is unchanged — the DuckDB replay recomputes the caps
-    * independently and gates it.
-    */
-  private[graft] def candidatePairsAgg(sigs: DataFrame, bucketCap: Int): DataFrame = {
-    // checkpoint: the signature kernel feeds the bucket-size aggregate AND
-    // the anti-join probe side — without it the banding UDF runs twice
-    val sigsC = sigs.localCheckpoint(true)
-    val hot = sigsC.groupBy(col("band_id"), col("band_hash"))
-      .agg(count(lit(1)).as("bucket_sz"))
-      .filter(col("bucket_sz") > bucketCap)
-      .select(col("band_id"), col("band_hash"))
-    val ok = sigsC.join(hot, Seq("band_id", "band_hash"), "left_anti")
-      .select(col("doc_id"), col("band_id"), col("band_hash"))
-      .localCheckpoint(true)
+    val ok = sigsC.join(droppedBuckets(sigsC, bucketCap), Seq("band_id", "band_hash"), "left_anti")
     ok.alias("l")
       .join(ok.alias("r"),
         col("l.band_id") === col("r.band_id") &&
@@ -243,17 +287,17 @@ object Dedup {
     * set-size ratio is below the threshold can NEVER verify — drop it
     * before the expensive array join. The explosion this guards against
     * is real: char-4-gram bands on the sf0.1 documents emit 191,809
-    * candidates for 256 final pairs (OpsProfile), and every candidate row
-    * would otherwise carry BOTH gram arrays through the verify join; the
-    * size join carries one int per doc instead. The 1e-9 slack keeps a
-    * pair exactly AT the threshold from being lost to float rounding of
-    * the ratio (the verify's own inter/union division is 1-ulp exact, so
+    * candidates for 256 final pairs, and every candidate row would
+    * otherwise carry BOTH gram arrays through the verify join; the size
+    * join carries one int per doc instead. The 1e-9 slack keeps a pair
+    * exactly AT the threshold from being lost to float rounding of the
+    * ratio (the verify's own inter/union division is 1-ulp exact, so
     * nothing below threshold−1e-9 can round up to ≥ threshold). No
     * broadcast hint: sizes is O(candidate docs) — unbounded at corpus
     * scale — and the pair ids shuffle narrowly either way; AQE picks the
     * strategy that fits at runtime.
     */
-  private[graft] def sizePrunedPairs(pairs: DataFrame, sets: DataFrame,
+  private def sizePrunedPairs(pairs: DataFrame, sets: DataFrame,
       setCol: String, threshold: Double): DataFrame = {
     val sizes = sets.select(col("doc_id"), size(col(setCol)).as("sz"))
     pairs
@@ -272,6 +316,73 @@ object Dedup {
       .agg(count(lit(1)).as("bucket_sz"))
       .filter(col("bucket_sz") > bucketCap)
 
+  /** The LSH similarity join every near-dup family runs: [[candidatePairs]]
+    * of `sigs` under `cap`, the [[sizePrunedPairs]] bound when `minRatio`
+    * is set (set payloads only), then the verify: `payload` is evaluated
+    * once per candidate row of `rows` (doc_id, …), joined to both sides of
+    * each pair, and the pairs whose `sim` passes `keep` are returned as
+    * (doc_a, doc_b, score).
+    */
+  private def lshJoin(rows: DataFrame, sigs: DataFrame, cap: Int, payload: Column,
+      minRatio: Option[Double])(sim: (Column, Column) => Column,
+      keep: Column => Column): DataFrame = {
+    val pairs = candidatePairs(sigs, cap)
+    val candIds = pairs.select(col("doc_a").as("doc_id"))
+      .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    // localCheckpoint: feeds the size prune and both verify-join sides —
+    // without it the payload kernel re-runs per consumer.
+    val pay = rows.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), payload.as("p"))
+      .localCheckpoint(true)
+    minRatio.fold(pairs)(sizePrunedPairs(pairs, pay, "p", _))
+      .join(pay.select(col("doc_id").as("doc_a"), col("p").as("p_a")), Seq("doc_a"))
+      .join(pay.select(col("doc_id").as("doc_b"), col("p").as("p_b")), Seq("doc_b"))
+      .withColumn("score", sim(col("p_a"), col("p_b")))
+      .filter(keep(col("score")))
+      .select(col("doc_a"), col("doc_b"), col("score"))
+  }
+
+  /** All-pairs brute force over a SMALL (id, payload) table WITHOUT
+    * materializing pair rows: the whole table is broadcast as plain
+    * arrays, each row flatMaps its matches (`sim` ≥ threshold) against the
+    * broadcast copy — the cross product exists only inside the compiled
+    * loop, never as joined rows carrying both payloads. Returns
+    * (outA, outB, simName) with outA < outB.
+    */
+  private def bruteMatches[P: ClassTag](rows: DataFrame, read: Row => P,
+      threshold: Double, outA: String, outB: String, simName: String)(
+      sim: (P, P) => Double): DataFrame = {
+    val sorted = rows.collect().sortBy(_.getLong(0))
+    val bc = rows.sparkSession.sparkContext.broadcast(
+      (sorted.map(_.getLong(0)), sorted.map(read)))
+    // the probe takes ONLY the id and finds the row's own payload in the
+    // sorted broadcast — passing the payload as a column forced its UDF to
+    // evaluate a SECOND time in the distributed plan (once for the driver
+    // collect above, once per probe row); id-only lets Catalyst prune it
+    // from the probe side entirely. ids are sorted and distinct, so the
+    // partners with a larger id are the suffix after the own index.
+    val matchUdf = udf((id: Long) => {
+      val (ids, pays) = bc.value
+      val out = Seq.newBuilder[(Long, Double)]
+      val idx = java.util.Arrays.binarySearch(ids, id)
+      var i = idx + 1
+      while (idx >= 0 && i < ids.length) {
+        val s = sim(pays(idx), pays(i))
+        if (s >= threshold) out += ((ids(i), s))
+        i += 1
+      }
+      out.result()
+    })
+    val id = col(rows.columns(0))
+    rows.select(id.as(outA), explode(matchUdf(id)).as("m"))
+      .select(col(outA), col("m._1").as(outB), round(col("m._2"), 4).as(simName))
+  }
+
+  /** Exact all-pairs Jaccard ≥ `t` over a SMALL (doc_id, hashed set) table. */
+  private def jaccardBrute(sets: DataFrame, t: Double): DataFrame =
+    bruteMatches(sets, r => longArr(r.getSeq[Long](1)), t, "doc_a", "doc_b", "jaccard")(
+      boundedJaccard(t))
+
   /** (rep_id, doc_id) exact-dup group mapping. Built from a (doc_id, sha)
     * PROJECTION so the groupBy/join shuffles carry only id/sha columns —
     * OpsSpec asserts no shuffle in this plan outputs the content column.
@@ -286,8 +397,9 @@ object Dedup {
 
   /** Run `nearDups` on exact-dup representatives only, then expand the pair
     * list back across sha-identical groups: in-group pairs get similarity
-    * 1.0, cross-group pairs inherit the representatives' similarity.
-    * `simCol` names the similarity column produced by `nearDups`.
+    * `one`, cross-group pairs inherit the representatives' similarity
+    * (identical docs have identical signatures and payloads). `simCol`
+    * names the similarity column produced by `nearDups`.
     */
   def withExactPrepass(docs: DataFrame, simCol: String, one: Column)(
       nearDups: DataFrame => DataFrame): DataFrame = {
@@ -318,6 +430,20 @@ object Dedup {
         one.as(simCol))
     cross.unionByName(intra)
   }
+
+  private val jaccardUdf = udf((a: Seq[Long], b: Seq[Long]) =>
+    sortedJaccard(longArr(a), longArr(b)))
+
+  /** A set family's near-dups: [[lshJoin]] with the size prune and a
+    * Jaccard verify, inside the exact pre-pass. Returns
+    * (doc_a, doc_b, jaccard), doc_a < doc_b.
+    */
+  private def jaccardNearDups(docs: DataFrame, bands: DataFrame => DataFrame,
+      set: Column, threshold: Double): DataFrame =
+    withExactPrepass(docs, "jaccard", lit(1.0))(d =>
+      lshJoin(d, bands(d), SetBucketCap, set, Some(threshold))(
+        jaccardUdf(_, _), _ >= threshold)
+        .select(col("doc_a"), col("doc_b"), round(col("score"), 4).as("jaccard")))
 
   // ---------------------------------------------------------------- minhash
 
@@ -407,49 +533,28 @@ object Dedup {
   def shingleBandMinsOf(text: String, k: Int, lanes: Int, bands: Int): Array[Array[Long]] = {
     val ts = asciiTokenStream(text)
     if (ts == null) return minhashBandMins(tokenShingles(tokensOf(text), k), lanes, bands)
-    val mins = Array.fill(lanes)(-1L) // unsigned max
-    val nSh = if (ts.n < k) 1 else ts.n - k + 1
-    var i = 0
-    while (i < nSh) {
+    windowBandMins(if (ts.n < k) 1 else ts.n - k + 1, lanes, bands) { i =>
       val (s, e) = shingleRange(ts, i, k)
-      val f = fnvBytes(ts.buf, s, e)
-      var l = 0
-      while (l < lanes) {
-        val h = graft.kg.CorpusGen.mix(f ^ laneConst(l))
-        if (java.lang.Long.compareUnsigned(h, mins(l)) < 0) mins(l) = h
-        l += 1
-      }
-      i += 1
+      fnvBytes(ts.buf, s, e)
     }
-    val rows = lanes / bands
-    Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows))
   }
 
   /** Bit-identical to `hashedSet(tokenShingles(tokensOf(text), k))`:
     * offset XXH64 over the shingles' contiguous byte windows, then
-    * sort + adjacent-dedupe (≡ hash-then-distinct, as in
-    * [[ngramHashedSetOf]]). Property-pinned by ShingleKernelSpec.
+    * [[sortedDistinct]]. Property-pinned by ShingleKernelSpec.
     */
   def shingleHashedSetOf(text: String, k: Int): Array[Long] = {
     val ts = asciiTokenStream(text)
     if (ts == null) return hashedSet(tokenShingles(tokensOf(text), k))
-    val nSh = if (ts.n < k) 1 else ts.n - k + 1
-    val hs = new Array[Long](nSh)
+    val hs = new Array[Long](if (ts.n < k) 1 else ts.n - k + 1)
     var i = 0
-    while (i < nSh) {
+    while (i < hs.length) {
       val (s, e) = shingleRange(ts, i, k)
       hs(i) = XXH64.hashUnsafeBytes(ts.buf,
         org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + s, e - s, laneSeed(0))
       i += 1
     }
-    java.util.Arrays.sort(hs)
-    var out = 0
-    i = 0
-    while (i < nSh) {
-      if (out == 0 || hs(out - 1) != hs(i)) { hs(out) = hs(i); out += 1 }
-      i += 1
-    }
-    if (out == nSh) hs else java.util.Arrays.copyOf(hs, out)
+    sortedDistinct(hs)
   }
 
   /** signatures(doc_id, band_id, band_hash: array<long>): H minhash lanes
@@ -457,118 +562,27 @@ object Dedup {
     * MinHash+LSH banding; the band key is the lane-min array). One
     * compiled kernel pass per doc.
     */
-  def minhashBands(docs: DataFrame, shingleK: Int = 3, lanes: Int = 16,
-      bands: Int = 4): DataFrame = {
+  def minhashBands(docs: DataFrame, shingleK: Int = ShingleK, lanes: Int = Lanes,
+      bands: Int = Bands): DataFrame = {
     val bandsUdf = udf((text: String) => shingleBandMinsOf(text, shingleK, lanes, bands))
     docs.select(col("doc_id"), posexplode(bandsUdf(col("text"))).as(Seq("band_id", "band_hash")))
   }
 
-  private val shingleSetUdf3 = udf((text: String) => shingleHashedSetOf(text, 3))
+  private val shingleSetUdf = udf((text: String) => shingleHashedSetOf(text, ShingleK))
 
-  private val jaccardUdf = udf((a: Seq[Long], b: Seq[Long]) =>
-    sortedJaccard(longArr(a), longArr(b)))
-
-  /** Candidate pairs from shared bands, verified with exact token-set
-    * Jaccard ≥ threshold. Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
+  /** Candidate pairs from shared minhash bands of 3-token shingles,
+    * verified with exact shingle-set Jaccard ≥ 0.7. Returns
+    * (doc_a, doc_b, jaccard), doc_a < doc_b.
     */
-  def minhashNearDups(docs: DataFrame, shingleK: Int = 3, lanes: Int = 16,
-      bands: Int = 4, threshold: Double = 0.7, bucketCap: Int = 256,
-      exactPrepass: Boolean = true): DataFrame = {
-    val setUdf =
-      if (shingleK == 3) shingleSetUdf3
-      else udf((text: String) => shingleHashedSetOf(text, shingleK))
-    def core(d: DataFrame): DataFrame = {
-      val pairs = candidatePairs(minhashBands(d, shingleK, lanes, bands), bucketCap)
-      val candIds = pairs.select(col("doc_a").as("doc_id"))
-        .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-      // localCheckpoint: feeds the size prune + both verify-join sides —
-      // without it the shingle kernel re-runs per consumer.
-      val sets = d.join(candIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), setUdf(col("text")).as("sset"))
-        .localCheckpoint(true)
-      sizePrunedPairs(pairs, sets, "sset", threshold)
-        .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("set_a")), Seq("doc_a"))
-        .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("set_b")), Seq("doc_b"))
-        .withColumn("jaccard", jaccardUdf(col("set_a"), col("set_b")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-    }
-    if (exactPrepass) withExactPrepass(docs, "jaccard", lit(1.0))(core)
-    else core(docs)
-  }
+  def minhashNearDups(docs: DataFrame): DataFrame =
+    jaccardNearDups(docs, minhashBands(_), shingleSetUdf(col("text")), MinhashThreshold)
 
-  /** All-pairs brute force over a SMALL (id, hashed-set) table WITHOUT
-    * materializing pair rows: the whole table is broadcast as a plain
-    * array, each row flatMaps its matches against the broadcast copy —
-    * the cross product exists only inside the compiled loop, never as
-    * joined rows carrying both arrays.
-    */
-  /** Index of `id` in an id-sorted broadcast array, or -1. */
-  private def idIndex(all: Array[(Long, Array[Long])], id: Long): Int = {
-    var lo = 0
-    var hi = all.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val v = all(mid)._1
-      if (v == id) return mid
-      else if (v < id) lo = mid + 1
-      else hi = mid - 1
-    }
-    -1
-  }
-
-  private def bruteMatches(sets: DataFrame, threshold: Double,
-      outA: String, outB: String, simName: String): DataFrame = {
-    val spark = sets.sparkSession
-    val gathered = sets.collect().map(r =>
-      (r.getLong(0), longArr(r.getSeq[Long](1)))).sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(gathered)
-    // the probe takes ONLY the id and finds the row's own set in the
-    // sorted broadcast — passing the set as a column forced the set-UDF
-    // to evaluate a SECOND time in the distributed plan (once for the
-    // driver collect above, once per probe row); id-only lets Catalyst
-    // prune the set column from the probe side entirely. ids are sorted
-    // and distinct, so "all(i)._1 > id" ≡ the suffix after the own index.
-    val matchUdf = udf((id: Long) => {
-      val all = bc.value
-      val out = Seq.newBuilder[(Long, Double)]
-      val idx = idIndex(all, id)
-      if (idx >= 0) {
-        val ga = all(idx)._2
-        var i = idx + 1
-        while (i < all.length) {
-          val gb = all(i)._2
-          // lossless size-ratio prune (the sizePrunedPairs invariant):
-          // J ≤ min(|A|,|B|)/max(|A|,|B|), so a pair below threshold−1e-9
-          // on the ratio can never verify — skip the O(|A|+|B|) merge.
-          // Zero-size sets score J = 0 either way (threshold > 0 always
-          // here); the 1e-9 slack mirrors sizePrunedPairs' rounding guard.
-          val mn = math.min(ga.length, gb.length).toDouble
-          val mx = math.max(ga.length, gb.length).toDouble
-          if (threshold <= 0 || (mx > 0 && mn / mx >= threshold - 1e-9)) {
-            val j = sortedJaccard(ga, gb)
-            if (j >= threshold) out += ((all(i)._1, j))
-          }
-          i += 1
-        }
-      }
-      out.result()
-    })
-    sets.select(col("doc_id").as(outA),
-        explode(matchUdf(col("doc_id"))).as("m"))
-      .select(col(outA), col("m._1").as(outB), round(col("m._2"), 4).as(simName))
-  }
-
-  /** Exact all-pairs token-shingle Jaccard ≥ threshold over a SMALL doc set
-    * — the brute-force ground truth the LSH path is verified against
+  /** Exact all-pairs token-shingle Jaccard ≥ 0.7 over a SMALL doc set —
+    * the brute-force ground truth the LSH path is verified against
     * (recall specs + the DuckDB oracle for the exact-verify stage).
     */
-  def minhashBrute(docs: DataFrame, shingleK: Int = 3,
-      threshold: Double = 0.7): DataFrame = {
-    val setUdf = udf((text: String) => shingleHashedSetOf(text, shingleK))
-    val sets = docs.select(col("doc_id"), setUdf(col("text")).as("sset"))
-    bruteMatches(sets, threshold, "doc_a", "doc_b", "jaccard")
-  }
+  def minhashBrute(docs: DataFrame): DataFrame =
+    jaccardBrute(docs.select(col("doc_id"), shingleSetUdf(col("text"))), MinhashThreshold)
 
   // ---------------------------------------------------------------- simhash
 
@@ -593,43 +607,24 @@ object Dedup {
 
   val simhashUdf = udf((tokens: Seq[String]) => simhashScalar(tokens))
 
-
   /** Near-dups by SimHash: band the 64 bits into 4×16-bit keys (any pair
-    * within Hamming distance 3 shares ≥1 exact band), verify with
-    * bit_count(xor) ≤ maxHamming. Returns (doc_a, doc_b, hamming).
-    * `bucketCap` bounds the per-band fan-out like the other variants —
-    * note capping weakens the "≥1 shared band" guarantee for members of a
-    * dropped bucket, so the default is high; the exact pre-pass keeps
+    * within Hamming distance 3 leaves ≥1 band intact, so the banding alone
+    * misses no pair), verify with bit_count(xor) ≤ 3. Returns
+    * (doc_a, doc_b, hamming). The cap would weaken that guarantee for
+    * members of a dropped bucket, so it is high; the exact pre-pass keeps
     * duplicate-heavy buckets from forming in the first place.
     */
-  def simhashNearDups(docs: DataFrame, maxHamming: Int = 3,
-      bucketCap: Int = 4096, exactPrepass: Boolean = true): DataFrame = {
-    def core(d: DataFrame): DataFrame = {
-      val withSim = d
-        .select(col("doc_id"), simhashUdf(tokensCol(col("text"))).as("sim"))
-      val banded = withSim.select(col("doc_id"), col("sim"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band_id"),
-            shiftrightunsigned(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL)).as("band_hash"))): _*))
-          .as("b"))
-        .select(col("doc_id"), col("sim"), col("b.band_id"), col("b.band_hash"))
-      val sized = banded.withColumn("bucket_sz",
-        count(lit(1)).over(Window.partitionBy(col("band_id"), col("band_hash"))))
-        .localCheckpoint(true)
-      val ok = sized.filter(col("bucket_sz") <= bucketCap)
-      ok.alias("l").join(ok.alias("r"),
-          col("l.band_id") === col("r.band_id") &&
-            col("l.band_hash") === col("r.band_hash") &&
-            col("l.doc_id") < col("r.doc_id"))
-        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-          bit_count(col("l.sim").bitwiseXOR(col("r.sim"))).as("hamming"))
-        .distinct()
-        .filter(col("hamming") <= maxHamming)
+  def simhashNearDups(docs: DataFrame): DataFrame = {
+    def bands(sims: DataFrame): DataFrame =
+      sims.select(col("doc_id"), posexplode(array((0 until 4).map(b =>
+        shiftrightunsigned(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
+        .as(Seq("band_id", "band_hash")))
+    withExactPrepass(docs, "hamming", lit(0)) { d =>
+      val sims = d.select(col("doc_id"), simhashUdf(tokensCol(col("text"))).as("sim"))
+      lshJoin(sims, bands(sims), SimBucketCap, col("sim"), None)(
+        (a, b) => bit_count(a.bitwiseXOR(b)), _ <= MaxHamming)
+        .withColumnRenamed("score", "hamming")
     }
-    if (exactPrepass)
-      withExactPrepass(docs, "hamming", lit(0L))(core)
-        .select(col("doc_a"), col("doc_b"), col("hamming").cast("int").as("hamming"))
-    else core(docs)
   }
 
   // ---------------------------------------------------------------- ngram
@@ -715,21 +710,7 @@ object Dedup {
   def ngramBandMinsOf(text: String, n: Int, lanes: Int, bands: Int): Array[Array[Long]] = {
     val (cs, len) = normChars(text)
     val w = if (len < n) len else n // <n chars → the single whole-text gram
-    val nWin = if (len < n) 1 else len - n + 1
-    val mins = Array.fill(lanes)(-1L) // unsigned max
-    var s = 0
-    while (s < nWin) {
-      val f = fnvWindow(cs, s, s + w)
-      var l = 0
-      while (l < lanes) {
-        val h = graft.kg.CorpusGen.mix(f ^ laneConst(l))
-        if (java.lang.Long.compareUnsigned(h, mins(l)) < 0) mins(l) = h
-        l += 1
-      }
-      s += 1
-    }
-    val rows = lanes / bands
-    Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows))
+    windowBandMins(if (len < n) 1 else len - n + 1, lanes, bands)(s => fnvWindow(cs, s, s + w))
   }
 
   /** Bit-identical to `hashedSet(charGrams(text, n))` (DISTINCT sorted
@@ -738,9 +719,9 @@ object Dedup {
     * char below 0x80) and every window hashes in place via
     * XXH64.hashUnsafeBytes at an offset; any char ≥ 0x80 falls back to
     * per-window strings (window UTF-8 splicing is not surrogate-safe).
-    * Sort-then-adjacent-dedupe ≡ `.distinct` + sort on the hash values —
-    * the original dedupes AFTER hashing too, so hash-value identity is
-    * the exact invariant either way. Property-pinned by NgramKernelSpec.
+    * [[sortedDistinct]] ≡ `.distinct` + sort on the hash values — the
+    * original dedupes AFTER hashing too, so hash-value identity is the
+    * exact invariant either way. Property-pinned by NgramKernelSpec.
     */
   def ngramHashedSetOf(text: String, n: Int): Array[Long] = {
     val (cs, len) = normChars(text)
@@ -764,63 +745,32 @@ object Dedup {
       var s = 0
       while (s < nWin) { hs(s) = xxLane(0, new String(cs, s, w)); s += 1 }
     }
-    java.util.Arrays.sort(hs)
-    var out = 0
-    i = 0
-    while (i < nWin) {
-      if (out == 0 || hs(out - 1) != hs(i)) { hs(out) = hs(i); out += 1 }
-      i += 1
-    }
-    if (out == nWin) hs else java.util.Arrays.copyOf(hs, out)
+    sortedDistinct(hs)
   }
 
   /** signatures(doc_id, band_id, band_hash) over character-n-gram sets. */
-  def ngramBands(docs: DataFrame, n: Int = 4, lanes: Int = 16,
-      bands: Int = 4): DataFrame = {
+  def ngramBands(docs: DataFrame, n: Int = NgramN, lanes: Int = Lanes,
+      bands: Int = Bands): DataFrame = {
     val bandsUdf = udf((text: String) => ngramBandMinsOf(text, n, lanes, bands))
     docs.select(col("doc_id"), posexplode(bandsUdf(col("text"))).as(Seq("band_id", "band_hash")))
   }
 
-  /** Character-n-gram Jaccard near-dup. Candidate blocking is BANDED
-    * minhash over the gram set (lanes/bands as in minhashNearDups): a
-    * band key combines `lanes/bands` minhashes, so buckets stay selective
-    * even on a degenerate corpus with a tiny gram universe, where single-
-    * lane or length-bucket blocking degenerates to O(N²) within-bucket
-    * pairs. A pair at Jaccard j collides in ≥1 of 4 4-lane bands with
-    * prob 1-(1-j⁴)⁴ ≈ 0.88 at j=0.8, ≈0.997 at j=0.9. Exact Jaccard
-    * verifies every candidate; gram sets are computed ONCE, for candidate
-    * doc_ids only.
-    */
-  def ngramJaccard(docs: DataFrame, n: Int = 4, threshold: Double = 0.8,
-      lanes: Int = 16, bands: Int = 4, bucketCap: Int = 256,
-      exactPrepass: Boolean = true): DataFrame = {
-    val gramsUdf = udf((text: String) => ngramHashedSetOf(text, n))
-    def core(d: DataFrame): DataFrame = {
-      val pairs = candidatePairs(ngramBands(d, n, lanes, bands), bucketCap)
-      val candIds = pairs.select(col("doc_a").as("doc_id"))
-        .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-      // localCheckpoint: feeds the size prune + both verify-join sides —
-      // without it the gram kernel re-runs per consumer.
-      val sets = d.join(candIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), gramsUdf(col("text")).as("grams"))
-        .localCheckpoint(true)
-      sizePrunedPairs(pairs, sets, "grams", threshold)
-        .join(sets.select(col("doc_id").as("doc_a"), col("grams").as("grams_a")), Seq("doc_a"))
-        .join(sets.select(col("doc_id").as("doc_b"), col("grams").as("grams_b")), Seq("doc_b"))
-        .withColumn("jaccard", jaccardUdf(col("grams_a"), col("grams_b")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-    }
-    if (exactPrepass) withExactPrepass(docs, "jaccard", lit(1.0))(core)
-    else core(docs)
-  }
+  private val ngramSetUdf = udf((text: String) => ngramHashedSetOf(text, NgramN))
 
-  /** Exact all-pairs n-gram Jaccard over a SMALL doc set (ground truth). */
-  def ngramBrute(docs: DataFrame, n: Int = 4, threshold: Double = 0.8): DataFrame = {
-    val gramsUdf = udf((text: String) => ngramHashedSetOf(text, n))
-    val sets = docs.select(col("doc_id"), gramsUdf(col("text")).as("sset"))
-    bruteMatches(sets, threshold, "doc_a", "doc_b", "jaccard")
-  }
+  /** Character-4-gram Jaccard ≥ 0.8 near-dups. Candidate blocking is
+    * BANDED minhash over the gram set (as in minhashNearDups): a band key
+    * combines 4 minhashes, so buckets stay selective even on a degenerate
+    * corpus with a tiny gram universe, where single-lane or length-bucket
+    * blocking degenerates to O(N²) within-bucket pairs. A pair at Jaccard
+    * j collides in ≥1 of 4 4-lane bands with prob 1-(1-j⁴)⁴ ≈ 0.88 at
+    * j=0.8, ≈0.997 at j=0.9. Returns (doc_a, doc_b, jaccard).
+    */
+  def ngramJaccard(docs: DataFrame): DataFrame =
+    jaccardNearDups(docs, ngramBands(_), ngramSetUdf(col("text")), NgramThreshold)
+
+  /** Exact all-pairs n-gram Jaccard ≥ 0.8 over a SMALL doc set (ground truth). */
+  def ngramBrute(docs: DataFrame): DataFrame =
+    jaccardBrute(docs.select(col("doc_id"), ngramSetUdf(col("text"))), NgramThreshold)
 
   // ---------------------------------------------------------------- embedding
 
@@ -887,7 +837,7 @@ object Dedup {
   }
 
   /** (vec_id, table_id, bits) signature rows for `nVec` vectors. */
-  def embeddingBands(embs: DataFrame, nVec: Long, dim: Int = 64,
+  def embeddingBands(embs: DataFrame, nVec: Long, dim: Int = EmbDim,
       tables: Int = 16, planesOverride: Int = -1): DataFrame = {
     val planes = if (planesOverride > 0) planesOverride else planesFor(nVec)
     val mat = Array.tabulate(tables * planes)(p => planeVec(p, dim))
@@ -918,53 +868,27 @@ object Dedup {
   private val cosineFUdf = udf((a: Seq[Float], b: Seq[Float]) => cosineF(a, b))
 
   /** Embedding-cosine near-dup over embeddings(vec_id, embedding): standard
-    * multi-table random-hyperplane LSH — `tables` independent hash tables
-    * of `planes` sign bits each (planes scales ~log₂N via planesFor, tables
-    * sized by tablesFor for the recall target); a pair is a candidate if it
-    * collides in ANY table (OR-amplification); candidates verified exactly
-    * with a compiled cosine ≥ threshold.
-    *
-    * At scale: each vector emits `tables` (table_id, bits) keys; the only
-    * shuffle is the bucket self-join, whose fan-out is bounded by
-    * `bucketCap`.
+    * multi-table random-hyperplane LSH — independent hash tables of
+    * `planes` sign bits each (planes scales ~log₂N via planesFor, tables
+    * sized by tablesFor for a 0.95 recall target); a pair is a candidate
+    * if it collides in ANY table (OR-amplification); candidates verified
+    * exactly with a compiled cosine ≥ threshold. Returns
+    * (vec_a, vec_b, cos).
     */
-  def embeddingNearDups(embs: DataFrame, nVec: Long, dim: Int = 64,
-      threshold: Double = 0.35, recall: Double = 0.95,
-      bucketCap: Int = 1024, planesOverride: Int = -1,
-      tablesOverride: Int = -1): DataFrame = {
+  def embeddingNearDups(embs: DataFrame, nVec: Long, threshold: Double = 0.35,
+      planesOverride: Int = -1, tablesOverride: Int = -1): DataFrame = {
     // nVec is REQUIRED (no default): sizing the planes from an implicit
     // embs.count() would silently add a full corpus pass at scale. Pass a
     // (possibly approximate) corpus size, or planesOverride to skip sizing.
     require(nVec >= 0 || planesOverride > 0,
       "embeddingNearDups needs nVec >= 0 (approximate corpus size) or an explicit planesOverride")
-    val planes =
-      if (planesOverride > 0) planesOverride
-      else planesFor(nVec)
-    val tables =
-      if (tablesOverride > 0) tablesOverride
-      else tablesFor(planes, threshold, recall)
-    val keyed = embeddingBands(embs, -1L, dim, tables, planes)
-      .withColumnRenamed("table_id", "band_id")
-      .withColumnRenamed("bits", "band_hash")
-      .withColumnRenamed("vec_id", "doc_id")
-    // agg-pruned variant: the band domain is tables × 2^planes buckets —
-    // tiny — so bucket sizing must not sort the full signature table
-    val pairs = candidatePairsAgg(keyed, bucketCap)
-      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
-    val candIds = pairs.select(col("vec_a").as("vec_id"))
-      .unionByName(pairs.select(col("vec_b").as("vec_id"))).distinct()
-    // localCheckpoint: the verify join consumes this on BOTH sides — the
-    // un-checkpointed form duplicated the candIds distinct + embeddings
-    // semi-join subtree per side (2 full evaluations, plan-visible)
-    val vecs = embs.join(candIds, Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
-    pairs
-      .join(vecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), Seq("vec_a"))
-      .join(vecs.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), Seq("vec_b"))
-      .withColumn("cos", cosineFUdf(col("emb_a"), col("emb_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos"))
+    val planes = if (planesOverride > 0) planesOverride else planesFor(nVec)
+    val tables = if (tablesOverride > 0) tablesOverride else tablesFor(planes, threshold)
+    val sigs = embeddingBands(embs, -1L, EmbDim, tables, planes)
+      .select(col("vec_id").as("doc_id"), col("table_id").as("band_id"), col("bits").as("band_hash"))
+    lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, EmbBucketCap,
+        col("embedding"), None)(cosineFUdf(_, _), _ >= threshold)
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), round(col("score"), 4).as("cos"))
   }
 
   /** Near-dup CLUSTERS from a pair list: connected components over the
@@ -980,43 +904,8 @@ object Dedup {
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
       .select(col("node").as("doc_id"), col("comp").as("cluster_rep"))
 
-  /** Exact all-pairs cosine ≥ threshold (ground truth for recall specs) —
-    * broadcast-array flatMap like bruteMatches, no pair-row materialization.
-    */
-  def embeddingBrute(embs: DataFrame, threshold: Double = 0.35): DataFrame = {
-    val spark = embs.sparkSession
-    val gathered = embs.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), floatArr(r.getSeq[Float](1)))).sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(gathered)
-    // id-only probe against the sorted broadcast (see bruteMatches): the
-    // embedding column stays prunable on the probe side; sorted distinct
-    // ids make "all(i)._1 > id" ≡ the suffix after the own index
-    val matchUdf = udf((id: Long) => {
-      val all = bc.value
-      val out = Seq.newBuilder[(Long, Double)]
-      var lo = 0
-      var hi = all.length - 1
-      var idx = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val v = all(mid)._1
-        if (v == id) { idx = mid; lo = hi + 1 }
-        else if (v < id) lo = mid + 1
-        else hi = mid - 1
-      }
-      if (idx >= 0) {
-        val va = all(idx)._2
-        var i = idx + 1
-        while (i < all.length) {
-          val c = cosineArr(va, all(i)._2)
-          if (c >= threshold) out += ((all(i)._1, c))
-          i += 1
-        }
-      }
-      out.result()
-    })
-    embs.select(col("vec_id").as("vec_a"),
-        explode(matchUdf(col("vec_id"))).as("m"))
-      .select(col("vec_a"), col("m._1").as("vec_b"), round(col("m._2"), 4).as("cos"))
-  }
+  /** Exact all-pairs cosine ≥ threshold (ground truth for recall specs). */
+  def embeddingBrute(embs: DataFrame, threshold: Double = 0.35): DataFrame =
+    bruteMatches(embs.select(col("vec_id"), col("embedding")),
+      r => floatArr(r.getSeq[Float](1)), threshold, "vec_a", "vec_b", "cos")(cosineArr)
 }

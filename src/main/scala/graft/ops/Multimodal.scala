@@ -211,10 +211,11 @@ object Multimodal {
   def decodeImage(payload: Array[Byte]): Array[Float] = {
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new ByteArrayInputStream(payload))
-    val r = pngReader.get()
-    r.setInput(iis)
-    val img = r.read(0) // ≡ ImageIO.read's reader.read(0, null)
-    iis.close()
+    val img = try {
+      val r = pngReader.get()
+      r.setInput(iis, true, true) // seek-forward-only, no metadata: as ImageIO.read
+      r.read(0) // ≡ ImageIO.read's reader.read(0, null)
+    } finally iis.close()
     imageFeatures(img)
   }
 

@@ -71,14 +71,17 @@ object EventStream {
   def runFileStream(spark: SparkSession, dir: String,
       transform: DataFrame => DataFrame, mode: OutputMode,
       name: String): DataFrame = {
-    // stage + checkpoint under spark.local.dir (tmpfs in the bench
-    // sessions) instead of java.io.tmpdir: the default temp checkpoint
+    // stage + checkpoint under Spark's first local dir (often tmpfs)
+    // instead of java.io.tmpdir: the default temp checkpoint
     // lands on /tmp, which is DISK-backed here, and every state-store
     // instance (one per shuffle partition) commits delta files + CRCs
     // there per micro-batch — pure fixed I/O the result never sees. The
-    // checkpoint location does not affect the query's output.
-    val scratchRoot = java.nio.file.Paths.get(spark.sparkContext.getConf
-      .get("spark.local.dir", System.getProperty("java.io.tmpdir"))
+    // checkpoint location does not affect the query's output. Spark
+    // resolves its local dirs with SPARK_LOCAL_DIRS ahead of
+    // spark.local.dir; the same order is kept here.
+    val scratchRoot = java.nio.file.Paths.get(sys.env.get("SPARK_LOCAL_DIRS")
+      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir"))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
       .split(",").head)
     java.nio.file.Files.createDirectories(scratchRoot)
     // FileStreamSource wants a DIRECTORY; the testdata table is one parquet

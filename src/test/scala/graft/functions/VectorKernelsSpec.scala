@@ -266,6 +266,24 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
     assert(got.length == dim && got.forall(_.isNaN))
   }
 
+  test("WeightedAvgExpr rejects a float weight or an array<float> vec at analysis") {
+    def nbOf(w: DataType, vecElem: DataType) = StructType(Seq(StructField("nb",
+      ArrayType(StructType(Seq(StructField("dst", LongType), StructField("w", w),
+        StructField("vec", ArrayType(vecElem))))))))
+    def analyze(schema: StructType, row: Row) =
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema)
+        .select(VectorKernels.weightedVecAvg(col("nb"), 2)).collect()
+    Seq(
+      nbOf(FloatType, DoubleType) -> Row(Seq(Row(1L, 0.5f, Seq(1.0, 2.0)))),
+      nbOf(DoubleType, FloatType) -> Row(Seq(Row(1L, 0.5, Seq(1.0f, 2.0f))))).foreach {
+      case (schema, row) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](analyze(schema, row))
+        assert(e.getMessage.contains("weighted_vec_avg"), e.getMessage)
+    }
+    assert(analyze(nbOf(DoubleType, DoubleType), Row(Seq(Row(1L, 2.0, Seq(1.0, 2.0)))))
+      .head.getSeq[Double](0) == Seq(1.0, 2.0))
+  }
+
   test("kernels run inside WholeStageCodegen (no BatchEvalPython/ScalaUDF, no CodegenFallback wrappers)") {
     val (e, en) = entries(1, 6)
     val schema = StructType(Seq(

@@ -41,9 +41,25 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       .map(_.mkString(" ")).get
     val far = (200 to 260).map(i => s"other$i").mkString(" ")
     assert(ham(Dedup.simhashScalar(far.split(" ").toSeq), h0) > 3)
-    val pairs = Dedup.simhashNearDups(docsDf(Seq(1L -> base, 2L -> near, 3L -> far)), maxHamming = 3)
+    val pairs = Dedup.simhashNearDups(docsDf(Seq(1L -> base, 2L -> near, 3L -> far)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))
+  }
+
+  test("simhash LSH equals the all-pairs Hamming ≤ 3 set on real sf0.01 docs") {
+    // 4 × 16-bit bands: ≤ 3 differing bits leave one band intact, so when no
+    // bucket reaches the cap the banding is exact, not just high-recall
+    val d = graft.Tables.documents(spark, "/root/testdata/sf0.01")
+    val sims = d.select(col("doc_id"), col("text")).collect()
+      .map(r => r.getLong(0) -> Dedup.simhashScalar(Dedup.tokensOf(r.getString(1)).toSeq))
+    val expected = (for {
+      (a, ha) <- sims; (b, hb) <- sims if a < b
+      h = java.lang.Long.bitCount(ha ^ hb) if h <= 3
+    } yield (a, b, h)).toSet
+    val got = Dedup.simhashNearDups(d)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(expected.nonEmpty)
+    assert(got == expected, s"missing ${(expected -- got).take(5)}, extra ${(got -- expected).take(5)}")
   }
 
   test("ngram jaccard finds shifted near-duplicate text") {
@@ -190,6 +206,27 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(pairs == Set((4L, 5L)))
     val dropped = Dedup.droppedBuckets(sigs, 2).collect()
     assert(dropped.length == 1 && dropped(0).getAs[Long]("bucket_sz") == 3L)
+
+    // the one cap form serves every band shape; each is checked against a
+    // driver-side group → drop over cap → enumerate reference
+    def reference[K](rows: Seq[(Long, Int, K)], cap: Int): Set[(Long, Long)] =
+      rows.groupBy(r => (r._2, r._3)).values.filter(_.size <= cap)
+        .flatMap(b => for (x <- b; y <- b if x._1 < y._1) yield (x._1, y._1)).toSet
+    def generated(df: org.apache.spark.sql.DataFrame, cap: Int): Set[(Long, Long)] =
+      Dedup.candidatePairs(df.toDF("doc_id", "band_id", "band_hash"), cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // array<long> band keys, as the minhash and ngram bands emit
+    val arrayRows = Seq(
+      (1L, 0, Seq(1L, 2L)), (2L, 0, Seq(1L, 2L)), (3L, 0, Seq(1L, 2L)), // hot
+      (4L, 0, Seq(2L, 1L)), (5L, 0, Seq(2L, 1L)), (1L, 1, Seq(1L, 2L)), (3L, 1, Seq(1L, 2L)))
+    assert(reference(arrayRows, 2) == Set((4L, 5L), (1L, 3L)))
+    assert(generated(arrayRows.toDF(), 2) == reference(arrayRows, 2))
+    // a low-cardinality long domain with several hot buckets, as the
+    // embedding sign bits at few planes: 5 of 9 buckets exceed the cap
+    val lowCard = for (id <- 0L until 60L; t <- 0 until 3) yield (id, t, (id * id + t) % (4 + 2 * t))
+    assert(Dedup.droppedBuckets(lowCard.toDF("doc_id", "band_id", "band_hash"), 15).count() == 5)
+    assert(reference(lowCard, 15).nonEmpty)
+    assert(generated(lowCard.toDF(), 15) == reference(lowCard, 15))
   }
 
   test("dedup defaults drop no buckets on the real corpus (cap is headroom)") {
@@ -265,6 +302,13 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(f(0) == 1.0f && f(1) == 0.0f && f(2) == 0.0f)
     (3 to 6).foreach(i => assert(f(i) == 85f / 255f))
     assert(f(7) == 1.0f)
+  }
+
+  test("multimodal: a truncated PNG throws and leaves the thread's reader reusable") {
+    val png = Multimodal.pngBytes(11L, 8, 8)
+    val before = Multimodal.decodeImage(png).toSeq
+    intercept[Exception](Multimodal.decodeImage(png.take(png.length / 2)))
+    assert(Multimodal.decodeImage(png).toSeq == before)
   }
 
   test("multimodal: planted constant-amplitude WAV decodes to exact RMS") {
