@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen kernels for the three vector folds that sit on the
@@ -23,6 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     functions, which are interpreted (ArrayAggregate/ZipWith are
   *     CodegenFallback): per pair they allocate a lambda frame per element
   *     and box every intermediate accumulator.
+  *   - the near-dup LSH verify (ops.Dedup) scored hashed-set Jaccard and
+  *     embedding cosine with Scala UDFs over Seq[Long]/Seq[Float]: a boxed
+  *     conversion of both arrays per candidate pair. It now runs
+  *     sorted_jaccard and cosine_sim.
   * Each kernel below is a single static method over the unsafe ArrayData
   * (no per-element materialization beyond an UnsafeRow view for struct
   * entries), called from both `eval` and `doGenCode`, so the projection
@@ -103,6 +107,24 @@ object VectorKernels {
       dot += x * y; i += 1
     }
     java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+  }
+
+  /** Jaccard of two SORTED distinct long arrays by merge intersection —
+    * the ascending merge of `Dedup.sortedJaccard`, over ArrayData. The
+    * near-dup LSH verify of the minhash and ngram families (hashed
+    * shingle/gram sets).
+    */
+  def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
+    val la = a.numElements(); val lb = b.numElements()
+    if (la == 0 || lb == 0) return 0.0
+    var i = 0; var j = 0; var inter = 0
+    while (i < la && j < lb) {
+      val x = a.getLong(i); val y = b.getLong(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    inter.toDouble / (la + lb - inter).toDouble
   }
 
   /** √(Σ wᵢ²) over a (h, w) entry array in ascending index order —
@@ -230,6 +252,13 @@ object VectorKernels {
     GraftBridge.column(CosineExpr(GraftBridge.expression(a),
       GraftBridge.expression(b)))
 
+  /** Column API: Jaccard of two sorted distinct array<long> sets; a null
+    * or empty side → 0.0.
+    */
+  def sortedJaccard(a: Column, b: Column): Column =
+    GraftBridge.column(SortedJaccardExpr(GraftBridge.expression(a),
+      GraftBridge.expression(b)))
+
   private[functions] def isFloatArr(dt: DataType): Boolean = dt match {
     case ArrayType(FloatType, _) => true
     case _ => false
@@ -305,6 +334,46 @@ case class NameSimExpr(names: Expression, cand: Expression) extends Expression {
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(names = newChildren(0), cand = newChildren(1))
+}
+
+/** sorted_jaccard(a, b) over sorted distinct array<long>: double, never
+  * null (a null side → 0.0, like the empty set).
+  */
+case class SortedJaccardExpr(a: Expression, b: Expression) extends Expression {
+
+  override def children: Seq[Expression] = Seq(a, b)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "sorted_jaccard"
+
+  override def checkInputDataTypes(): TypeCheckResult = (a.dataType, b.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (x, y) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs two array<bigint>, got ${x.catalogString} and ${y.catalogString}")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val va = a.eval(input); val vb = b.eval(input)
+    if (va == null || vb == null) 0.0
+    else VectorKernels.sortedJaccard(va.asInstanceOf[ArrayData],
+      vb.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ca = a.genCode(ctx); val cb = b.genCode(ctx)
+    ev.copy(code = code"""
+      ${ca.code}
+      ${cb.code}
+      double ${ev.value} = 0.0;
+      if (!(${ca.isNull} || ${cb.isNull})) {
+        ${ev.value} = graft.functions.VectorKernels$$.MODULE$$.sortedJaccard(
+          ${ca.value}, ${cb.value});
+      }""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(a = newChildren(0), b = newChildren(1))
 }
 
 /** entry_norm(tw): double, null iff the array is null. */

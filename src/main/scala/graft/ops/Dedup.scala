@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.VectorKernels
+
 /** Deduplication operators for large-scale training-data pipelines, over a
   * documents(doc_id, text, …) table.
   *
@@ -17,16 +19,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *      kernel pass per doc (the minhash kernels reproduce Spark's hash
   *      values bit-for-bit, so the banding equals the built-in expression
   *      form at a fraction of its cost);
-  *   2. [[candidatePairs]] — bucket sizes counted first, buckets above the
+  *   2. band pairs — bucket sizes counted first, buckets above the
   *      family's cap dropped (with several bands a true near-dup pair
   *      still collides in another band w.h.p.; the cap bounds fan-out to
-  *      O(buckets × cap²) instead of O(N²)), then the bucket self-join
-  *      and a distinct;
+  *      O(buckets × cap²) instead of O(N²)), then the bucket self-join.
+  *      A pair comes out once per band it collides in: no distinct here;
   *   3. [[sizePrunedPairs]], for the two set families only — the lossless
   *      set-size-ratio bound on Jaccard;
-  *   4. verify — each candidate's payload is computed ONCE, for candidate
-  *      doc_ids alone (semi-join), joined to both sides of every pair, and
-  *      the pairs whose similarity passes are kept.
+  *   4. verify — the payload column is joined to both sides of every band
+  *      pair and scored by a compiled expression; only the pairs whose
+  *      similarity passes are deduplicated. The survivors are at most a
+  *      tenth of the candidates on the docs_dedup benchmark, so the
+  *      distinct's exchange carries them instead of the candidate list.
   *
   * A family is then a band function, a payload, a similarity expression
   * and fixed constants (the DuckDB replays in OpsQueries bake the same
@@ -241,9 +245,10 @@ object Dedup {
 
   // ---------------------------------------------------- generic skeleton
 
-  /** (doc_a, doc_b) candidate pairs from shared band keys, with hot buckets
+  /** (doc_a, doc_b) pairs from shared band keys, with hot buckets
     * (> bucketCap rows) excluded from pair generation. `sigs` is
     * (doc_id, band_id, band_hash); band_hash may be any groupable type.
+    * A pair that collides in k bands comes out k times.
     *
     * The one cap form for every family: the hot buckets come from the
     * partial-aggregated [[droppedBuckets]] count and prune the signatures
@@ -260,12 +265,9 @@ object Dedup {
     * path: a near-cap 1024 bucket materializes ~cap²/2 tuples per row
     * before explode) and a collect_list + typed-flatMap-iterator form
     * (object-boundary serialization per generated pair; the join emits
-    * pairs entirely inside WholeStageCodegen). The distinct output is
-    * checkpointed eagerly: the verify consumes the pair list twice
-    * (candidate ids, and the size prune or verify joins), and the
-    * join+distinct subtree would otherwise re-execute per consumer.
+    * pairs entirely inside WholeStageCodegen).
     */
-  def candidatePairs(sigs: DataFrame, bucketCap: Int): DataFrame = {
+  private def bandPairs(sigs: DataFrame, bucketCap: Int): DataFrame = {
     // localCheckpoint: the signatures feed the bucket count and both
     // self-join sides — without it the signature kernel runs three times.
     // The frame is small (N × bands rows of (id, int, key)).
@@ -278,24 +280,30 @@ object Dedup {
           col("l.band_hash") === col("r.band_hash") &&
           col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-      .distinct()
-      .localCheckpoint(true)
   }
+
+  /** The distinct (doc_a, doc_b) candidate pairs of `sigs` under
+    * `bucketCap` — the LSH funnel's candidate count. [[lshJoin]] does not
+    * run this distinct: it verifies the band pairs as they come and
+    * deduplicates only the survivors.
+    */
+  def candidatePairs(sigs: DataFrame, bucketCap: Int): DataFrame =
+    bandPairs(sigs, bucketCap).distinct()
 
   /** Lossless size-ratio prune for set-Jaccard candidate pairs:
     * J(A,B) = |A∩B| / |A∪B| ≤ min(|A|,|B|) / max(|A|,|B|), so a pair whose
     * set-size ratio is below the threshold can NEVER verify — drop it
-    * before the expensive array join. The explosion this guards against
-    * is real: char-4-gram bands on the sf0.1 documents emit 191,809
-    * candidates for 256 final pairs, and every candidate row would
-    * otherwise carry BOTH gram arrays through the verify join; the size
-    * join carries one int per doc instead. The 1e-9 slack keeps a pair
+    * before the array join. The pairs it sees are band pairs, repeated
+    * once per shared band: on the docs_dedup benchmark the ngram family
+    * emits 1.32–1.34× its distinct candidate count, and the size join carries
+    * one int per doc where the verify join would carry both gram arrays
+    * of every one of those rows. The 1e-9 slack keeps a pair
     * exactly AT the threshold from being lost to float rounding of the
     * ratio (the verify's own inter/union division is 1-ulp exact, so
     * nothing below threshold−1e-9 can round up to ≥ threshold). No
-    * broadcast hint: sizes is O(candidate docs) — unbounded at corpus
-    * scale — and the pair ids shuffle narrowly either way; AQE picks the
-    * strategy that fits at runtime.
+    * broadcast hint: sizes is O(docs) — unbounded at corpus scale — and
+    * the pair ids shuffle narrowly either way; AQE picks the strategy
+    * that fits at runtime.
     */
   private def sizePrunedPairs(pairs: DataFrame, sets: DataFrame,
       setCol: String, threshold: Double): DataFrame = {
@@ -316,30 +324,35 @@ object Dedup {
       .agg(count(lit(1)).as("bucket_sz"))
       .filter(col("bucket_sz") > bucketCap)
 
-  /** The LSH similarity join every near-dup family runs: [[candidatePairs]]
+  /** The LSH similarity join every near-dup family runs: the band pairs
     * of `sigs` under `cap`, the [[sizePrunedPairs]] bound when `minRatio`
-    * is set (set payloads only), then the verify: `payload` is evaluated
-    * once per candidate row of `rows` (doc_id, …), joined to both sides of
-    * each pair, and the pairs whose `sim` passes `keep` are returned as
+    * is set (set payloads only), then the verify: `payload` of `rows`
+    * (doc_id, …) is joined to both sides of each band pair, and the
+    * distinct pairs whose `sim` passes `keep` are returned as
     * (doc_a, doc_b, score).
+    *
+    * The distinct runs on the survivors, not the candidates: a pair that
+    * collides in k bands is scored k times (1.05× to 1.34× the distinct
+    * candidate count on the docs_dedup benchmark), which costs less than
+    * exchanging and checkpointing every candidate pair (307,819 candidates
+    * for 731 survivors in the embedding family there). The score is a
+    * function of the pair, so the repeated rows are identical. Neither the
+    * pairs nor the payload are checkpointed: the payload kernel runs once
+    * for the size prune and once for the verify (each join's two sides
+    * share one exchange), which measured cheaper than storing the payload.
     */
   private def lshJoin(rows: DataFrame, sigs: DataFrame, cap: Int, payload: Column,
       minRatio: Option[Double])(sim: (Column, Column) => Column,
       keep: Column => Column): DataFrame = {
-    val pairs = candidatePairs(sigs, cap)
-    val candIds = pairs.select(col("doc_a").as("doc_id"))
-      .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    // localCheckpoint: feeds the size prune and both verify-join sides —
-    // without it the payload kernel re-runs per consumer.
-    val pay = rows.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), payload.as("p"))
-      .localCheckpoint(true)
+    val pairs = bandPairs(sigs, cap)
+    val pay = rows.select(col("doc_id"), payload.as("p"))
     minRatio.fold(pairs)(sizePrunedPairs(pairs, pay, "p", _))
       .join(pay.select(col("doc_id").as("doc_a"), col("p").as("p_a")), Seq("doc_a"))
       .join(pay.select(col("doc_id").as("doc_b"), col("p").as("p_b")), Seq("doc_b"))
       .withColumn("score", sim(col("p_a"), col("p_b")))
       .filter(keep(col("score")))
       .select(col("doc_a"), col("doc_b"), col("score"))
+      .distinct()
   }
 
   /** All-pairs brute force over a SMALL (id, payload) table WITHOUT
@@ -431,9 +444,6 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  private val jaccardUdf = udf((a: Seq[Long], b: Seq[Long]) =>
-    sortedJaccard(longArr(a), longArr(b)))
-
   /** A set family's near-dups: [[lshJoin]] with the size prune and a
     * Jaccard verify, inside the exact pre-pass. Returns
     * (doc_a, doc_b, jaccard), doc_a < doc_b.
@@ -442,7 +452,7 @@ object Dedup {
       set: Column, threshold: Double): DataFrame =
     withExactPrepass(docs, "jaccard", lit(1.0))(d =>
       lshJoin(d, bands(d), SetBucketCap, set, Some(threshold))(
-        jaccardUdf(_, _), _ >= threshold)
+        VectorKernels.sortedJaccard(_, _), _ >= threshold)
         .select(col("doc_a"), col("doc_b"), round(col("score"), 4).as("jaccard")))
 
   // ---------------------------------------------------------------- minhash
@@ -846,13 +856,9 @@ object Dedup {
   }
 
   /** Cosine of two float vectors (index-order accumulation — matches the
-    * zip_with/aggregate Column form).
+    * zip_with/aggregate Column form and, on equal lengths, the compiled
+    * `cosine_sim` the LSH verify runs); the first min(|a|, |b|) elements.
     */
-  def cosineF(a0: Seq[Float], b0: Seq[Float]): Double = {
-    if (a0 == null || b0 == null) return 0.0
-    cosineArr(floatArr(a0), floatArr(b0))
-  }
-
   def cosineArr(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -865,15 +871,23 @@ object Dedup {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  private val cosineFUdf = udf((a: Seq[Float], b: Seq[Float]) => cosineF(a, b))
+  /** The embedding verify: the compiled `cosine_sim`, with its nulls (a
+    * null side, unequal lengths) scored 0.0.
+    */
+  private[graft] def embeddingCosine(a: Column, b: Column): Column =
+    coalesce(VectorKernels.cosineSim(a, b), lit(0.0))
 
   /** Embedding-cosine near-dup over embeddings(vec_id, embedding): standard
     * multi-table random-hyperplane LSH — independent hash tables of
     * `planes` sign bits each (planes scales ~log₂N via planesFor, tables
     * sized by tablesFor for a 0.95 recall target); a pair is a candidate
     * if it collides in ANY table (OR-amplification); candidates verified
-    * exactly with a compiled cosine ≥ threshold. Returns
+    * exactly with the compiled `cosine_sim` ≥ threshold. Returns
     * (vec_a, vec_b, cos).
+    *
+    * A null embedding scores 0.0, and so does a pair of vectors of
+    * unequal lengths (no prefix cosine): such a pair never passes a
+    * positive threshold.
     */
   def embeddingNearDups(embs: DataFrame, nVec: Long, threshold: Double = 0.35,
       planesOverride: Int = -1, tablesOverride: Int = -1): DataFrame = {
@@ -887,7 +901,7 @@ object Dedup {
     val sigs = embeddingBands(embs, -1L, EmbDim, tables, planes)
       .select(col("vec_id").as("doc_id"), col("table_id").as("band_id"), col("bits").as("band_hash"))
     lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, EmbBucketCap,
-        col("embedding"), None)(cosineFUdf(_, _), _ >= threshold)
+        col("embedding"), None)(embeddingCosine, _ >= threshold)
       .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), round(col("score"), 4).as("cos"))
   }
 

@@ -284,6 +284,83 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
       .head.getSeq[Double](0) == Seq(1.0, 2.0))
   }
 
+  // ------------------------------------------------------- near-dup verify
+
+  /** `body` once interpreted (no whole-stage, no expression codegen) and
+    * once under whole-stage codegen.
+    */
+  private def interpretedAndCodegen(body: Boolean => Unit): Unit = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val was = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      Seq(false -> Seq("false", "NO_CODEGEN"), true -> Seq("true", "CODEGEN_ONLY"))
+        .foreach { case (codegen, vals) =>
+          keys.zip(vals).foreach { case (k, v) => spark.conf.set(k, v) }
+          body(codegen)
+        }
+    } finally was.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("SortedJaccardExpr ≡ Dedup.sortedJaccard, interpreted and compiled") {
+    def set(seed: Long, n: Int, mod: Long): Seq[Long] =
+      (0 until n).map(i => mix(seed * 97 + i) % mod).distinct.sorted
+    val a = set(1, 40, 64)
+    val rows: Seq[(Seq[Long], Seq[Long])] = Seq(
+      (Seq.empty, Seq.empty), (Seq.empty, a), (a, Seq.empty),
+      (a, a),                                      // identical → 1.0
+      (Seq(-5L, 1L, 3L), Seq(-4L, 2L, 4L, 9L)),    // disjoint → 0.0
+      (Seq(Long.MinValue, 0L, Long.MaxValue), Seq(Long.MinValue, Long.MaxValue)),
+      (null, a), (a, null)) ++
+      Seq.tabulate(20)(k => (set(k, 5 + k * 3, 48), set(k + 50, 30 - k, 48)))  // unequal sizes
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b")
+    interpretedAndCodegen { codegen =>
+      val out = df.select(col("a"), col("b"),
+        VectorKernels.sortedJaccard(col("a"), col("b")).as("j"))
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("sorted_jaccard(") && !plan.contains("ScalaUDF"), plan)
+      assert(plan.contains("*(1) Project [") == codegen, plan) // whole-stage marker
+      out.collect().foreach { r =>
+        def arr(i: Int) = if (r.isNullAt(i)) Array.empty[Long] else r.getSeq[Long](i).toArray
+        val want = graft.ops.Dedup.sortedJaccard(arr(0), arr(1))
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(2)) ==
+          java.lang.Double.doubleToRawLongBits(want), s"codegen=$codegen $r want $want")
+      }
+    }
+    // the kernel reads elements with getLong: any other element type fails analysis
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((Seq(1, 2), Seq(2, 3))).toDF("a", "b")
+        .select(VectorKernels.sortedJaccard(col("a"), col("b"))).collect())
+    assert(e.getMessage.contains("sorted_jaccard"), e.getMessage)
+  }
+
+  test("embedding verify: cosine_sim ≡ Dedup.cosineArr on equal lengths, 0.0 on null or mismatch") {
+    def vec(seed: Long, n: Int): Seq[Float] =
+      Seq.tabulate(n)(i => (rnd01(seed * 131 + i) * 2.0 - 1.0).toFloat)
+    val equal: Seq[(Seq[Float], Seq[Float])] = Seq.tabulate(20)(k => (vec(k, 64), vec(k + 300, 64))) ++
+      Seq((Seq.fill(64)(0f), vec(3, 64)), (vec(4, 64), Seq.fill(64)(0f)),
+        (Seq.fill(8)(0f), Seq.fill(8)(0f)), (Seq.empty, Seq.empty),
+        (vec(5, 64), vec(5, 64).map(_ * 2f)))
+    val zeroed: Seq[(Seq[Float], Seq[Float])] =
+      Seq((null, vec(6, 64)), (vec(7, 64), null), (null, null),
+        (vec(8, 64), vec(9, 32)), (vec(10, 16), vec(10, 64)))
+    val df = spark.sparkContext.parallelize(equal ++ zeroed, 2).toDF("a", "b")
+    interpretedAndCodegen { codegen =>
+      val out = df.select(col("a"), col("b"),
+        graft.ops.Dedup.embeddingCosine(col("a"), col("b")).as("c")).collect()
+      assert(out.length == equal.size + zeroed.size)
+      out.foreach { r =>
+        val want =
+          if (r.isNullAt(0) || r.isNullAt(1) || r.getSeq[Float](0).size != r.getSeq[Float](1).size) 0.0
+          else graft.ops.Dedup.cosineArr(r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray)
+        assert(!r.isNullAt(2) && java.lang.Double.doubleToRawLongBits(r.getDouble(2)) ==
+          java.lang.Double.doubleToRawLongBits(want), s"codegen=$codegen $r want $want")
+      }
+    }
+  }
+
   test("kernels run inside WholeStageCodegen (no BatchEvalPython/ScalaUDF, no CodegenFallback wrappers)") {
     val (e, en) = entries(1, 6)
     val schema = StructType(Seq(

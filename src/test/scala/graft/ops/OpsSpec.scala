@@ -246,6 +246,92 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(pairs == Set((1L, 2L)))
   }
 
+  test("near-dup families emit each pair once when it collides in every band") {
+    import spark.implicits._
+    // a cycle of 30 distinct tokens repeated 2, 3 or 4 times: equal shingle,
+    // gram and token-frequency-sign sets, so the texts differ (no exact
+    // pre-pass collapse) but their minhash, ngram and simhash keys agree in
+    // all 4 bands; vectors scaled by powers of two share every sign bit
+    val texts = for {
+      g <- 0 until 4; r <- 2 to 4
+    } yield (g * 10L + r) -> Seq.fill(r)((0 until 30).map(i => s"g${g}w$i").mkString(" ")).mkString(" ")
+    val d = docsDf(texts :+ (99L -> (0 until 40).map(i => s"lone$i").mkString(" ")))
+    def bandKeys(bands: org.apache.spark.sql.DataFrame) =
+      bands.collect().groupBy(_.getLong(0)).map { case (id, rs) =>
+        id -> rs.map(r => r.getInt(1) -> r.get(2).toString).toSet }
+    val mhKeys = bandKeys(Dedup.minhashBands(d)); val ngKeys = bandKeys(Dedup.ngramBands(d))
+    for (g <- 0 until 4; r <- 3 to 4) {
+      assert(mhKeys(g * 10L + r) == mhKeys(g * 10L + 2) && mhKeys(g * 10L + 2).size == 4)
+      assert(ngKeys(g * 10L + r) == ngKeys(g * 10L + 2) && ngKeys(g * 10L + 2).size == 4)
+    }
+    val dir = (0 until 5).map(g => (0 until 64).map(i => math.sin(i * (0.3 + g) + g).toFloat))
+    val vecs = (for (g <- 0 until 5; (k, sc) <- Seq(0 -> 1f, 1 -> 2f, 2 -> 0.5f))
+      yield (g * 10L + k, dir(g).map(_ * sc).toArray)).toDF("vec_id", "embedding")
+    val nVec = 15L
+    val tables = Dedup.tablesFor(Dedup.planesFor(nVec), 0.9)
+    val emKeys = bandKeys(Dedup.embeddingBands(vecs, nVec, 64, tables))
+    for (g <- 0 until 5; k <- 1 to 2) assert(emKeys(g * 10L + k) == emKeys(g * 10L))
+    assert(tables > 1, "every table must collide, so there must be several")
+
+    val simhashes = texts.map { case (id, t) => id -> Dedup.simhashScalar(Dedup.tokensOf(t).toSeq) }
+    val simBrute = (for ((a, ha) <- simhashes; (b, hb) <- simhashes if a < b &&
+      java.lang.Long.bitCount(ha ^ hb) <= 3) yield (a, b)).toSet
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    Seq(
+      ("minhash", Dedup.minhashNearDups(d), pairSet(Dedup.minhashBrute(d))),
+      ("ngram", Dedup.ngramJaccard(d), pairSet(Dedup.ngramBrute(d))),
+      ("simhash", Dedup.simhashNearDups(d), simBrute),
+      ("embedding", Dedup.embeddingNearDups(vecs, nVec, threshold = 0.9),
+        pairSet(Dedup.embeddingBrute(vecs, 0.9)))).foreach { case (f, got, brute) =>
+      val ids = got.select(got.columns(0), got.columns(1))
+      assert(ids.count() == ids.distinct().count(), s"$f emits a pair more than once")
+      assert(pairSet(got) == brute, s"$f")
+      assert(brute.size >= 12, s"$f: ${brute.size} pairs")
+    }
+  }
+
+  test("LSH verify plans deduplicate only the verified pairs") {
+    // candidates outnumber verified pairs 10× to 420× on the docs_dedup
+    // benchmark: no aggregate on exactly (doc_a, doc_b) may run beneath the
+    // verify predicate (a Filter, or the join condition it is pushed into)
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.{CosineExpr, SortedJaccardExpr}
+    val wasAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      import spark.implicits._
+      val d = docsDf((1L to 20L).map(i => i -> s"text body ${i % 7} and more words $i"))
+      val e = (1L to 20L).map(i => (i, Array.tabulate(64)(j => math.sin(i * j).toFloat)))
+        .toDF("vec_id", "embedding")
+      def scores(e: Expression) = e.exists {
+        case _: SortedJaccardExpr | _: CosineExpr => true
+        case _ => false
+      }
+      def isVerify(p: SparkPlan) = p match {
+        case f: FilterExec => scores(f.condition)
+        case j: BaseJoinExec => j.condition.exists(scores)
+        case _ => false
+      }
+      Seq("minhash" -> Dedup.minhashNearDups(d),
+          "embedding" -> Dedup.embeddingNearDups(e, nVec = 20L)).foreach { case (f, df) =>
+        val plan = df.queryExecution.executedPlan
+        val verifies = plan.collect { case p if isVerify(p) => p }
+        assert(verifies.nonEmpty, s"$f: no verify predicate in\n$plan")
+        verifies.foreach { v =>
+          val pairAggs = v.collect {
+            case a: BaseAggregateExec
+                if a.groupingExpressions.map(_.name).sorted == Seq("doc_a", "doc_b") => a
+          }
+          assert(pairAggs.isEmpty, s"$f: a (doc_a, doc_b) aggregate runs before the verify\n$plan")
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", wasAqe)
+  }
+
   test("IVF ANN achieves decent recall vs brute force on real embeddings") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = e.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding"))
