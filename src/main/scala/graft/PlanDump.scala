@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for named SparkEntry queries to files —
   * the before/after plan evidence for optimization rounds (the judge
   * checks plan claims against these artifacts; guide §1: capture plans
@@ -10,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]"
   * writes <outDir>/<query>_<suffix>.txt per query.
   *
-  * Session configs mirror graft.Bench (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus, AQE on) so the dumped initial plans match what the
-  * bench executes (AQE plans print isFinalPlan=false before execution;
-  * Exchange/join-strategy shape is what matters).
+  * The session is `Scaling.session($SPARK_GRAFT_CPUS)`, whose configs
+  * mirror graft.Bench (local[cpus], shuffle partitions = cpus, AQE on) so
+  * the dumped initial plans match what the bench executes (AQE plans print
+  * isFinalPlan=false before execution; Exchange/join-strategy shape is
+  * what matters).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,18 +21,7 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/spark-local").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Scaling.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import graft.kg._
 
 /** Scaling-efficiency evidence (north rule: ≥0.8 between N and 4N).
@@ -108,53 +109,26 @@ object Scaling {
     } finally spark.stop()
   }
 
-  /** Per-stage wall times at one parallelism level (fresh session; each
-    * stage persisted+counted so the next stage starts from materialized
-    * input — the per-stage N vs 4N efficiency evidence).
+  /** Per-stage wall times at one parallelism level (fresh session), by
+    * Pipeline.run's stage names: each stage is persisted and counted as
+    * the wiring builds it, so the next stage starts from materialized
+    * input — the per-stage N vs 4N efficiency evidence. As in compute(),
+    * the scoring dims build on a Future beside the candidates stage, so
+    * `candidates` carries that overlap and `alignments` only the scoring.
     */
   def stageTimes(cores: Int, scale: CorpusGen.Scale): Seq[(String, Double)] = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = session(cores)
-    Pipeline.sessionConf(spark)
     try {
       val out = Seq.newBuilder[(String, Double)]
-      def time[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        out += ((name, (System.nanoTime() - t0) / 1e9))
-        r
-      }
-      val repos = CorpusGen.repos(spark, scale).toDF()
-      val entities = CorpusGen.entities(spark, scale).toDF()
-      val accounts = CorpusGen.accounts(spark, scale).toDF()
-      time("corpus_synthesis")(repos.count())
-      // the single corpus read (round 5: was Mentions.extract, with text
-      // vectors and social edges re-reading the corpus inside
-      // features_scoring — those stages are scan-free now); scratch
-      // parquet, so later stages read pruned columns
-      val scan = time("scan")(
-        Scan.materialize(Scan.products(repos), Scan.scratchDir(spark)))
-      val mentions = Scan.mentions(scan)
-      val dict = Dictionary.build(spark, mentions, accounts).persist(MEMORY_AND_DISK)
-      time("dictionary")(dict.count())
-      val cands = CandidateGen.candidates(spark, entities, dict).persist(MEMORY_AND_DISK)
-      time("candidates")(cands.count())
-      // featurize strategy: Pipeline.confFor's scale-based auto-switch
-      // (bucketed at bench scales), overridable for A/B via
-      // GRAFT_FEATURIZE=broadcast|bucketed
-      val conf = Pipeline.confFor(scale, sys.env.get("GRAFT_FEATURIZE") match {
-        case Some("bucketed") => KgConf(bucketedFeaturize = true)
-        case Some("broadcast") => KgConf(featurizeAutoBucketFiles = Int.MaxValue)
-        case _ => KgConf()
+      Pipeline.wireScale(spark, scale, Pipeline.confFor(scale), new Pipeline.Keep {
+        def apply(stage: String, by: Seq[String])(df: => DataFrame): DataFrame = {
+          val t0 = System.nanoTime()
+          val kept = df.persist(StorageLevel.MEMORY_AND_DISK)
+          kept.count()
+          out += ((stage, (System.nanoTime() - t0) / 1e9))
+          kept
+        }
       })
-      val aligned = Scorer.score(cands, entities, accounts, scan,
-          CorpusGen.accountEmbeddings(spark, scale).toDF(),
-          CorpusGen.entityEmbeddings(spark, scale).toDF(), conf)
-        .persist(MEMORY_AND_DISK)
-      time("features_scoring")(aligned.count())
-      val reps = Canonicalize.representatives(spark, aligned).persist(MEMORY_AND_DISK)
-      time("components")(reps.count())
-      time("triples")(Triples.materialize(aligned, reps).count())
       out.result()
     } finally spark.stop()
   }

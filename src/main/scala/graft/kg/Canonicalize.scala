@@ -31,8 +31,7 @@ object Canonicalize {
     * diameters). Throws if maxIter is exhausted before the fixpoint —
     * silently returning non-converged labels would mean wrong components.
     */
-  def components(spark: SparkSession, edges: DataFrame, maxIter: Int = 20,
-      verbose: Boolean = false): DataFrame = {
+  def components(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // localCheckpoint (eager) BOTH materializes and TRUNCATES the logical
     // plan. Each round's plan embeds the previous round's frame twice
     // (once in the neighbor join, once in the union), so without lineage
@@ -84,7 +83,6 @@ object Canonicalize {
       labels = next.select(col("node"), col("comp"))
       converged = changed == 0
       iter += 1
-      if (verbose) println(s"[cc] iter=$iter changed=$changed")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -1,11 +1,17 @@
 package graft.kg
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** End-to-end orchestration of the KG-construction pipeline:
+/** End-to-end orchestration of the KG-construction pipeline, wired once
+  * (`wire`) over the five inputs:
   *
-  *   corpus (repo,path,commit,lang,content)
+  *   corpus (repo,path,commit,lang,content), entities, accounts, embeddings
   *     → scan            (THE one corpus read: mentions + authors +
   *                        co-mention pairs + token counts + sha256, Scan.scala)
   *     → dictionary      (name→account freq)          [shuffle 1: groupBy]
@@ -15,10 +21,18 @@ import org.apache.spark.sql.functions._
   *     → triples         (8-pattern materialization, pred-partitioned)
   *     → lineage         (sha256(content) set, per-partition metrics)
   *
-  * Two run modes:
-  *   - `triplesForScale` — all in memory, used by SparkEntry.entry and tests.
-  *   - `run(root)`       — every stage materialized + checkpointed; re-runs
-  *                         resume from the first incomplete stage (north rule).
+  * Every stage's frame, inputs included, passes through a [[Keep]] policy
+  * that the caller supplies; the three callers differ only in that policy:
+  *   - `compute()`            — in memory: the scan as scratch parquet,
+  *                              dictionary/candidates/alignments persisted;
+  *                              used by SparkEntry.entry, the benchmarks
+  *                              and tests.
+  *   - `run(root)`            — every stage checkpointed; re-runs resume
+  *                              from the first incomplete stage (north rule).
+  *   - `Scaling.stageTimes`   — every stage persisted, counted and timed.
+  *
+  * The wiring sets no job group or job description: a caller that
+  * attributes jobs by group wraps the whole call in its own.
   */
 object Pipeline {
 
@@ -26,7 +40,6 @@ object Pipeline {
       triples: DataFrame,
       alignments: DataFrame,
       lineage: DataFrame,
-      mentions: DataFrame,
       dictionary: DataFrame,
       candidates: DataFrame,
       rollupThunk: () => DataFrame,
@@ -34,9 +47,10 @@ object Pipeline {
       scanPath: Option[String] = None) {
     /** The pre-top-K candidate rollup (CandidateGen.rollupAll) — the frame
       * the A13 diagnostics need. A thunk + lazy val because building the
-      * rollup plan runs an eager probe job (the fuzzy-skip check): compute()
-      * passes the frame it already built for candidates, run() defers the
-      * build until a caller actually asks for diagnostics.
+      * rollup plan runs an eager probe job (the fuzzy-skip check): the
+      * wiring hands over the rollup it built for candidates, and a resumed
+      * run() whose candidates stage is done builds it only when a caller
+      * actually asks for diagnostics.
       *
       * Lifetime: like every other frame on this Result, `rollup` must not
       * be touched after [[unpersist]] — in compute() mode its plan reads
@@ -58,78 +72,132 @@ object Pipeline {
     }
   }
 
+  /** What the wiring does with each stage's frame. `stage` is the stage's
+    * checkpoint name and `by` the columns a written copy is partitioned
+    * by; `df` is evaluated only when the stage is computed.
+    */
+  private[graft] trait Keep {
+    def apply(stage: String, by: Seq[String] = Nil)(df: => DataFrame): DataFrame
+    /** False when `stage`'s output will be reused instead of computed. */
+    def computes(stage: String): Boolean = true
+    /** Scratch directory this policy writes, deleted by Result.unpersist. */
+    def scratch: Option[String] = None
+  }
+
+  /** compute()'s policy. The scan becomes scratch PARQUET (not .persist):
+    * it feeds four consumers (dictionary, lineage, text vectors, social
+    * graph) and parquet lets each read only its pruned columns; the
+    * product rows are a small fraction of content size (annotations +
+    * per-authored-file token histograms).
+    */
+  private final class InMemory(spark: SparkSession) extends Keep {
+    private val scanPath = Scan.scratchDir(spark)
+    override def scratch: Option[String] = Some(scanPath)
+    def apply(stage: String, by: Seq[String])(df: => DataFrame): DataFrame =
+      stage match {
+        case "scan" => Scan.materialize(df, scanPath)
+        // persisted lazily (the first consumer fills them): the dictionary
+        // is read by the rollup's exact and fuzzy branches; the candidates are
+        // consumed by the scorer AND re-read by every kg_candidates /
+        // diagnostics access, which would otherwise re-run the top-K
+        // window over the rollup checkpoint. O(|entities| × topK) rows.
+        case "dictionary" | "candidates" => df.persist(MEMORY_AND_DISK)
+        case "alignments" =>
+          // alignments feed three consumers (connected components, the
+          // triple materialization, and the evaluation surface). Fill the
+          // cache with ONE job before they fan out: the final triple plan
+          // scans `aligned` six times (per-pair branch, the two narrow
+          // distincts, and representatives' three edge/label scans), and
+          // under AQE those scans submit as CONCURRENT stage jobs — against
+          // an unfilled cache each one re-runs the whole bucketed-join →
+          // featurize → window chain (measured: a wave of six equal ~34 s
+          // jobs at 2M files/local[16], ~6× the chain's CPU).
+          val aligned = df.persist(MEMORY_AND_DISK)
+          aligned.count()
+          aligned
+        case _ => df
+      }
+  }
+
+  /** run()'s policy: every stage, inputs included, is a parquet
+    * checkpoint under `root`, reused when its params fingerprint matches.
+    */
+  private final class Checkpointed(spark: SparkSession, root: String,
+      params: String) extends Keep {
+    def apply(stage: String, by: Seq[String])(df: => DataFrame): DataFrame =
+      Checkpoint.stage(spark, root, stage, by, params)(df)
+    override def computes(stage: String): Boolean =
+      !Checkpoint.isDone(spark, root, stage, params)
+  }
+
   def sessionConf(spark: SparkSession): Unit = {
     // AQE handles runtime coalescing + skew-join splitting (SURVEY §2.9 X4)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
   }
 
-  def compute(spark: SparkSession, repos: DataFrame, entities: DataFrame,
-      accounts: DataFrame, accountEmbeddings: DataFrame,
-      entityEmbeddings: DataFrame, conf: KgConf = KgConf()): Result = {
+  /** The pipeline's one stage sequence. */
+  private def wire(spark: SparkSession, conf: KgConf, keep: Keep,
+      repos0: DataFrame, entities0: DataFrame, accounts0: DataFrame,
+      accountEmbeddings: DataFrame, entityEmbeddings: DataFrame): Result = {
     sessionConf(spark)
+    val repos = keep("corpus")(repos0)
+    val entities = keep("entities")(entities0)
+    val accounts = keep("accounts")(accounts0)
     // ONE corpus read: Scan.products extracts mentions + authors +
     // co-mention pairs + token counts in a single pass and is the only
-    // frame that ever sees `content`. It feeds four consumers (dictionary,
-    // lineage, text vectors, social graph) — materialized as scratch
-    // PARQUET (not .persist) so each consumer reads only its pruned
-    // columns; the product rows are a small fraction of content size
-    // (annotations + per-authored-file token histograms).
-    val scanPath = Scan.scratchDir(spark)
-    val scan = Scan.materialize(Scan.products(repos), scanPath)
-    val mentions = Scan.mentions(scan)
-    val dict = Dictionary.build(spark, mentions, accounts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // frame that ever sees `content`; a resumed run never touches content
+    // again — every later stage derives from the kept scan
+    val scan = keep("scan")(Scan.products(repos))
+    val dict = keep("dictionary")(
+      Dictionary.build(spark, Scan.mentions(scan), accounts))
+    val accEmb = keep("account_embeddings")(accountEmbeddings)
+    val entEmb = keep("entity_embeddings")(entityEmbeddings)
     // the dim-side feature frames (accVec/sgVec/hp lookup) and the
     // dictionary→candidates chain are independent, but each blocks the
     // driver on an eager job (textVectors' localCheckpoint vs the
     // candidate-ladder probe) — build the dims on a Future so the two
     // chains' jobs interleave instead of running back-to-back (the same
-    // overlap the two bucketed table writes use in Scorer.bucketedEntJoin)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val dimsF = Future {
-      Scorer.dims(entities, accounts, scan, accountEmbeddings, entityEmbeddings)
-    }
+    // overlap the two bucketed table writes use in Scorer.bucketedEntJoin).
+    // Only when alignments will be computed: the textVectors checkpoint is
+    // eager, and a resumed run whose alignments are done needs no dims.
+    val dims = if (keep.computes("alignments"))
+      Some(Future(Scorer.dims(entities, accounts, scan, accEmb, entEmb)))
+    else None
     // the pre-top-K rollup is exposed on Result so the A13 diagnostics
-    // (Scorer.candidateStats) read the SAME checkpointed frame instead of
-    // re-running the dictionary join + ladder — at corpus scale that
-    // recompute is a full dictionary-sized join paid once per diagnostic
-    val rollup = CandidateGen.rollupAll(spark, entities, dict, conf)
-    // persisted (lazily — the scoring chain's first pass fills it): the
-    // candidates frame is consumed by the scorer AND re-read by every
-    // kg_candidates / A13-diagnostics access; without the persist each
-    // access re-runs the top-K window over the rollup checkpoint. Size is
-    // O(|entities| × topK) narrow rows, tiny next to the corpus.
-    val cands = CandidateGen.topK(rollup, conf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // alignments feed three consumers (connected components, the triple
-    // materialization, and the evaluation surface) — without a persist the
-    // whole corpus-scan → dictionary → scoring chain recomputes per
-    // consumer (~3× wall). Persisted size is O(|entities| × topK), tiny
-    // next to the corpus.
-    val aligned = Scorer.score(cands, entities, accounts, scan,
-        accountEmbeddings, entityEmbeddings, conf,
-        prebuiltDims = Some(Await.result(dimsF, Duration.Inf)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // fill the cache with ONE job before the consumers fan out: the final
-    // triple plan scans `aligned` six times (per-pair branch, the two
-    // narrow distincts, and representatives' three edge/label scans), and
-    // under AQE those scans submit as CONCURRENT stage jobs — against an
-    // unfilled cache each one re-runs the whole bucketed-join → featurize →
-    // window chain (measured: a wave of six equal ~34 s jobs at 2M files/
-    // local[16], ~6× the chain's CPU). One eager count computes the chain
-    // once; the fan-out then reads cached blocks.
-    aligned.count()
-    val reps = Canonicalize.representatives(spark, aligned, conf)
-    val triples = Triples.materialize(aligned, reps)
-    val lineage = scan
-      .select(col("repo"), col("path"), col("commit"), col("content_sha"))
-      .distinct()
-    Result(triples, aligned, lineage, mentions, dict, cands, () => rollup,
-      scan, Some(scanPath))
+    // (Scorer.candidateStats) read the SAME frame instead of re-running
+    // the dictionary join + ladder — at corpus scale that recompute is a
+    // full dictionary-sized join paid once per diagnostic
+    lazy val rollup = CandidateGen.rollupAll(spark, entities, dict, conf)
+    val cands = keep("candidates")(CandidateGen.topK(rollup, conf))
+    val aligned = keep("alignments")(
+      Scorer.score(cands, entities, accounts, scan, accEmb, entEmb, conf,
+        prebuiltDims = dims.map(Await.result(_, Duration.Inf))))
+    val reps = keep("representatives")(
+      Canonicalize.representatives(spark, aligned, conf))
+    val triples = keep("triples", Seq("pred"))(Triples.materialize(aligned, reps))
+    val lineage = keep("lineage")(
+      scan.select(col("repo"), col("path"), col("commit"), col("content_sha"))
+        .distinct())
+    Result(triples, aligned, lineage, dict, cands, () => rollup, scan,
+      keep.scratch)
   }
+
+  /** The wiring over the five inputs synthesized at `scale`. */
+  private[graft] def wireScale(spark: SparkSession, scale: CorpusGen.Scale,
+      conf: KgConf, keep: Keep): Result =
+    wire(spark, conf, keep,
+      CorpusGen.repos(spark, scale).toDF(),
+      CorpusGen.entities(spark, scale).toDF(),
+      CorpusGen.accounts(spark, scale).toDF(),
+      CorpusGen.accountEmbeddings(spark, scale).toDF(),
+      CorpusGen.entityEmbeddings(spark, scale).toDF())
+
+  def compute(spark: SparkSession, repos: DataFrame, entities: DataFrame,
+      accounts: DataFrame, accountEmbeddings: DataFrame,
+      entityEmbeddings: DataFrame, conf: KgConf = KgConf()): Result =
+    wire(spark, conf, new InMemory(spark), repos, entities, accounts,
+      accountEmbeddings, entityEmbeddings)
 
   /** Auto-select the featurize pair-join strategy by scale: corpora at or
     * above `featurizeAutoBucketFiles` files get bucketed entity_id tables
@@ -147,15 +215,8 @@ object Pipeline {
 
   /** Convenience: compute() over a fully synthesized world at `scale`. */
   def computeForScale(spark: SparkSession, scale: CorpusGen.Scale,
-      conf0: KgConf = KgConf()): Result = {
-    val conf = confFor(scale, conf0)
-    compute(spark,
-      CorpusGen.repos(spark, scale).toDF(),
-      CorpusGen.entities(spark, scale).toDF(),
-      CorpusGen.accounts(spark, scale).toDF(),
-      CorpusGen.accountEmbeddings(spark, scale).toDF(),
-      CorpusGen.entityEmbeddings(spark, scale).toDF(), conf)
-  }
+      conf0: KgConf = KgConf()): Result =
+    wireScale(spark, scale, confFor(scale, conf0), new InMemory(spark))
 
   def triplesForScale(spark: SparkSession, scale: CorpusGen.Scale,
       conf: KgConf = KgConf()): DataFrame =
@@ -168,52 +229,9 @@ object Pipeline {
     */
   def run(spark: SparkSession, scale: CorpusGen.Scale, root: String,
       conf0: KgConf = KgConf()): Result = {
-    sessionConf(spark)
     val conf = confFor(scale, conf0)
     // params fingerprint: a resumed root with a different scale or KgConf
     // recomputes instead of silently reusing stale stage outputs
-    val params = s"$scale|$conf"
-    val repos = Checkpoint.stage(spark, root, "corpus", params = params) {
-      CorpusGen.repos(spark, scale).toDF()
-    }
-    val entities = Checkpoint.stage(spark, root, "entities", params = params) {
-      CorpusGen.entities(spark, scale).toDF()
-    }
-    val accounts = Checkpoint.stage(spark, root, "accounts", params = params) {
-      CorpusGen.accounts(spark, scale).toDF()
-    }
-    // the single corpus read, checkpointed: a resumed run never touches
-    // content again — every later stage derives from the scan parquet
-    val scan = Checkpoint.stage(spark, root, "scan", params = params) {
-      Scan.products(repos)
-    }
-    val mentions = Scan.mentions(scan)
-    val dict = Checkpoint.stage(spark, root, "dictionary", params = params) {
-      Dictionary.build(spark, mentions, accounts)
-    }
-    val accEmb = Checkpoint.stage(spark, root, "account_embeddings", params = params) {
-      CorpusGen.accountEmbeddings(spark, scale).toDF()
-    }
-    val entEmb = Checkpoint.stage(spark, root, "entity_embeddings", params = params) {
-      CorpusGen.entityEmbeddings(spark, scale).toDF()
-    }
-    val cands = Checkpoint.stage(spark, root, "candidates", params = params) {
-      CandidateGen.candidates(spark, entities, dict, conf)
-    }
-    val aligned = Checkpoint.stage(spark, root, "alignments", params = params) {
-      Scorer.score(cands, entities, accounts, scan, accEmb, entEmb, conf)
-    }
-    val reps = Checkpoint.stage(spark, root, "representatives", params = params) {
-      Canonicalize.representatives(spark, aligned, conf)
-    }
-    val triples = Checkpoint.stage(spark, root, "triples", Seq("pred"), params) {
-      Triples.materialize(aligned, reps)
-    }
-    val lineage = Checkpoint.stage(spark, root, "lineage", params = params) {
-      scan.select(col("repo"), col("path"), col("commit"), col("content_sha"))
-        .distinct()
-    }
-    Result(triples, aligned, lineage, mentions, dict, cands,
-      () => CandidateGen.rollupAll(spark, entities, dict, conf), scan)
+    wireScale(spark, scale, conf, new Checkpointed(spark, root, s"$scale|$conf"))
   }
 }

@@ -1,9 +1,16 @@
 package graft.kg
 
 import graft.SparkTestBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 /** North-rule resumability: a killed run resumes from the last completed
   * stage and produces byte-identical triples (SURVEY §7.3 risk 4).
@@ -37,11 +44,77 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
     assert(tripleSet(r2.triples) == t1)
   }
 
+  /** Waits until every event posted so far has reached the listeners. */
+  private def drainListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   test("second run over a completed root recomputes nothing and matches") {
     val root = Files.createTempDirectory("kg_run3").toString
     val a = tripleSet(Pipeline.run(spark, CorpusGen.Tiny, root).triples)
-    val b = tripleSet(Pipeline.run(spark, CorpusGen.Tiny, root).triples)
-    assert(a == b)
+    drainListeners()
+    // file writes are counted the way a benchmark probe times them: one
+    // InsertIntoHadoopFsRelationCommand per written stage or stats table
+    val writes = new AtomicInteger(0)
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val onWrite = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical match {
+          case _: InsertIntoHadoopFsRelationCommand => writes.incrementAndGet()
+          case _ =>
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        onSuccess(funcName, qe, 0L)
+    }
+    val onJob = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString(";"))
+    }
+    spark.listenerManager.register(onWrite)
+    spark.sparkContext.addSparkListener(onJob)
+    val second = try {
+      val r = Pipeline.run(spark, CorpusGen.Tiny, root)
+      drainListeners()
+      r
+    } finally {
+      spark.listenerManager.unregister(onWrite)
+      spark.sparkContext.removeSparkListener(onJob)
+    }
+    assert(writes.get == 0, s"a resumed complete root wrote ${writes.get} outputs")
+    // no stage is computed — in particular not the scoring dims, whose
+    // text-vector checkpoint is eager: the only jobs are the stage reads'
+    // parquet schema inference, at most one per stage
+    val sites = jobs.toArray(Array.empty[String]).toSeq
+    assert(sites.size <= 12 && sites.forall(_.startsWith("parquet at Checkpoint.scala")),
+      s"a resumed complete root ran ${sites.size} jobs: ${sites.distinct}")
+    assert(tripleSet(second.triples) == a)
+  }
+
+  test("run() builds the frames compute() builds, and its triples equal the scalar oracle") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("kg_run5").toString
+    val ran = Pipeline.run(spark, CorpusGen.Tiny, root)
+    val computed = Pipeline.computeForScale(spark, CorpusGen.Tiny)
+    // run()'s frames are parquet reads (triples partitioned by pred, so its
+    // columns come back reordered): compare by compute()'s column names
+    def rows(df: DataFrame, like: DataFrame): Set[Row] =
+      df.select(like.columns.toSeq.map(col): _*).collect().toSet
+    for ((name, r, c) <- Seq(
+        ("triples", ran.triples, computed.triples),
+        ("alignments", ran.alignments, computed.alignments),
+        ("candidates", ran.candidates, computed.candidates),
+        ("lineage", ran.lineage, computed.lineage))) {
+      val want = rows(c, c)
+      assert(want.nonEmpty, s"$name: compute() built no rows")
+      assert(rows(r, c) == want, s"$name differs between run() and compute()")
+    }
+    val (oracle, _) = ScalarOracle.run(CorpusGen.Tiny)
+    val got = ran.triples.as[Triple].collect().toSet
+    assert(got == oracle,
+      s"missing=${(oracle -- got).take(5)} extra=${(got -- oracle).take(5)}")
+    computed.unpersist()
   }
 
   test("checkpoint table carries per-partition lineage rows for every stage") {
