@@ -13,13 +13,17 @@ import org.apache.spark.sql.SparkSession
   *
   *   - kg_mentions      regexp_extract_all over content (three capture
   *                      groups zipped by ordinal), sha256 invariant
-  *                      (BuildUserIndex.java:221-269 semantics)
+  *                      (BuildUserIndex.java:221-269 semantics) — a
+  *                      cross-engine replay of the pipeline's scan, whose
+  *                      annotation rows the Spark side reads
+  *                      (Scan.mentions over the memoized Result.scan)
   *   - kg_dictionary    screen→account join + identifier-split name
   *                      normalization + groupBy count
   *                      (BuildUserIndex.java:104-110, 271-297)
   *   - kg_social_graph  author×mention pairs per file, freq≥2 HAVING,
   *                      per-src normalized weights
-  *                      (ExtractSocialGraph.java:75-96, 176-195)
+  *                      (ExtractSocialGraph.java:75-96, 176-195), against
+  *                      the edges the pipeline builds from its scan
   *   - kg_candidates_exact  query-name expansion (normalize + "Last,
   *                      First" swap), rollup, >300-candidate back-off,
   *                      top-40 window with total-order tie-break

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.kg._
 
@@ -10,12 +9,12 @@ import graft.kg._
   *
   *   spark-submit --class graft.RunPipeline <jar> <outputRoot> [nFiles]
   *
-  * The master/executor topology comes from the submit command (the builder
-  * sets no master when spark-submit provides one; a bare `sbt runMain`
-  * falls back to local[*]). Every stage materializes under
-  * `<outputRoot>/<stage>/` behind Spark's atomic `_SUCCESS` commit marker
-  * plus a parameter fingerprint, so re-submitting the same command after a
-  * kill resumes from the first incomplete stage and reproduces
+  * The master/executor topology comes from the submit command
+  * (Scaling.submitted sets no master when spark-submit provides one; a
+  * bare `sbt runMain` falls back to Scaling.session over every core).
+  * Every stage materializes under `<outputRoot>/<stage>/` behind Spark's
+  * atomic `_SUCCESS` commit marker plus a parameter fingerprint, so
+  * re-submitting the same command after a kill resumes from the first incomplete stage and reproduces
   * byte-identical output (CheckpointSpec proves kill/resume equality).
   * Exit prints one JSON line: triple count, per-stage wall + row counts
   * from the lineage/checkpoint table.
@@ -26,14 +25,9 @@ object RunPipeline {
     val root = args.headOption.getOrElse(
       sys.error("usage: RunPipeline <outputRoot> [nFiles]"))
     val nFiles = args.lift(1).map(_.toInt).getOrElse(300000)
-    val base = SparkSession.builder().appName("graft-kg-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
     val spark = sys.props.get("spark.master")
-      .fold(base.master(s"local[${Runtime.getRuntime.availableProcessors}]")
-        .config("spark.sql.shuffle.partitions",
-          Runtime.getRuntime.availableProcessors.toString))(_ => base)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .fold(Scaling.session(Runtime.getRuntime.availableProcessors))(
+        _ => Scaling.submitted("graft-kg-pipeline"))
     try {
       val t0 = System.nanoTime()
       val result = Pipeline.run(spark, CorpusGen.benchAt(nFiles), root)

@@ -47,6 +47,21 @@ object Scaling {
     s
   }
 
+  /** The session of a spark-submitted main: master, executors and their
+    * resources come from the submit command, so only the settings every
+    * pipeline run relies on are set here.
+    */
+  def submitted(app: String): SparkSession = {
+    val s = SparkSession.builder()
+      .appName(app)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** One full pipeline run; returns (wallSec, nTriples, nJobs). nJobs is
     * the scheduler job count — each job is one driver round-trip, so the
     * count is the direct measure of the per-run fixed-overhead floor that
@@ -168,13 +183,7 @@ object Scaling {
     if (args.headOption.contains("cluster")) {
       val nFiles = args.lift(1).map(_.toInt).getOrElse(2000000)
       val repeats = sys.env.getOrElse("SCALING_RUNS", "2").toInt
-      val spark = SparkSession.builder()
-        .appName("graft-scaling-cluster")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = submitted("graft-scaling-cluster")
       def once(scale: CorpusGen.Scale): (Double, Long) = {
         val t0 = System.nanoTime()
         val r = Pipeline.computeForScale(spark, scale)

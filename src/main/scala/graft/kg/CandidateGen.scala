@@ -114,7 +114,7 @@ object CandidateGen {
     * reference swaps person "Last, First" before counting,
     * AllNamesStrategy.java:96-103); tie-break (count desc, name asc) for a
     * total order where the reference's HashMap iteration is unstable.
-    * The returned names are ⊆ the queryNames expansion by construction
+    * The returned names are ⊆ the queryNamesUdf expansion by construction
     * (each is swap(normalize(raw)) with the same length gate).
     */
   val top3NamesUdf = udf((names: Seq[String], labels: Seq[String]) =>
@@ -126,20 +126,14 @@ object CandidateGen {
       .sortBy { case (n, c) => (-c, n) }
       .take(3).map(_._1).toVector)
 
-  /** entity_id, qname (one row per query name of a live entity). */
-  def queryNames(entities: DataFrame): DataFrame =
-    entities
-      .filter(!col("dead")) // P6 dead-entity filter, ProcessDataset.java:192-195
-      .select(col("id").as("entity_id"),
-        explode(queryNamesUdf(col("names"), col("labels"))).as("qname"))
-
-  /** queryNames plus per-rung membership flags: in_r1 ⇔ the qname is one of
+  /** (entity_id, qname, in_r1, in_r2) — one row per query name of a live
+    * entity, with per-rung membership flags: in_r1 ⇔ the qname is one of
     * the entity's top-3 names (intermediate back-off rung), in_r2 ⇔ it is
     * the primary name (strictest rung).
     */
   private def taggedQueryNames(entities: DataFrame): DataFrame =
     entities
-      .filter(!col("dead"))
+      .filter(!col("dead")) // P6 dead-entity filter, ProcessDataset.java:192-195
       .select(col("id").as("entity_id"),
         explode(queryNamesUdf(col("names"), col("labels"))).as("qname"),
         top3NamesUdf(col("names"), col("labels")).as("top3"),

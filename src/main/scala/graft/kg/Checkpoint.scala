@@ -46,20 +46,22 @@ object Checkpoint {
 
   /** Order-independent per-bucket stats of a DataFrame (64 stable buckets —
     * a stand-in for physical partitions that survives repartitioning).
+    * No `stage` column: [[record]] writes the rows under a `stage=<stage>`
+    * directory, and partition discovery supplies it on read.
     */
-  def stats(df: DataFrame, stage: String, wallMs: Long): DataFrame = {
+  def stats(df: DataFrame, wallMs: Long): DataFrame = {
     val rowHash = xxhash64(to_json(struct(df.columns.map(col).toSeq: _*)))
     df.select(pmod(rowHash, lit(64)).cast("int").as("part"), rowHash.as("h"))
       .groupBy(col("part"))
       .agg(count(lit(1)).as("n_rows"),
         bit_xor(col("h")).as("hash_agg"))
-      .select(lit(stage).as("stage"), col("part"), col("n_rows"),
+      .select(col("part"), col("n_rows"),
         col("hash_agg"), lit(wallMs).as("wall_ms"), lit("done").as("status"))
   }
 
   def record(spark: SparkSession, root: String, stage: String, df: DataFrame,
       wallMs: Long): Unit =
-    stats(df, stage, wallMs)
+    stats(df, wallMs)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$root/_checkpoint/stage=$stage")
@@ -91,6 +93,15 @@ object Checkpoint {
     }
   }
 
-  def readCheckpoints(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/_checkpoint")
+  /** The stats rows of every recorded stage, `stage` from the partition
+    * directories. The `stage=` directories are listed and read under an
+    * explicit basePath: Spark treats a path named `_checkpoint` as hidden
+    * and logs "All paths were ignored" when it is read directly.
+    */
+  def readCheckpoints(spark: SparkSession, root: String): DataFrame = {
+    val base = new org.apache.hadoop.fs.Path(s"$root/_checkpoint")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stages = fs.listStatus(base).filter(_.isDirectory).map(_.getPath.toString)
+    spark.read.option("basePath", base.toString).parquet(stages.toSeq: _*)
+  }
 }

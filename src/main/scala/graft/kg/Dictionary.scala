@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Dictionary {
 
-  val normalizeNameUdf =
-    udf((s: String) => Text.normalizeName(s))
-
   /** F2 mention-name normalization: identifier splitting (camel/snake →
     * words) before the usual lowercase/whitespace normalization, so the
     * code corpus's `AdaLovelace` display forms key the same dictionary

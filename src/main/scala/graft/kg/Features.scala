@@ -26,9 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Features {
 
-  /** Word tokens (shared scalar tokenizer — dims only, never per-pair). */
-  val tokensUdf = udf((s: String) => Text.tokens(s))
-
   /** Word-token xxhash64 values of a text — tokens are hashed AT
     * EXTRACTION (ops.Dedup.xxLane(0, t) = the Catalyst xxhash64
     * expression, shared with the scalar oracle), so the whole text model —
@@ -60,24 +57,10 @@ object Features {
         // (VectorKernelsSpec pins it)
         graft.functions.VectorKernels.entryNormCol(col("tw")).as("tnorm"))
 
-  /** (accountVectors(account_id, tvec, tnorm),
-    *  entityVectors(entity_id, tvec, tnorm)).
-    *
-    * IDF is fit on the per-account corpus texts (N = accounts with ≥1
-    * authored file); entity abstracts are transformed with the SAME model
-    * (out-of-vocabulary tokens get the df=0 idf), mirroring how the
-    * reference projects both sides with one LSA model
-    * (LSAVectorProvider.java:25-33).
-    *
-    * Scale shape: one corpus-wide (account, token) count [shuffle on
-    * (account, token) with partial agg], one token-level df agg over the
-    * already-aggregated counts, broadcast idf join. Content never shuffles.
-    */
-  /** Author screen names of a file — extracted straight from the content
-    * (the author annotation LIVES in the content, so re-deriving it here
-    * avoids joining the mention table back against the corpus on file
-    * keys, which would shuffle every content string; at 100 TB that join
-    * IS the bottleneck, this is a map-side pass).
+  /** Author screen names of a file, by the author regex straight over
+    * the content — with [[authoredContent]] and [[accountBow]], the
+    * independent raw-corpus form FeaturesSpec checks
+    * [[accountTokenCounts]] against.
     */
   val authorsUdf = udf((content: String) =>
     if (content == null) Seq.empty[String]
@@ -93,16 +76,13 @@ object Features {
   /** (account_id, h, tf) — flat per-account BOW counts over token HASHES
     * (map-side combinable hash aggregate; only (account, h) long partials
     * shuffle — this is the widest feature-side shuffle of the pipeline,
-    * one row per distinct token per account).
-    *
-    * Accepts the raw corpus OR a Scan.products frame (Scan.ensure): the
-    * pipeline passes its persisted scan so this builder costs zero corpus
-    * reads; standalone callers with raw repos pay one.
+    * one row per distinct token per account). `scan` is a Scan.products
+    * frame, so this builder reads no content.
     */
-  def accountTokenCounts(repos: DataFrame, accounts: DataFrame): DataFrame = {
+  def accountTokenCounts(scan: DataFrame, accounts: DataFrame): DataFrame = {
     val accs = broadcast(accounts.select(col("screenName").as("screen_name"),
       col("accountId").as("account_id")))
-    Scan.authoredTokens(Scan.ensure(repos))
+    Scan.authoredTokens(scan)
       .join(accs, Seq("screen_name"))
       .select(col("account_id"), explode(col("tok")).as("tc"))
       .groupBy(col("account_id"), col("tc._1").as("h"))
@@ -134,7 +114,20 @@ object Features {
       .agg(new graft.ops.Aggregators.BowMerge().toColumn.name("bow"))
   }
 
-  def textVectors(repos: DataFrame, accounts: DataFrame,
+  /** (accountVectors(account_id, tvec, tnorm),
+    *  entityVectors(entity_id, tvec, tnorm)).
+    *
+    * IDF is fit on the per-account corpus texts (N = accounts with ≥1
+    * authored file); entity abstracts are transformed with the SAME model
+    * (out-of-vocabulary tokens get the df=0 idf), mirroring how the
+    * reference projects both sides with one LSA model
+    * (LSAVectorProvider.java:25-33).
+    *
+    * Scale shape: one corpus-wide (account, token) count [shuffle on
+    * (account, token) with partial agg], one token-level df agg over the
+    * already-aggregated counts, broadcast idf join. Content never shuffles.
+    */
+  def textVectors(scan: DataFrame, accounts: DataFrame,
       entities: DataFrame): (DataFrame, DataFrame) = {
     // localCheckpoint (eager, MEMORY_AND_DISK) instead of persist(): the
     // frame feeds three consumers (N agg, df agg, vector build) so it must
@@ -142,7 +135,7 @@ object Features {
     // ContextCleaner when the frame is GC'd, unlike catalog-cached plans,
     // which a long-lived session (Bench memo, Tune, GoldEvalSpec) would
     // accumulate forever.
-    val accTok = accountTokenCounts(repos, accounts).localCheckpoint(true)
+    val accTok = accountTokenCounts(scan, accounts).localCheckpoint(true)
     // IDF corpus size N as a 1-row frame cross-joined into the idf model —
     // no driver-side count() action; the whole model stays one lazy plan.
     val nDf = accTok.agg(countDistinct(col("account_id")).as("n_acc"))
@@ -181,16 +174,15 @@ object Features {
   /** Social-graph edges from per-file co-occurrence of the author with the
     * mentioned accounts: edges(src, dst, freq, w) where w is the per-src
     * normalized weight over edges that survive the min-frequency filter
-    * (ExtractSocialGraph.java:75-96, :176-195). Pairs come from the shared
-    * scan (Scan.coMentionPairs — no extra corpus read when the caller
-    * passes a persisted products frame); only (src_screen, dst_screen)
-    * pairs shuffle.
+    * (ExtractSocialGraph.java:75-96, :176-195). Pairs come from the
+    * Scan.products frame `scan` (Scan.coMentionPairs — no content read);
+    * only (src_screen, dst_screen) pairs shuffle.
     */
-  def socialEdges(repos: DataFrame, accounts: DataFrame,
+  def socialEdges(scan: DataFrame, accounts: DataFrame,
       minFreq: Long = 2): DataFrame = {
     val accs = broadcast(accounts.select(col("screenName").as("screen_name"),
       col("accountId").as("account_id")))
-    Scan.coMentionPairs(Scan.ensure(repos))
+    Scan.coMentionPairs(scan)
       .join(accs.withColumnRenamed("screen_name", "src_screen")
         .withColumnRenamed("account_id", "src"), Seq("src_screen"))
       .join(accs.withColumnRenamed("screen_name", "dst_screen")

@@ -42,7 +42,7 @@ object ScalarOracle {
     }
 
     // ---------------- corpus pass: dictionary + account text + social edges
-    // (Mentions.extract + Dictionary.build + Features.textVectors/socialEdges)
+    // (Scan.mentions + Dictionary.build + Features.textVectors/socialEdges)
     val dict = mutable.HashMap.empty[(String, Long), Long] // (name, accId) -> freq
     // token → 64-bit hash shared with the Spark side (xxhash64(0, token));
     // the text model is keyed by HASH end to end, mirroring Features'

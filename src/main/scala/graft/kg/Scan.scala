@@ -8,30 +8,32 @@ import org.apache.spark.sql.functions._
   * The pipeline needs four products of the raw content: the annotation
   * rows (mentions), the author list (per-account corpus text), the
   * author×mention pairs (social graph), and the per-file token counts
-  * (TF-IDF model). Before this object existed each product scanned the
-  * corpus independently — Mentions.extract, Features.authoredContent and
-  * Features.coMentionPairsUdf each read every content string, i.e. THREE
-  * full corpus reads per pipeline run. At 10^12-file scale the corpus
-  * read IS the pipeline's dominant cost, so the pass count is the first
-  * thing to fix: `products` extracts all four in a single pass, the
-  * pipeline persists/checkpoints the (small) product rows, and every
-  * downstream stage derives from them — content is read exactly once and
-  * never again.
+  * (TF-IDF model). `products` extracts all four, plus the sha256(content)
+  * lineage column, in a single pass; the pipeline persists/checkpoints the
+  * (small) product rows, and every downstream stage derives from them —
+  * content is read exactly once and never again. The scan frame is the
+  * only corpus form the kg layers accept: the dictionary, the text model,
+  * the social graph, the lineage and the kg_mentions / kg_social_graph
+  * queries all take it, and a raw corpus passed in its place fails
+  * analysis (no `anns`/`authors`/`mens`/`tok` columns). At 10^12-file
+  * scale the corpus read IS the pipeline's dominant cost.
   *
-  * Exactness: each product is extracted by the SAME kernel the dedicated
-  * scans used (the three regexes below and the xxhash64 token counter are
-  * verbatim from Mentions/Features), so the derived frames are
-  * row-identical to the per-scan formulations — KgPipelineSpec's exact
-  * triple-set gate and the DuckDB SQL replays hold unchanged.
+  * Exactness: the marker scanner reproduces the annotation regex and the
+  * author/mention regexes match for match (ScanKernelSpec), and the token
+  * counter the Text.tokens + xxhash64 rule bit for bit, so the derived
+  * frames are row-identical to independent per-product scans —
+  * KgPipelineSpec's exact triple-set gate against ScalarOracle and the
+  * DuckDB SQL replays (which re-derive mentions and edges from content
+  * cross-engine) pin it.
   *
   * Reference analogue: BuildUserIndex.java:221-269 likewise emits author ∪
   * mention rows from ONE pass over the tweet stream.
   */
 object Scan {
 
-  /** ONE regex pass for all three marker products. The historical kernels
-    * — Mentions.AnnotationRe `// @(author|mention) (\S+) \(([^)]*)\)` and
-    * Features' AuthorRe/MentionRe `// @(author|mention) (\S+)` — share the
+  /** ONE regex pass for all three marker products. The per-product
+    * regexes — the annotation form `// @(author|mention) (\S+) \(([^)]*)\)`
+    * and the author/mention form `// @(author|mention) (\S+)` — share the
     * marker prefix, so a single scan with the display-name group OPTIONAL
     * yields all three match sets: every combined match is an author/mention
     * row, and the matches whose optional group is present are exactly the
@@ -219,7 +221,7 @@ object Scan {
       mens: Seq[String],
       tok: Seq[(Long, Long)])
 
-  /** The scalar kernel behind [[productsUdf]] — exposed so ScanKernelSpec
+  /** The scalar kernel behind [[products]] — exposed so ScanKernelSpec
     * can property-test it against the historical three-regex formulation
     * without a Spark job.
     */
@@ -245,11 +247,9 @@ object Scan {
       Products(anns, authors, mens, tok)
     }
 
-  val productsUdf = udf(productsOf _)
-
-  /** One scan-output row — the typed shape behind [[products]]; field
-    * names/types match the previous UDF formulation exactly (tuple Seqs
-    * encode as array<struct<_1,...>>, the layout every consumer selects).
+  /** One scan-output row — the typed shape behind [[products]] (tuple
+    * Seqs encode as array<struct<_1,...>>, the layout every consumer
+    * selects).
     */
   final case class ScanRow(repo: String, path: String, commit: String,
       content_sha: String,
@@ -262,8 +262,8 @@ object Scan {
     * only place content is ever visible (input_hint contract):
     * DigestUtils.sha256Hex is the exact call Spark's `sha2(col, 256)`
     * expression makes on the UTF-8 bytes, so the column is bit-identical
-    * to the previous `withSha` formulation (the DuckDB kg_corpus replay
-    * recomputes it cross-engine).
+    * to kg_corpus's `sha2(content, 256)` (the DuckDB kg_corpus and
+    * kg_mentions replays recompute it cross-engine).
     *
     * Typed mapPartitions instead of a ScalaUDF: the UDF path converted the
     * nested Products result through reflection-based
@@ -386,16 +386,10 @@ object Scan {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** Is `df` already a scan-products frame (vs the raw corpus)? */
-  def isScan(df: DataFrame): Boolean = df.columns.contains("anns")
-
-  /** Accept either the raw corpus or an (ideally persisted) products frame
-    * — lets every feature builder keep its `repos` signature while the
-    * pipeline shares one persisted scan across all consumers.
+  /** (repo, path, commit, content_sha, kind, screen_name, display_name) —
+    * one row per annotation occurrence, derived from the scan (the
+    * dictionary's input and the kg_mentions query).
     */
-  def ensure(df: DataFrame): DataFrame = if (isScan(df)) df else products(df)
-
-  /** Mentions.extract-identical rows, derived from the scan. */
   def mentions(scan: DataFrame): DataFrame =
     scan.select(col("repo"), col("path"), col("commit"), col("content_sha"),
         explode(col("anns")).as("m"))

@@ -184,13 +184,11 @@ object Scorer {
     * (Pipeline.compute overlaps them on a Future, the same pattern as the
     * two bucketed table writes below).
     */
-  def dims(entities: DataFrame, accounts: DataFrame, repos: DataFrame,
+  def dims(entities: DataFrame, accounts: DataFrame, scan: DataFrame,
       accountEmbeddings: DataFrame, entityEmbeddings: DataFrame)
       : (DataFrame, DataFrame) = {
-    // one scan for both corpus-derived feature tables: the pipeline passes
-    // its persisted Scan.products frame (zero corpus reads here); a raw
-    // corpus argument is scanned once and shared by both consumers
-    val scan = Scan.ensure(repos)
+    // both corpus-derived feature tables read the one Scan.products frame
+    // (zero corpus reads here)
     val (accVec, entVec) = Features.textVectors(scan, accounts, entities)
     val sgVec = Features.sgVectors(
       Features.socialEdges(scan, accounts), accountEmbeddings)
@@ -235,13 +233,13 @@ object Scorer {
   }
 
   def featurize(candidates: DataFrame, entities: DataFrame, accounts: DataFrame,
-      repos: DataFrame, accountEmbeddings: DataFrame,
+      scan: DataFrame, accountEmbeddings: DataFrame,
       entityEmbeddings: DataFrame,
       entJoin: (DataFrame, DataFrame) => DataFrame = broadcastEntJoin,
       nowMs: Long = CorpusGen.NowMs,
       prebuiltDims: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val (acc, ent) = prebuiltDims.getOrElse(
-      dims(entities, accounts, repos, accountEmbeddings, entityEmbeddings))
+      dims(entities, accounts, scan, accountEmbeddings, entityEmbeddings))
 
     // Join order matters for shuffle traffic: candidates ⋈ acc FIRST (only
     // the narrow (entity_id, account_id, freq, rank) rows shuffle on
@@ -309,7 +307,7 @@ object Scorer {
     * is_alignment) — rank recomputed by (score desc, account_id asc).
     */
   def score(candidates: DataFrame, entities: DataFrame, accounts: DataFrame,
-      repos: DataFrame, accountEmbeddings: DataFrame,
+      scan: DataFrame, accountEmbeddings: DataFrame,
       entityEmbeddings: DataFrame, conf: KgConf = KgConf(),
       prebuiltDims: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val entJoin =
@@ -317,7 +315,7 @@ object Scorer {
         bucketedEntJoin(candidates.sparkSession, conf.featurizeBuckets,
           conf.featurizePrefix)
       else broadcastEntJoin
-    val feats = featurize(candidates, entities, accounts, repos,
+    val feats = featurize(candidates, entities, accounts, scan,
       accountEmbeddings, entityEmbeddings, entJoin, conf.nowMs, prebuiltDims)
     val z =
       lit(conf.wName) * col("name_sim") +

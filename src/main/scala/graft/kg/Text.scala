@@ -153,26 +153,4 @@ object Text {
     }
     sum / entityNames.length
   }
-
-  /** F18: cosine similarity between term-frequency vectors of two token
-    * sequences (CosineScorer.java:20-38 semantics, 0-guarded). Term order
-    * inside the dot product is fixed by sorting terms, so the result is
-    * bitwise deterministic regardless of input partitioning.
-    */
-  def cosineTokens(a: Array[String], b: Array[String]): Double = {
-    if (a == null || b == null || a.isEmpty || b.isEmpty) return 0.0
-    val ca = scala.collection.mutable.TreeMap.empty[String, Int]
-    val cb = scala.collection.mutable.TreeMap.empty[String, Int]
-    a.foreach(t => ca.update(t, ca.getOrElse(t, 0) + 1))
-    b.foreach(t => cb.update(t, cb.getOrElse(t, 0) + 1))
-    var dot = 0.0
-    ca.foreach { case (t, n) => cb.get(t).foreach(m => dot += n.toDouble * m.toDouble) }
-    var na = 0.0
-    ca.valuesIterator.foreach(n => na += n.toDouble * n)
-    var nb = 0.0
-    cb.valuesIterator.foreach(n => nb += n.toDouble * n)
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 }

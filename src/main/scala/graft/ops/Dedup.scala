@@ -105,9 +105,7 @@ object Dedup {
     text.toLowerCase.split("[^a-z0-9]+", -1).filter(_.nonEmpty)
   }
 
-  /** k-token shingles; <k tokens → the single space-joined token string
-    * (mirror of shinglesCol below).
-    */
+  /** k-token shingles; <k tokens → the single space-joined token string. */
   def tokenShingles(tokens: Array[String], k: Int): Array[String] =
     if (tokens.length < k) Array(tokens.mkString(" "))
     else Array.tabulate(tokens.length - k + 1)(i =>
@@ -123,17 +121,14 @@ object Dedup {
     h
   }
 
-  /** Per-lane constant of the minhash family (GOLDEN · (lane+1) mod 2⁶⁴). */
-  def laneConst(lane: Int): Long = 0x9e3779b97f4a7c15L * (lane + 1)
-
-  /** Minhash lane hash: splitmix64(fnv1a(s) ^ laneConst). Chosen over
-    * xxhash64 because the whole family REPLAYS in the DuckDB oracle with
-    * HUGEINT mod-2⁶⁴ arithmetic (XXH64's stripe processing is impractical
-    * in SQL), and banding only needs a uniform pairwise-independent-ish
-    * family — same scheme kg.Blocking already uses for name blocking.
+  /** Per-lane constant of the minhash family (GOLDEN · (lane+1) mod 2⁶⁴).
+    * A lane hash is splitmix64(fnv1a(s) ^ laneConst). Chosen over xxhash64
+    * because the whole family REPLAYS in the DuckDB oracle with HUGEINT
+    * mod-2⁶⁴ arithmetic (XXH64's stripe processing is impractical in SQL),
+    * and banding only needs a uniform pairwise-independent-ish family —
+    * same scheme kg.Blocking already uses for name blocking.
     */
-  def laneHash(lane: Int, s: String): Long =
-    graft.kg.CorpusGen.mix(fnv1a(s) ^ laneConst(lane))
+  def laneConst(lane: Int): Long = 0x9e3779b97f4a7c15L * (lane + 1)
 
   /** MinHash band keys of a shingle multiset: `lanes` min-hashes (UNSIGNED
     * min — the SQL replay mins in the non-negative HUGEINT domain) split
@@ -459,15 +454,6 @@ object Dedup {
 
   def tokensCol(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
-
-  /** k-token shingles via built-ins: slice a token array at every offset.
-    * (Kept as the reference form; the hot paths use the compiled kernel
-    * `tokenShingles`, which mirrors this bit-for-bit.)
-    */
-  def shinglesCol(tokens: Column, k: Int): Column =
-    when(size(tokens) < k, array(concat_ws(" ", tokens)))
-      .otherwise(transform(sequence(lit(0), size(tokens) - k),
-        i => concat_ws(" ", slice(tokens, i + 1, lit(k)))))
 
   /** Lowercased ASCII token stream of `text` as ONE UTF-8 byte buffer with
     * a single space between tokens — the window representation behind the
@@ -807,18 +793,12 @@ object Dedup {
       math.max(1, math.ceil(math.log(1.0 - recall) / math.log(1.0 - pTable)).toInt))
   }
 
-  /** Fixed pseudo-random hyperplane as a scalar array (shared by the kernel
-    * and the legacy Column form).
-    */
+  /** Fixed pseudo-random hyperplane as a scalar array. */
   def planeVec(p: Int, dim: Int): Array[Double] =
     Array.tabulate(dim) { j =>
       val h = graft.kg.CorpusGen.mix(0x51ab5ea1L * (p + 1) + j)
       ((h >>> 11).toDouble / (1L << 53).toDouble) * 2.0 - 1.0
     }
-
-  /** Fixed pseudo-random hyperplane as an array literal column. */
-  def planeCol(p: Int, dim: Int): Column =
-    array(planeVec(p, dim).map(lit(_)).toSeq: _*)
 
   /** All tables' sign-bit bucket keys for one vector — one compiled pass
     * over a precomputed (tables×planes)×dim plane matrix.

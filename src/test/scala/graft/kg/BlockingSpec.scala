@@ -53,7 +53,7 @@ class BlockingSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val scale = CorpusGen.Small
     val dict = Dictionary.build(spark,
-      Mentions.extract(CorpusGen.repos(spark, scale).toDF()),
+      Scan.mentions(Scan.products(CorpusGen.repos(spark, scale).toDF())),
       CorpusGen.accounts(spark, scale).toDF())
     val maxBand = dict.select(org.apache.spark.sql.functions.col("name")).distinct()
       .withColumn("band", org.apache.spark.sql.functions.explode(

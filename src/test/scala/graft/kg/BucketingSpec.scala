@@ -24,7 +24,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       val scale = CorpusGen.Tiny
       val entities = CorpusGen.entities(spark, scale).toDF()
       val dict = Dictionary.build(spark,
-        Mentions.extract(CorpusGen.repos(spark, scale).toDF()),
+        Scan.mentions(Scan.products(CorpusGen.repos(spark, scale).toDF())),
         CorpusGen.accounts(spark, scale).toDF())
       val cands = CandidateGen.candidates(spark, entities, dict)
       val dim = entities.select(col("id").as("entity_id"), col("kind"))
@@ -55,12 +55,12 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val scale = CorpusGen.Tiny
-      val repos = CorpusGen.repos(spark, scale).toDF()
+      val scan = Scan.products(CorpusGen.repos(spark, scale).toDF())
       val entities = CorpusGen.entities(spark, scale).toDF()
       val accounts = CorpusGen.accounts(spark, scale).toDF()
-      val dict = Dictionary.build(spark, Mentions.extract(repos), accounts)
+      val dict = Dictionary.build(spark, Scan.mentions(scan), accounts)
       val cands = CandidateGen.candidates(spark, entities, dict)
-      val feats = Scorer.featurize(cands, entities, accounts, repos,
+      val feats = Scorer.featurize(cands, entities, accounts, scan,
         CorpusGen.accountEmbeddings(spark, scale).toDF(),
         CorpusGen.entityEmbeddings(spark, scale).toDF())
       // dim-side builds (|entities| rows) may legitimately exchange their
@@ -132,10 +132,10 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       Account(5L, "a5", "Beta", "", 1, 1, 0, 1, verified = false, "", 0L)).toDF()
     val cands = Seq(("e1", 1L, 3L, 1), ("e1", 3L, 2L, 2), ("e2", 5L, 1L, 1))
       .toDF("entity_id", "account_id", "freq", "rank")
-    val repos = Seq.empty[RepoFile].toDF()
+    val scan = Scan.products(Seq.empty[RepoFile].toDF())
     val accEmb = Seq.empty[(Long, Seq[Float])].toDF("accountId", "vec")
     val entEmb = Seq.empty[(String, Seq[Float])].toDF("entityId", "vec")
-    val feats = Scorer.featurize(cands, entities, accounts, repos, accEmb, entEmb)
+    val feats = Scorer.featurize(cands, entities, accounts, scan, accEmb, entEmb)
     assert(feats.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
       "url→count aggregate is not semi-join-restricted to entity homepages")
     val byKey = feats.collect()
@@ -160,19 +160,19 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
 
   test("bucketed featurize output is identical to the broadcast path") {
     val scale = CorpusGen.Tiny
-    val repos = CorpusGen.repos(spark, scale).toDF()
+    val scan = Scan.products(CorpusGen.repos(spark, scale).toDF())
     val entities = CorpusGen.entities(spark, scale).toDF()
     val accounts = CorpusGen.accounts(spark, scale).toDF()
     val accEmb = CorpusGen.accountEmbeddings(spark, scale).toDF()
     val entEmb = CorpusGen.entityEmbeddings(spark, scale).toDF()
-    val dict = Dictionary.build(spark, Mentions.extract(repos), accounts)
+    val dict = Dictionary.build(spark, Scan.mentions(scan), accounts)
     val cands = CandidateGen.candidates(spark, entities, dict)
 
     def key(r: org.apache.spark.sql.Row): (String, Long) =
       (r.getAs[String]("entity_id"), r.getAs[Long]("account_id"))
-    val base = Scorer.featurize(cands, entities, accounts, repos, accEmb, entEmb)
+    val base = Scorer.featurize(cands, entities, accounts, scan, accEmb, entEmb)
       .collect().map(r => key(r) -> r.toSeq).toMap
-    val bucketed = Scorer.featurize(cands, entities, accounts, repos, accEmb,
+    val bucketed = Scorer.featurize(cands, entities, accounts, scan, accEmb,
         entEmb, Scorer.bucketedEntJoin(spark, 8, "graft_spec_feat"))
       .collect().map(r => key(r) -> r.toSeq).toMap
     assert(bucketed.keySet == base.keySet)

@@ -120,6 +120,11 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
   test("checkpoint table carries per-partition lineage rows for every stage") {
     val root = Files.createTempDirectory("kg_run4").toString
     Pipeline.run(spark, CorpusGen.Tiny, root)
+    // the stage name lives in the partition directory only: a `stage` data
+    // column beside `stage=<name>` makes every table read clash with itself
+    val scanRows = spark.read.parquet(s"$root/_checkpoint/stage=scan")
+    assert(!scanRows.columns.contains("stage"),
+      s"stats rows carry a stage data column: ${scanRows.columns.mkString(",")}")
     val cp = Checkpoint.readCheckpoints(spark, root)
     val stages = cp.select(col("stage")).distinct().collect().map(_.getString(0)).toSet
     assert(stages == Set("corpus", "entities", "accounts", "scan", "dictionary",

@@ -37,7 +37,7 @@ class FeaturesSpec extends AnyFunSuite with SparkTestBase {
 
   test("social edges: min-freq filter and per-src normalized weights sum to 1") {
     val scale = CorpusGen.Tiny
-    val edges = Features.socialEdges(CorpusGen.repos(spark, scale).toDF(),
+    val edges = Features.socialEdges(Scan.products(CorpusGen.repos(spark, scale).toDF()),
       CorpusGen.accounts(spark, scale).toDF())
     assert(edges.filter(col("freq") < 2).count() == 0)
     val sums = edges.groupBy(col("src")).agg(sum(col("w")).as("s"))
@@ -62,7 +62,7 @@ class FeaturesSpec extends AnyFunSuite with SparkTestBase {
     val accounts = CorpusGen.accounts(spark, scale).toDF()
     // the flat aggregate is keyed by token HASH (hash-at-extraction);
     // hashing the typed string-keyed bow and merging must reproduce it
-    val flat = Features.accountTokenCounts(repos, accounts)
+    val flat = Features.accountTokenCounts(Scan.products(repos), accounts)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val typed = Features.accountBow(repos, accounts)
       .collect().flatMap { case (id, bow) =>
@@ -77,7 +77,7 @@ class FeaturesSpec extends AnyFunSuite with SparkTestBase {
     // same-topic edge mass should clearly exceed the 1/12 random baseline —
     // this is the signal the sg_cos feature relies on
     val scale = CorpusGen.Small
-    val edges = Features.socialEdges(CorpusGen.repos(spark, scale).toDF(),
+    val edges = Features.socialEdges(Scan.products(CorpusGen.repos(spark, scale).toDF()),
       CorpusGen.accounts(spark, scale).toDF())
       .collect()
     val same = edges.iterator.map { r =>

@@ -86,7 +86,8 @@ class KgPipelineSpec extends AnyFunSuite with SparkTestBase {
     val entities = CorpusGen.entities(spark, scale).toDF()
     def cands(parts: Int): Set[(String, Long, Long, Int)] = {
       val dict = Dictionary.build(spark,
-        Mentions.extract(repos.repartition(parts)), accounts.repartition(parts))
+        Scan.mentions(Scan.products(repos.repartition(parts))),
+        accounts.repartition(parts))
       CandidateGen.candidates(spark, entities.repartition(parts), dict)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))

@@ -35,9 +35,9 @@ class OnlineParitySpec extends AnyFunSuite with SparkTestBase {
     assert(one.count() == 1L)
 
     val accounts = CorpusGen.accounts(spark, scale).toDF()
-    val repos = CorpusGen.repos(spark, scale).toDF()
+    val scan = Scan.products(CorpusGen.repos(spark, scale).toDF())
     val cands1 = CandidateGen.candidates(spark, one, r.dictionary)
-    val online = Scorer.score(cands1, one, accounts, repos,
+    val online = Scorer.score(cands1, one, accounts, scan,
         CorpusGen.accountEmbeddings(spark, scale).toDF(),
         CorpusGen.entityEmbeddings(spark, scale).toDF())
       .collect().map(row).toSet

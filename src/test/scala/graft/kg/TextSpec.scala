@@ -62,17 +62,6 @@ class TextSpec extends AnyFunSuite {
     assert(Text.tokens(null).toSeq == Seq.empty)
   }
 
-  test("cosineTokens: identical=1, disjoint=0, symmetric (property)") {
-    assert(math.abs(Text.cosineTokens(Array("a", "b"), Array("b", "a")) - 1.0) < 1e-12)
-    assert(Text.cosineTokens(Array("a"), Array("b")) == 0.0)
-    val tok = Gen.oneOf("x", "y", "z", "w")
-    check(Prop.forAll(Gen.nonEmptyListOf(tok), Gen.nonEmptyListOf(tok)) { (a, b) =>
-      val aa = a.toArray; val bb = b.toArray
-      math.abs(Text.cosineTokens(aa, aa) - 1.0) < 1e-12 &&
-        Text.cosineTokens(aa, bb) == Text.cosineTokens(bb, aa)
-    })
-  }
-
   test("nameSimilarity applies normalization + Last,First swap") {
     assert(Text.nameSimilarity(Seq("Lovelace, Ada"), "Ada Lovelace") == 1.0)
   }
