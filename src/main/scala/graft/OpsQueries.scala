@@ -622,7 +622,7 @@ object OpsQueries {
     */
   val edgeNormalize: Q = (s, dir) => {
     val toks = docs(s, dir)
-      .select(ops.TfIdf.tokensCol(col("text")).as("ts"))
+      .select(ops.Dedup.tokensCol(col("text")).as("ts"))
       .filter(size(col("ts")) >= 2)
     val pairs = toks.select(explode(arrays_zip(
         slice(col("ts"), lit(1), size(col("ts")) - 1).as("src"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.kg._
 
 /** The spark-submit entrypoint of the KG pipeline (north rule: "resumable
@@ -16,8 +15,8 @@ import graft.kg._
   * atomic `_SUCCESS` commit marker plus a parameter fingerprint, so
   * re-submitting the same command after a kill resumes from the first incomplete stage and reproduces
   * byte-identical output (CheckpointSpec proves kill/resume equality).
-  * Exit prints one JSON line: triple count, per-stage wall + row counts
-  * from the lineage/checkpoint table.
+  * Exit prints one JSON line: triple count and run()'s per-stage report
+  * (Checkpoint.report: rows and wall time per stage).
   */
 object RunPipeline {
 
@@ -33,13 +32,7 @@ object RunPipeline {
       val result = Pipeline.run(spark, CorpusGen.benchAt(nFiles), root)
       val nTriples = result.triples.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      val stages = Checkpoint.readCheckpoints(spark, root)
-        .groupBy(col("stage"))
-        .agg(sum(col("n_rows")).as("rows"), max(col("wall_ms")).as("wall_ms"))
-        .orderBy(col("stage"))
-        .collect()
-        .map(r => s""""${r.getString(0)}":{"rows":${r.getLong(1)},"wall_ms":${r.getLong(2)}}""")
-        .mkString("{", ",", "}")
+      val stages = Checkpoint.reportJson(spark, root)
       println(s"""{"n_triples":$nTriples,"wall_sec":$wall,"n_files":$nFiles,"root":"$root","stages":$stages}""")
     } finally spark.stop()
   }

@@ -35,13 +35,6 @@ object Blocking {
     */
   val BandCap = 1000
 
-  private def fnv(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i).toLong; h *= 0x100000001b3L; i += 1 }
-    h
-  }
-
   def shingles(name: String): Array[String] = {
     if (name == null || name.isEmpty) return Array.empty
     if (name.length < ShingleK) return Array(name)
@@ -55,7 +48,7 @@ object Blocking {
     val lanes = Array.tabulate(Lanes) { lane =>
       var min = Long.MaxValue
       sh.foreach { s =>
-        val h = CorpusGen.mix(fnv(s) ^ (0x9e3779b97f4a7c15L * (lane + 1)))
+        val h = CorpusGen.mix(graft.ops.Dedup.fnv1a(s) ^ (0x9e3779b97f4a7c15L * (lane + 1)))
         if (h < min) min = h
       }
       min

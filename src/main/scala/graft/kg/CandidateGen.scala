@@ -56,22 +56,15 @@ final case class KgConf(
     // entity_id (Exchange-free co-located join, no serial driver-side
     // broadcast build; the 100-TB path, where the entity dim grows with
     // the corpus and cannot broadcast). Pipeline.confFor flips this ON
-    // automatically for scales with >= featurizeAutoBucketFiles files —
+    // automatically for scales with >= Pipeline.AutoBucketFiles files —
     // measured at 2M files/local[16] the bucketed stage is 1.9× faster
     // (18.8 s vs 35.1 s) and scales better (no serial broadcast build).
     bucketedFeaturize: Boolean = false,
-    featurizeBuckets: Int = 64,
     // bucketed-table name prefix; per-SCALE names (set by Pipeline.confFor)
     // keep concurrent scales in one session from aliasing each other's
     // tables — same-scale overwrites rewrite identical bytes (deterministic
     // synthesis), so lazy frames never see foreign data
-    featurizePrefix: String = "graft_feat",
-    // crossover measured on this box: at 300k files the dim broadcast is
-    // tiny and the two bucketed-table writes cost more than they save
-    // (dedicated-run throughput 25.2k vs 17.2k triples/s); at 2M files
-    // bucketed wins 1.9-3.6× on the stage. 1M splits the measured points;
-    // at true cluster scale the dim cannot broadcast at all.
-    featurizeAutoBucketFiles: Int = 1000000)
+    featurizePrefix: String = "graft_feat")
 
 /** Stage 3: candidate generation — entity query names joined against the
   * dictionary, per-entity frequency rollup, top-K with deterministic
@@ -195,12 +188,15 @@ object CandidateGen {
     // exact-name candidates get fuzzy candidates via character-shingle
     // banding against the dictionary's (distinct) names.
     if (!conf.fuzzyEnabled) exact else {
-      // lazy local checkpoints: `exact` is referenced by three consumers
+      // local checkpoints: `exact` is referenced by three consumers
       // (the emptiness probe, the anti-join, the union) and `lonely` by
-      // two — checkpointing computes each once; ContextCleaner releases
-      // the blocks on GC, so no explicit unpersist bookkeeping is owed
-      // (the round-3 leak: rollupAll's persists were unreachable by
-      // Result.unpersist and accumulated across pipeline runs).
+      // two — checkpointing computes each once. They are not lazy: under
+      // AQE, Dataset.checkpoint finalizes the adaptive plan, so building
+      // each one here runs every shuffle stage beneath it, even with
+      // eager = false. ContextCleaner releases the blocks on GC, so no
+      // explicit unpersist bookkeeping is owed (the round-3 leak:
+      // rollupAll's persists were unreachable by Result.unpersist and
+      // accumulated across pipeline runs).
       val exactLc = exact.localCheckpoint(false)
       val withCand = exactLc.select(col("entity_id")).distinct()
       val lonely = tagged.select(col("entity_id"), col("qname"))

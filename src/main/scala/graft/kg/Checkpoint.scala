@@ -104,4 +104,28 @@ object Checkpoint {
     val stages = fs.listStatus(base).filter(_.isDirectory).map(_.getPath.toString)
     spark.read.option("basePath", base.toString).parquet(stages.toSeq: _*)
   }
+
+  /** One stage of run()'s report: its output rows and the wall time
+    * [[stage]] recorded, which is computing the stage plus writing its
+    * parquet.
+    */
+  final case class StageReport(stage: String, rows: Long, wallMs: Long)
+
+  /** run()'s per-stage report, read from the checkpoint table under `root`
+    * and ordered by stage name.
+    */
+  def report(spark: SparkSession, root: String): Seq[StageReport] =
+    readCheckpoints(spark, root)
+      .groupBy(col("stage"))
+      .agg(sum(col("n_rows")).as("rows"), max(col("wall_ms")).as("wall_ms"))
+      .orderBy(col("stage"))
+      .collect()
+      .map(r => StageReport(r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSeq
+
+  /** [[report]] as one JSON object keyed by stage name. */
+  def reportJson(spark: SparkSession, root: String): String =
+    report(spark, root)
+      .map(s => s""""${s.stage}":{"rows":${s.rows},"wall_ms":${s.wallMs}}""")
+      .mkString("{", ",", "}")
 }

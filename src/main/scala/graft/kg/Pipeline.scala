@@ -21,15 +21,15 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *     → triples         (8-pattern materialization, pred-partitioned)
   *     → lineage         (sha256(content) set, per-partition metrics)
   *
-  * Every stage's frame, inputs included, passes through a [[Keep]] policy
-  * that the caller supplies; the three callers differ only in that policy:
-  *   - `compute()`            — in memory: the scan as scratch parquet,
-  *                              dictionary/candidates/alignments persisted;
-  *                              used by SparkEntry.entry, the benchmarks
-  *                              and tests.
-  *   - `run(root)`            — every stage checkpointed; re-runs resume
-  *                              from the first incomplete stage (north rule).
-  *   - `Scaling.stageTimes`   — every stage persisted, counted and timed.
+  * Every stage's frame, inputs included, passes through a [[Keep]] policy;
+  * the two entrypoints differ only in that policy:
+  *   - `compute()`   — in memory: the scan as scratch parquet,
+  *                     dictionary/candidates/alignments persisted; used by
+  *                     SparkEntry.entry, the benchmarks and tests.
+  *   - `run(root)`   — every stage checkpointed; re-runs resume from the
+  *                     first incomplete stage (north rule). Its checkpoint
+  *                     table is the per-stage report (Checkpoint.report):
+  *                     rows and wall time per stage.
   *
   * The wiring sets no job group or job description: a caller that
   * attributes jobs by group wraps the whole call in its own.
@@ -47,7 +47,9 @@ object Pipeline {
       scanPath: Option[String] = None) {
     /** The pre-top-K candidate rollup (CandidateGen.rollupAll) — the frame
       * the A13 diagnostics need. A thunk + lazy val because building the
-      * rollup plan runs an eager probe job (the fuzzy-skip check): the
+      * rollup plan runs jobs: the fuzzy-skip probe, and under AQE the
+      * shuffle stages beneath its local checkpoints (Dataset.checkpoint
+      * finalizes the adaptive plan even when not eager). The
       * wiring hands over the rollup it built for candidates, and a resumed
       * run() whose candidates stage is done builds it only when a caller
       * actually asks for diagnostics.
@@ -76,7 +78,7 @@ object Pipeline {
     * checkpoint name and `by` the columns a written copy is partitioned
     * by; `df` is evaluated only when the stage is computed.
     */
-  private[graft] trait Keep {
+  private trait Keep {
     def apply(stage: String, by: Seq[String] = Nil)(df: => DataFrame): DataFrame
     /** False when `stage`'s output will be reused instead of computed. */
     def computes(stage: String): Boolean = true
@@ -184,7 +186,7 @@ object Pipeline {
   }
 
   /** The wiring over the five inputs synthesized at `scale`. */
-  private[graft] def wireScale(spark: SparkSession, scale: CorpusGen.Scale,
+  private def wireScale(spark: SparkSession, scale: CorpusGen.Scale,
       conf: KgConf, keep: Keep): Result =
     wire(spark, conf, keep,
       CorpusGen.repos(spark, scale).toDF(),
@@ -199,8 +201,15 @@ object Pipeline {
     wire(spark, conf, new InMemory(spark), repos, entities, accounts,
       accountEmbeddings, entityEmbeddings)
 
+  /** Files at which [[confFor]] turns the bucketed featurize join on. At
+    * 300k files the two table writes cost more than the broadcast (25.2k
+    * vs 17.2k triples/s); at 2M bucketed wins 1.9-3.6× on the stage. 1M
+    * splits the measured points (32-core host).
+    */
+  val AutoBucketFiles = 1000000
+
   /** Auto-select the featurize pair-join strategy by scale: corpora at or
-    * above `featurizeAutoBucketFiles` files get bucketed entity_id tables
+    * above [[AutoBucketFiles]] files get bucketed entity_id tables
     * (no serial broadcast build of a dim that grows with the corpus —
     * measured 1.9× faster at 2M files/local[16]); the bucketed tables are
     * named per SCALE so concurrent scales in one session never alias, and
@@ -208,7 +217,7 @@ object Pipeline {
     * synthesis). Explicitly-set bucketedFeaturize is left alone.
     */
   def confFor(scale: CorpusGen.Scale, conf: KgConf = KgConf()): KgConf =
-    if (!conf.bucketedFeaturize && scale.nFiles >= conf.featurizeAutoBucketFiles)
+    if (!conf.bucketedFeaturize && scale.nFiles >= AutoBucketFiles)
       conf.copy(bucketedFeaturize = true,
         featurizePrefix = s"graft_feat_${scale.name}")
     else conf

@@ -91,6 +91,9 @@ object Scorer {
   val broadcastEntJoin: (DataFrame, DataFrame) => DataFrame =
     (cands, ent) => cands.join(broadcast(ent), Seq("entity_id"))
 
+  /** Bucket count of the pipeline's bucketed featurize tables. */
+  val FeaturizeBuckets = 64
+
   /** The scale path for the pair join (conf.bucketedFeaturize): write both
     * sides as tables bucketed + sorted on entity_id, read back, join —
     * the scans report HashPartitioning(entity_id), so the join plans with
@@ -312,7 +315,7 @@ object Scorer {
       prebuiltDims: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val entJoin =
       if (conf.bucketedFeaturize)
-        bucketedEntJoin(candidates.sparkSession, conf.featurizeBuckets,
+        bucketedEntJoin(candidates.sparkSession, FeaturizeBuckets,
           conf.featurizePrefix)
       else broadcastEntJoin
     val feats = featurize(candidates, entities, accounts, scan,
@@ -437,9 +440,12 @@ object Scorer {
     // frame in 3 — and NEITHER is persisted by its producer, so each branch
     // re-evaluates the full dictionary-join → rollup (→ top-K) chain (the
     // whole diagnostic ran ~5 chain evaluations; 17 s of a 69 s bench sweep).
-    // Lazily checkpoint the NARROW key projections once: the chains run once
-    // each and every branch reads 2-3 tiny columns; ContextCleaner releases
-    // the blocks on GC (same pattern as rollupAll's internal checkpoints).
+    // Checkpoint the NARROW key projections once: the chains run once each
+    // and every branch reads 2-3 tiny columns; ContextCleaner releases the
+    // blocks on GC (same pattern as rollupAll's internal checkpoints). Not
+    // lazy despite eager = false: under AQE, Dataset.checkpoint finalizes
+    // the adaptive plan, so both chains' shuffle stages run here, while
+    // this frame is built, not at the consumer's action.
     val rollupKeys = rollupAll.select(col("entity_id"), col("account_id"))
       .localCheckpoint(false)
     val candKeyRank = candidates

@@ -27,12 +27,9 @@ import org.apache.spark.sql.functions._
   */
 object Cooccurrence {
 
-  def tokensCol(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
-
   /** dictionary(token, freq, id) — id dense 0..V-1 by (freq desc, token). */
   def tokenDictionary(docs: DataFrame, minFreq: Long = 5, topV: Int = 1000000): DataFrame = {
-    val counts = docs.select(explode(tokensCol(col("text"))).as("token"))
+    val counts = docs.select(explode(Dedup.tokensCol(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
       .filter(col("freq") > minFreq)
       .orderBy(col("freq").desc, col("token").asc)
@@ -102,7 +99,7 @@ object Cooccurrence {
       }
       out.toSeq
     }
-    docs.select(col("doc_id"), encode(tokensCol(col("text"))).as("ids"))
+    docs.select(col("doc_id"), encode(Dedup.tokensCol(col("text"))).as("ids"))
   }
 
   /** cooc(l, r, weight) with shard columns for partitioned writes. */

@@ -588,10 +588,7 @@ object Dedup {
   def simhashScalar(tokens: Seq[String]): Long = {
     val votes = new Array[Int](64)
     if (tokens != null) tokens.foreach { t =>
-      var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < t.length) { h ^= t.charAt(i).toLong; h *= 0x100000001b3L; i += 1 }
-      h = graft.kg.CorpusGen.mix(h)
+      val h = graft.kg.CorpusGen.mix(fnv1a(t))
       var b = 0
       while (b < 64) { if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1; b += 1 }
     }

@@ -10,12 +10,9 @@ import org.apache.spark.sql.functions._
   */
 object TfIdf {
 
-  def tokensCol(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
-
   /** (doc_id, token, tf): log-scaled term frequency (F16 BOW log-TF). */
   def logTf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(tokensCol(col("text"))).as("token"))
+    docs.select(col("doc_id"), explode(Dedup.tokensCol(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg((lit(1.0) + log(count(lit(1)).cast("double"))).as("tf"))
 
@@ -27,7 +24,7 @@ object TfIdf {
     */
   def idf(docs: DataFrame): DataFrame = {
     val nDf = docs.agg(count(lit(1)).as("n_docs"))
-    docs.select(col("doc_id"), explode(array_distinct(tokensCol(col("text")))).as("token"))
+    docs.select(col("doc_id"), explode(array_distinct(Dedup.tokensCol(col("text")))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDf))
       .withColumn("idf", log((col("n_docs").cast("double") + 1.0) / (col("df").cast("double") + 1.0)) + 1.0)
@@ -53,7 +50,7 @@ object TfIdf {
     val nDf = docs.agg(count(lit(1)).as("n_total"))
     val tokDocs = docs
       .select(col("doc_id"), col("category"),
-        explode(array_distinct(tokensCol(col("text")))).as("token"))
+        explode(array_distinct(Dedup.tokensCol(col("text")))).as("token"))
     // ONE tokenize+explode pass: n1x (docs containing the token) is the
     // category-sum of the (token, category) counts — each doc has exactly
     // one category, so sum(a) ≡ the old count over tokDocs (the old
@@ -119,7 +116,7 @@ object TfIdf {
     val nDf = docs.agg(count(lit(1)).cast("double").as("n_docs"))
     val tokDocs = docs
       .select(col("doc_id"), col("category"),
-        explode(array_distinct(tokensCol(col("text")))).as("token"))
+        explode(array_distinct(Dedup.tokensCol(col("text")))).as("token"))
     // same single-pass shape as contingency: n1x = category-sum of n11
     // (one category per doc); eager localCheckpoint for the same
     // pushed-filter-breaks-reuse reason

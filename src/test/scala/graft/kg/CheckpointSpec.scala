@@ -21,6 +21,10 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
     df.select(col("subj"), col("pred"), col("obj")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
 
+  private val stageNames = Set("corpus", "entities", "accounts", "scan", "dictionary",
+    "account_embeddings", "entity_embeddings",
+    "candidates", "alignments", "representatives", "triples", "lineage")
+
   test("full run, then resume-from-scratch-kill, produce identical triples") {
     val root1 = Files.createTempDirectory("kg_run1").toString
     val r1 = Pipeline.run(spark, CorpusGen.Tiny, root1)
@@ -127,12 +131,21 @@ class CheckpointSpec extends AnyFunSuite with SparkTestBase {
       s"stats rows carry a stage data column: ${scanRows.columns.mkString(",")}")
     val cp = Checkpoint.readCheckpoints(spark, root)
     val stages = cp.select(col("stage")).distinct().collect().map(_.getString(0)).toSet
-    assert(stages == Set("corpus", "entities", "accounts", "scan", "dictionary",
-      "account_embeddings", "entity_embeddings",
-      "candidates", "alignments", "representatives", "triples", "lineage"))
+    assert(stages == stageNames)
     // every row: n_rows > 0 somewhere, status done, wall_ms recorded
     assert(cp.filter(col("status") =!= "done").count() == 0)
     assert(cp.groupBy(col("stage")).agg(sum(col("n_rows")).as("n"))
       .filter(col("n") === 0).count() == 0)
+  }
+
+  test("the stage report lists every stage with its parquet's row count") {
+    val root = Files.createTempDirectory("kg_run6").toString
+    Pipeline.run(spark, CorpusGen.Tiny, root)
+    val report = Checkpoint.report(spark, root)
+    assert(report.map(_.stage) == stageNames.toSeq.sorted)
+    for (s <- report) {
+      val written = spark.read.parquet(Checkpoint.stageDir(root, s.stage)).count()
+      assert(s.rows == written, s"${s.stage}: report ${s.rows} rows, parquet $written")
+    }
   }
 }

@@ -5,9 +5,11 @@
 #
 #   tools/cluster_scaling.sh [nFiles] [pair]     pair = 4v16 | 8v32 (default)
 #
-# Protocol per level (matches graft.Scaling's local protocol): one submit =
-# Small warm-up + SCALING_RUNS full-pipeline repeats, min taken; fresh
-# UUID scratch + cache release per repeat, so nothing is reused. The
+# Protocol per level (graft.Scaling cluster: the same timed run and
+# protocol as `Scaling once`, which tools/scaling_pinned.sh runs per local
+# level): one submit = Small warm-up + SCALING_RUNS full-pipeline repeats,
+# min taken; fresh UUID scratch + cache release per repeat, so nothing is
+# reused. The
 # N-executor config runs with the WORKER (and therefore its executor
 # children, which inherit the affinity mask) pinned to exactly N host
 # cores — an unpinned low config free-rides idle host cores for GC/JIT and

@@ -1,9 +1,12 @@
 #!/bin/bash
 # CPU-pinned N-vs-4N scaling evidence (the faithful "N and 4N cores"
-# emulation): each configuration runs in its own JVM pinned with taskset to
-# exactly N cores, so CPU, GC, JIT, and memory bandwidth all scale with the
-# emulated cluster size. An unpinned local[4] borrows all 32 host cores for
-# GC/JIT and memory traffic, deflating T_lo and understating efficiency.
+# emulation), and the only local N-vs-4N protocol: each level is one
+# `graft.Scaling once` JVM (Small warm-up, then min of SCALING_RUNS runs,
+# a fresh session each) pinned with taskset to exactly its cores, so CPU,
+# GC, JIT, and memory bandwidth all scale with the emulated cluster size.
+# Both levels unpinned in one JVM would let the low level borrow the
+# host's idle cores for GC/JIT and memory traffic, deflating T_lo and
+# understating efficiency. The triple counts of the two levels must match.
 #
 # Usage: tools/scaling_pinned.sh [nFiles] [nLo]
 # Appends a row to BENCH/BASELINE.md and prints the JSON verdict.
