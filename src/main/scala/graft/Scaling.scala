@@ -123,8 +123,9 @@ object Scaling {
       // why no mode runs both levels in one unpinned JVM: there local[N]
       // borrows the host's idle cores for GC/JIT, deflating T_N and
       // understating efficiency.
-      // Warm-up run first, a fresh session per run; min of SCALING_RUNS
-      // repeats printed as one JSON line.
+      // One discarded run at the measured scale first (a smaller warm-up
+      // corpus does not warm the measured one), a fresh session per run;
+      // min of SCALING_RUNS repeats printed as one JSON line.
       case Some("once") =>
         val cores = arg(1, 16)
         val nFiles = arg(2, 2000000)
@@ -132,8 +133,9 @@ object Scaling {
           val spark = session(cores)
           try timedRun(spark, scale) finally spark.stop()
         }
-        fresh(CorpusGen.Small) // JIT + codegen warm-up
-        val runs = (1 to repeats).map(_ => fresh(CorpusGen.benchAt(nFiles)))
+        val scale = CorpusGen.benchAt(nFiles)
+        fresh(scale) // JIT + codegen warm-up
+        val runs = (1 to repeats).map(_ => fresh(scale))
         val (t, n, jobs) = runs.minBy(_._1)
         println(s"""{"mode":"once","cores":$cores,"n_files":$nFiles,"sec":$t,"n_triples":$n,"n_jobs":$jobs,"runs":${runs.map(_._1).mkString("[", ",", "]")}}""")
       // TRUE multi-executor evidence (the north rule's literal form: the
@@ -143,8 +145,9 @@ object Scaling {
       // executor is a SEPARATE JVM with its own GC and thread pool: the
       // single-shared-JVM futex churn that swings local[N] runs ±40-60%
       // (BENCH/raw_r5.md forensics) is distributed, as on a real cluster.
-      // Protocol matches `once`: Small warm-up (JIT + codegen on every
-      // executor), then min of SCALING_RUNS full-pipeline repeats; each
+      // Protocol matches `once`: one discarded run at the measured scale
+      // (JIT + codegen on every executor), then min of SCALING_RUNS
+      // full-pipeline repeats; each
       // repeat materializes a fresh UUID scratch scan and releases its
       // caches (Result.unpersist), so nothing is reused across repeats.
       // Usage: spark-submit --master spark://host:7077
@@ -153,8 +156,9 @@ object Scaling {
       case Some("cluster") =>
         val nFiles = arg(1, 2000000)
         val spark = submitted("graft-scaling-cluster")
-        timedRun(spark, CorpusGen.Small)
-        val runs = (1 to repeats).map(_ => timedRun(spark, CorpusGen.benchAt(nFiles)))
+        val scale = CorpusGen.benchAt(nFiles)
+        timedRun(spark, scale) // warm-up
+        val runs = (1 to repeats).map(_ => timedRun(spark, scale))
         val (t, n, _) = runs.minBy(_._1)
         require(runs.map(_._2).distinct.size == 1,
           s"nondeterministic across repeats: ${runs.map(_._2)}")

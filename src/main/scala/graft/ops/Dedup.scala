@@ -1,10 +1,9 @@
 package graft.ops
 
-import scala.reflect.ClassTag
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VectorKernels
@@ -12,8 +11,11 @@ import graft.functions.VectorKernels
 /** Deduplication operators for large-scale training-data pipelines, over a
   * documents(doc_id, text, …) table.
   *
-  * The four near-duplicate families run ONE LSH similarity join,
-  * [[lshJoin]]:
+  * Every pair path is a candidate generator followed by ONE compiled
+  * verify: the payload column is joined to both sides of every candidate
+  * pair and scored by a compiled expression (`sorted_jaccard`,
+  * `cosine_sim`, `bit_count`). The four near-duplicate families generate
+  * their candidates with one LSH similarity join, [[lshJoin]]:
   *
   *   1. band signatures — (doc_id, band_id, band_hash), one compiled
   *      kernel pass per doc (the minhash kernels reproduce Spark's hash
@@ -24,13 +26,17 @@ import graft.functions.VectorKernels
   *      still collides in another band w.h.p.; the cap bounds fan-out to
   *      O(buckets × cap²) instead of O(N²)), then the bucket self-join.
   *      A pair comes out once per band it collides in: no distinct here;
-  *   3. [[sizePrunedPairs]], for the two set families only — the lossless
-  *      set-size-ratio bound on Jaccard;
-  *   4. verify — the payload column is joined to both sides of every band
-  *      pair and scored by a compiled expression; only the pairs whose
-  *      similarity passes are deduplicated. The survivors are at most a
-  *      tenth of the candidates on the docs_dedup benchmark, so the
-  *      distinct's exchange carries them instead of the candidate list.
+  *   3. verify — only the pairs whose similarity passes are deduplicated.
+  *      The survivors are at most a tenth of the candidates on the
+  *      docs_dedup benchmark, so the distinct's exchange carries them
+  *      instead of the candidate list.
+  *
+  * The brute-force ground truths ([[minhashBrute]], [[ngramBrute]],
+  * [[embeddingBrute]]) generate every pair instead, [[bruteJoin]]: a
+  * self-join of the payload frame on `a.id < b.id` and the verify, which
+  * Spark plans as a BroadcastNestedLoopJoin under the broadcast threshold
+  * and a partitioned CartesianProduct above it — nothing is collected to
+  * the driver.
   *
   * A family is then a band function, a payload, a similarity expression
   * and fixed constants (the DuckDB replays in OpsQueries bake the same
@@ -154,15 +160,17 @@ object Dedup {
     Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows))
   }
 
-  /** [[minhashBandMins]] over `nWin` windows given by their FNV-1a hash —
-    * the shared core of the allocation-free shingle and n-gram kernels.
+  /** [[minhashBandMins]] over the `nWin` ASCII byte windows
+    * buf[start(i), end(i)) — the band core of the allocation-free shingle
+    * and n-gram kernels ([[fnvBytes]] of a window ≡ [[fnv1a]] of its
+    * string).
     */
-  private def windowBandMins(nWin: Int, lanes: Int, bands: Int)(
-      windowFnv: Int => Long): Array[Array[Long]] = {
+  private def windowBandMins(buf: Array[Byte], nWin: Int, lanes: Int, bands: Int)(
+      start: Int => Int, end: Int => Int): Array[Array[Long]] = {
     val mins = Array.fill(lanes)(-1L) // unsigned max
     var i = 0
     while (i < nWin) {
-      val f = windowFnv(i)
+      val f = fnvBytes(buf, start(i), end(i))
       var l = 0
       while (l < lanes) {
         val h = graft.kg.CorpusGen.mix(f ^ laneConst(l))
@@ -175,10 +183,10 @@ object Dedup {
     Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows))
   }
 
-  /** Jaccard over SORTED distinct long arrays (merge intersection — the
-    * brute-force all-pairs path hashes each gram to 64 bits once per doc,
-    * then every pair comparison is a primitive merge instead of string-set
-    * hashing; a cross-doc hash collision would need ~2⁶⁴/|grams|² luck).
+  /** Jaccard over SORTED distinct long arrays (merge intersection) — the
+    * scalar reference of the compiled `sorted_jaccard` every set verify
+    * runs (VectorKernelsSpec pins them; a cross-doc hash collision would
+    * need ~2⁶⁴/|grams|² luck).
     */
   def sortedJaccard(a: Array[Long], b: Array[Long]): Double = {
     if (a.length == 0 || b.length == 0) return 0.0
@@ -190,16 +198,6 @@ object Dedup {
     }
     val union = a.length + b.length - inter
     inter.toDouble / union.toDouble
-  }
-
-  /** [[sortedJaccard]] behind the lossless bound of [[sizePrunedPairs]]:
-    * a pair whose set-size ratio is below `t` − 1e-9 can never reach `t`,
-    * so it scores 0 without the O(|A|+|B|) merge.
-    */
-  private def boundedJaccard(t: Double)(a: Array[Long], b: Array[Long]): Double = {
-    val mn = math.min(a.length, b.length).toDouble
-    val mx = math.max(a.length, b.length).toDouble
-    if (mx > 0 && mn / mx >= t - 1e-9) sortedJaccard(a, b) else 0.0
   }
 
   /** Distinct sorted 64-bit hashes of a string set (lane-0 xxhash). */
@@ -223,17 +221,29 @@ object Dedup {
     if (out == hs.length) hs else java.util.Arrays.copyOf(hs, out)
   }
 
+  /** Bit-identical to [[hashedSet]] of the `nWin` ASCII byte windows
+    * buf[start(i), end(i)) as strings: offset XXH64 of each window in
+    * place (byte == char below 0x80), then [[sortedDistinct]] — the set
+    * core of the allocation-free shingle and n-gram kernels.
+    */
+  private def windowHashedSet(buf: Array[Byte], nWin: Int)(
+      start: Int => Int, end: Int => Int): Array[Long] = {
+    val seed = laneSeed(0)
+    val hs = new Array[Long](nWin)
+    var i = 0
+    while (i < nWin) {
+      val s = start(i)
+      hs(i) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET + s, end(i) - s, seed)
+      i += 1
+    }
+    sortedDistinct(hs)
+  }
+
   /** Primitive float[] view of a UDF's Seq[Float] input (avoids per-element
-    * boxing in the hot verify loops).
+    * boxing in the embedding band kernel).
     */
   def floatArr(s: Seq[Float]): Array[Float] = s match {
     case a: scala.collection.immutable.ArraySeq.ofFloat => a.unsafeArray
-    case null => Array.empty
-    case other => other.toArray
-  }
-
-  def longArr(s: Seq[Long]): Array[Long] = s match {
-    case a: scala.collection.immutable.ArraySeq.ofLong => a.unsafeArray
     case null => Array.empty
     case other => other.toArray
   }
@@ -285,32 +295,6 @@ object Dedup {
   def candidatePairs(sigs: DataFrame, bucketCap: Int): DataFrame =
     bandPairs(sigs, bucketCap).distinct()
 
-  /** Lossless size-ratio prune for set-Jaccard candidate pairs:
-    * J(A,B) = |A∩B| / |A∪B| ≤ min(|A|,|B|) / max(|A|,|B|), so a pair whose
-    * set-size ratio is below the threshold can NEVER verify — drop it
-    * before the array join. The pairs it sees are band pairs, repeated
-    * once per shared band: on the docs_dedup benchmark the ngram family
-    * emits 1.32–1.34× its distinct candidate count, and the size join carries
-    * one int per doc where the verify join would carry both gram arrays
-    * of every one of those rows. The 1e-9 slack keeps a pair
-    * exactly AT the threshold from being lost to float rounding of the
-    * ratio (the verify's own inter/union division is 1-ulp exact, so
-    * nothing below threshold−1e-9 can round up to ≥ threshold). No
-    * broadcast hint: sizes is O(docs) — unbounded at corpus scale — and
-    * the pair ids shuffle narrowly either way; AQE picks the strategy
-    * that fits at runtime.
-    */
-  private def sizePrunedPairs(pairs: DataFrame, sets: DataFrame,
-      setCol: String, threshold: Double): DataFrame = {
-    val sizes = sets.select(col("doc_id"), size(col(setCol)).as("sz"))
-    pairs
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
-      .filter(least(col("sz_a"), col("sz_b")).cast("double") /
-        greatest(col("sz_a"), col("sz_b")).cast("double") >= lit(threshold - 1e-9))
-      .select(col("doc_a"), col("doc_b"))
-  }
-
   /** Buckets dropped by `bucketCap` (diagnostic surface — "no silent caps"):
     * (band_id, band_hash, bucket_sz) for every hot bucket.
     */
@@ -319,12 +303,24 @@ object Dedup {
       .agg(count(lit(1)).as("bucket_sz"))
       .filter(col("bucket_sz") > bucketCap)
 
+  /** The verify every pair path runs: `payload` of `rows` (doc_id, …) is
+    * joined to both sides of each pair `join` generates from the two
+    * payload sides (doc_a, p_a) and (doc_b, p_b), scored by the compiled
+    * `sim` and kept where `keep` passes. Returns (doc_a, doc_b, score).
+    */
+  private def verified(rows: DataFrame, payload: Column)(
+      join: (DataFrame, DataFrame) => DataFrame)(
+      sim: (Column, Column) => Column, keep: Column => Column): DataFrame = {
+    val pay = rows.select(col("doc_id"), payload.as("p"))
+    def side(s: String) = pay.select(col("doc_id").as(s"doc_$s"), col("p").as(s"p_$s"))
+    join(side("a"), side("b"))
+      .withColumn("score", sim(col("p_a"), col("p_b")))
+      .filter(keep(col("score")))
+      .select(col("doc_a"), col("doc_b"), col("score"))
+  }
+
   /** The LSH similarity join every near-dup family runs: the band pairs
-    * of `sigs` under `cap`, the [[sizePrunedPairs]] bound when `minRatio`
-    * is set (set payloads only), then the verify: `payload` of `rows`
-    * (doc_id, …) is joined to both sides of each band pair, and the
-    * distinct pairs whose `sim` passes `keep` are returned as
-    * (doc_a, doc_b, score).
+    * of `sigs` under `cap`, [[verified]], and a distinct of the survivors.
     *
     * The distinct runs on the survivors, not the candidates: a pair that
     * collides in k bands is scored k times (1.05× to 1.34× the distinct
@@ -333,63 +329,31 @@ object Dedup {
     * for 731 survivors in the embedding family there). The score is a
     * function of the pair, so the repeated rows are identical. Neither the
     * pairs nor the payload are checkpointed: the payload kernel runs once
-    * for the size prune and once for the verify (each join's two sides
-    * share one exchange), which measured cheaper than storing the payload.
+    * per document (the two payload joins share one exchange), which
+    * measured cheaper than storing the payload.
     */
-  private def lshJoin(rows: DataFrame, sigs: DataFrame, cap: Int, payload: Column,
-      minRatio: Option[Double])(sim: (Column, Column) => Column,
-      keep: Column => Column): DataFrame = {
-    val pairs = bandPairs(sigs, cap)
-    val pay = rows.select(col("doc_id"), payload.as("p"))
-    minRatio.fold(pairs)(sizePrunedPairs(pairs, pay, "p", _))
-      .join(pay.select(col("doc_id").as("doc_a"), col("p").as("p_a")), Seq("doc_a"))
-      .join(pay.select(col("doc_id").as("doc_b"), col("p").as("p_b")), Seq("doc_b"))
-      .withColumn("score", sim(col("p_a"), col("p_b")))
-      .filter(keep(col("score")))
-      .select(col("doc_a"), col("doc_b"), col("score"))
+  private def lshJoin(rows: DataFrame, sigs: DataFrame, cap: Int, payload: Column)(
+      sim: (Column, Column) => Column, keep: Column => Column): DataFrame =
+    verified(rows, payload)((a, b) =>
+      bandPairs(sigs, cap).join(a, Seq("doc_a")).join(b, Seq("doc_b")))(sim, keep)
       .distinct()
-  }
 
-  /** All-pairs brute force over a SMALL (id, payload) table WITHOUT
-    * materializing pair rows: the whole table is broadcast as plain
-    * arrays, each row flatMaps its matches (`sim` ≥ threshold) against the
-    * broadcast copy — the cross product exists only inside the compiled
-    * loop, never as joined rows carrying both payloads. Returns
-    * (outA, outB, simName) with outA < outB.
+  /** The all-pairs ground truth: [[verified]] on every pair doc_a < doc_b,
+    * a self-join of the payload frame with the verify in its condition.
+    * No hint: Spark plans a BroadcastNestedLoopJoin under the broadcast
+    * threshold and a partitioned CartesianProduct above it.
     */
-  private def bruteMatches[P: ClassTag](rows: DataFrame, read: Row => P,
-      threshold: Double, outA: String, outB: String, simName: String)(
-      sim: (P, P) => Double): DataFrame = {
-    val sorted = rows.collect().sortBy(_.getLong(0))
-    val bc = rows.sparkSession.sparkContext.broadcast(
-      (sorted.map(_.getLong(0)), sorted.map(read)))
-    // the probe takes ONLY the id and finds the row's own payload in the
-    // sorted broadcast — passing the payload as a column forced its UDF to
-    // evaluate a SECOND time in the distributed plan (once for the driver
-    // collect above, once per probe row); id-only lets Catalyst prune it
-    // from the probe side entirely. ids are sorted and distinct, so the
-    // partners with a larger id are the suffix after the own index.
-    val matchUdf = udf((id: Long) => {
-      val (ids, pays) = bc.value
-      val out = Seq.newBuilder[(Long, Double)]
-      val idx = java.util.Arrays.binarySearch(ids, id)
-      var i = idx + 1
-      while (idx >= 0 && i < ids.length) {
-        val s = sim(pays(idx), pays(i))
-        if (s >= threshold) out += ((ids(i), s))
-        i += 1
-      }
-      out.result()
-    })
-    val id = col(rows.columns(0))
-    rows.select(id.as(outA), explode(matchUdf(id)).as("m"))
-      .select(col(outA), col("m._1").as(outB), round(col("m._2"), 4).as(simName))
-  }
+  private def bruteJoin(rows: DataFrame, payload: Column)(
+      sim: (Column, Column) => Column, keep: Column => Column): DataFrame =
+    verified(rows, payload)((a, b) => a.join(b, col("doc_a") < col("doc_b")))(sim, keep)
 
-  /** Exact all-pairs Jaccard ≥ `t` over a SMALL (doc_id, hashed set) table. */
-  private def jaccardBrute(sets: DataFrame, t: Double): DataFrame =
-    bruteMatches(sets, r => longArr(r.getSeq[Long](1)), t, "doc_a", "doc_b", "jaccard")(
-      boundedJaccard(t))
+  /** A set family's verified pairs as (doc_a, doc_b, jaccard): the score
+    * rounded to 4 places, the pairs passed on the unrounded Jaccard.
+    */
+  private def jaccardCols(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a"), col("doc_b"), round(col("score"), 4).as("jaccard"))
+
+  private val jaccard: (Column, Column) => Column = VectorKernels.sortedJaccard(_, _)
 
   /** (rep_id, doc_id) exact-dup group mapping. Built from a (doc_id, sha)
     * PROJECTION so the groupBy/join shuffles carry only id/sha columns —
@@ -439,16 +403,13 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** A set family's near-dups: [[lshJoin]] with the size prune and a
-    * Jaccard verify, inside the exact pre-pass. Returns
-    * (doc_a, doc_b, jaccard), doc_a < doc_b.
+  /** A set family's near-dups: [[lshJoin]] with a Jaccard verify, inside
+    * the exact pre-pass. Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
     */
   private def jaccardNearDups(docs: DataFrame, bands: DataFrame => DataFrame,
       set: Column, threshold: Double): DataFrame =
     withExactPrepass(docs, "jaccard", lit(1.0))(d =>
-      lshJoin(d, bands(d), SetBucketCap, set, Some(threshold))(
-        VectorKernels.sortedJaccard(_, _), _ >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("score"), 4).as("jaccard")))
+      jaccardCols(lshJoin(d, bands(d), SetBucketCap, set)(jaccard, _ >= threshold)))
 
   // ---------------------------------------------------------------- minhash
 
@@ -462,10 +423,17 @@ object Dedup {
     * because the separators in the buffer are exactly the single spaces
     * `mkString(" ")` would insert. Returns null when any char ≥ 0x80
     * (String.toLowerCase is locale/length-unstable outside ASCII — callers
-    * fall back to the String pipeline, same policy as [[normChars]]).
+    * fall back to the String pipeline, same policy as [[asciiNormBytes]]).
     */
   private final class TokenStream(val buf: Array[Byte], val starts: Array[Int],
-      val ends: Array[Int], val n: Int)
+      val ends: Array[Int], val n: Int) {
+    /** The k-shingle windows: a <k-token (or zero-token) doc is the one
+      * whole-stream shingle, mirroring tokenShingles' mkString fallback.
+      */
+    def shingles(k: Int): Int = if (n < k) 1 else n - k + 1
+    def start(k: Int)(i: Int): Int = starts(if (n < k) 0 else i)
+    def end(k: Int)(i: Int): Int = ends(if (n < k) math.max(n - 1, 0) else i + k - 1)
+  }
 
   private def asciiTokenStream(text: String): TokenStream = {
     val t = if (text == null) "" else text
@@ -512,15 +480,6 @@ object Dedup {
     h
   }
 
-  /** Shingle (i, k) byte range [start, end) in a token stream; the <k-token
-    * (or zero-token) doc collapses to the single whole-stream shingle,
-    * mirroring tokenShingles' mkString fallback.
-    */
-  @inline private def shingleRange(ts: TokenStream, i: Int, k: Int): (Int, Int) =
-    if (ts.n == 0) (0, 0)
-    else if (ts.n < k) (ts.starts(0), ts.ends(ts.n - 1))
-    else (ts.starts(i), ts.ends(i + k - 1))
-
   /** Bit-identical to `minhashBandMins(tokenShingles(tokensOf(text), k),
     * lanes, bands)` with zero per-token/per-shingle allocation: FNV-1a
     * runs over contiguous byte windows of the token stream (duplicates
@@ -529,28 +488,17 @@ object Dedup {
   def shingleBandMinsOf(text: String, k: Int, lanes: Int, bands: Int): Array[Array[Long]] = {
     val ts = asciiTokenStream(text)
     if (ts == null) return minhashBandMins(tokenShingles(tokensOf(text), k), lanes, bands)
-    windowBandMins(if (ts.n < k) 1 else ts.n - k + 1, lanes, bands) { i =>
-      val (s, e) = shingleRange(ts, i, k)
-      fnvBytes(ts.buf, s, e)
-    }
+    windowBandMins(ts.buf, ts.shingles(k), lanes, bands)(ts.start(k), ts.end(k))
   }
 
   /** Bit-identical to `hashedSet(tokenShingles(tokensOf(text), k))`:
-    * offset XXH64 over the shingles' contiguous byte windows, then
-    * [[sortedDistinct]]. Property-pinned by ShingleKernelSpec.
+    * [[windowHashedSet]] over the shingles' contiguous byte windows.
+    * Property-pinned by ShingleKernelSpec.
     */
   def shingleHashedSetOf(text: String, k: Int): Array[Long] = {
     val ts = asciiTokenStream(text)
     if (ts == null) return hashedSet(tokenShingles(tokensOf(text), k))
-    val hs = new Array[Long](if (ts.n < k) 1 else ts.n - k + 1)
-    var i = 0
-    while (i < hs.length) {
-      val (s, e) = shingleRange(ts, i, k)
-      hs(i) = XXH64.hashUnsafeBytes(ts.buf,
-        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + s, e - s, laneSeed(0))
-      i += 1
-    }
-    sortedDistinct(hs)
+    windowHashedSet(ts.buf, ts.shingles(k))(ts.start(k), ts.end(k))
   }
 
   /** signatures(doc_id, band_id, band_hash: array<long>): H minhash lanes
@@ -578,7 +526,7 @@ object Dedup {
     * (recall specs + the DuckDB oracle for the exact-verify stage).
     */
   def minhashBrute(docs: DataFrame): DataFrame =
-    jaccardBrute(docs.select(col("doc_id"), shingleSetUdf(col("text"))), MinhashThreshold)
+    jaccardCols(bruteJoin(docs, shingleSetUdf(col("text")))(jaccard, _ >= MinhashThreshold))
 
   // ---------------------------------------------------------------- simhash
 
@@ -614,7 +562,7 @@ object Dedup {
         .as(Seq("band_id", "band_hash")))
     withExactPrepass(docs, "hamming", lit(0)) { d =>
       val sims = d.select(col("doc_id"), simhashUdf(tokensCol(col("text"))).as("sim"))
-      lshJoin(sims, bands(sims), SimBucketCap, col("sim"), None)(
+      lshJoin(sims, bands(sims), SimBucketCap, col("sim"))(
         (a, b) => bit_count(a.bitwiseXOR(b)), _ <= MaxHamming)
         .withColumnRenamed("score", "hamming")
     }
@@ -649,96 +597,58 @@ object Dedup {
   private def isRegexWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** Normalized chars of `text` as (buffer, length) — bit-identical to
-    * [[normText]] but one allocation-free pass for ASCII inputs
-    * (lowercase, collapse regex-\s runs to one space, trim). Any char
-    * ≥ 0x80 falls back to the String pipeline: String.toLowerCase is
-    * locale- and length-unstable outside ASCII (Turkish dotted I, ß→ss
-    * never, İ→i+combining dot) and Java's \s is ASCII-only, so the
-    * per-char form is exact ONLY below 0x80. NgramKernelSpec
-    * property-pins the equality, non-ASCII and whitespace runs included.
+  /** [[normText]] of `text` as ASCII bytes, in one pass (lowercase,
+    * collapse regex-\s runs to one space, trim), or null when any char is
+    * ≥ 0x80: String.toLowerCase is locale- and length-unstable outside
+    * ASCII (Turkish dotted I, İ→i+combining dot) and Java's \s is
+    * ASCII-only, so the per-char form is exact ONLY below 0x80 — callers
+    * fall back to [[charGrams]], as the shingle kernels fall back to
+    * [[tokenShingles]]. NgramKernelSpec property-pins the kernels,
+    * non-ASCII and whitespace runs included.
     */
-  private[ops] def normChars(text: String): (Array[Char], Int) = {
-    if (text == null) return (Array.emptyCharArray, 0)
-    val L = text.length
-    var ascii = true
-    var i = 0
-    while (ascii && i < L) { if (text.charAt(i) >= 0x80) ascii = false; i += 1 }
-    if (!ascii) { val s = normText(text); return (s.toCharArray, s.length) }
-    val out = new Array[Char](L)
+  private def asciiNormBytes(text: String): Array[Byte] = {
+    val t = if (text == null) "" else text
+    val out = new Array[Byte](t.length)
     var len = 0
     var pendingSpace = false
-    i = 0
-    while (i < L) {
-      val c = text.charAt(i)
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (c >= 0x80) return null
       if (isRegexWs(c)) pendingSpace = len > 0 // a leading run is trimmed
       else {
         if (pendingSpace) { out(len) = ' '; len += 1; pendingSpace = false }
-        out(len) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+        out(len) = (if (c >= 'A' && c <= 'Z') c + 32 else c).toByte
         len += 1
       }
       i += 1
     } // a trailing whitespace run leaves pendingSpace set and unflushed = trim
-    (out, len)
-  }
-
-  /** FNV-1a 64 over chars [start, end) — ≡ `fnv1a(s.substring(start, end))`
-    * without the substring.
-    */
-  private def fnvWindow(cs: Array[Char], start: Int, end: Int): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = start
-    while (i < end) { h ^= cs(i).toLong; h *= 0x100000001b3L; i += 1 }
-    h
+    if (len == out.length) out else java.util.Arrays.copyOf(out, len)
   }
 
   /** Bit-identical to `minhashBandMins(charGrams(text, n), lanes, bands)`
-    * with zero per-gram allocation: FNV-1a runs over char windows of the
-    * normalized text in place (FNV over substring chars ≡ FNV over the
-    * window), and duplicate grams are not deduped because a duplicate
-    * cannot change a lane MIN — charGrams' LinkedHashSet existed only to
-    * shrink the gram array it materialized. Property-pinned by
-    * NgramKernelSpec.
+    * with zero per-gram allocation: [[windowBandMins]] over the n-byte
+    * windows of the normalized text (a text shorter than n is the one
+    * whole-text gram). Duplicate grams are not deduped: a duplicate cannot
+    * change a lane MIN. Property-pinned by NgramKernelSpec.
     */
   def ngramBandMinsOf(text: String, n: Int, lanes: Int, bands: Int): Array[Array[Long]] = {
-    val (cs, len) = normChars(text)
-    val w = if (len < n) len else n // <n chars → the single whole-text gram
-    windowBandMins(if (len < n) 1 else len - n + 1, lanes, bands)(s => fnvWindow(cs, s, s + w))
+    val buf = asciiNormBytes(text)
+    if (buf == null) return minhashBandMins(charGrams(text, n), lanes, bands)
+    val w = math.min(buf.length, n)
+    windowBandMins(buf, math.max(buf.length - n + 1, 1), lanes, bands)(s => s, _ + w)
   }
 
-  /** Bit-identical to `hashedSet(charGrams(text, n))` (DISTINCT sorted
-    * lane-0 XXH64 gram hashes) without per-gram substring/UTF8String
-    * churn: an all-ASCII normalized text is UTF-8-encoded ONCE (byte ==
-    * char below 0x80) and every window hashes in place via
-    * XXH64.hashUnsafeBytes at an offset; any char ≥ 0x80 falls back to
-    * per-window strings (window UTF-8 splicing is not surrogate-safe).
-    * [[sortedDistinct]] ≡ `.distinct` + sort on the hash values — the
-    * original dedupes AFTER hashing too, so hash-value identity is the
-    * exact invariant either way. Property-pinned by NgramKernelSpec.
+  /** Bit-identical to `hashedSet(charGrams(text, n))`: [[windowHashedSet]]
+    * over the same windows as [[ngramBandMinsOf]]. charGrams dedupes the
+    * gram strings and hashedSet the hashes; [[sortedDistinct]] dedupes the
+    * hashes, which yields the same set. Property-pinned by NgramKernelSpec.
     */
   def ngramHashedSetOf(text: String, n: Int): Array[Long] = {
-    val (cs, len) = normChars(text)
-    val w = if (len < n) len else n
-    val nWin = if (len < n) 1 else len - n + 1
-    val hs = new Array[Long](nWin)
-    var ascii = true
-    var i = 0
-    while (ascii && i < len) { if (cs(i) >= 0x80) ascii = false; i += 1 }
-    if (ascii) {
-      val bytes = new Array[Byte](len)
-      i = 0
-      while (i < len) { bytes(i) = cs(i).toByte; i += 1 }
-      var s = 0
-      while (s < nWin) {
-        hs(s) = XXH64.hashUnsafeBytes(bytes,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + s, w, laneSeed(0))
-        s += 1
-      }
-    } else {
-      var s = 0
-      while (s < nWin) { hs(s) = xxLane(0, new String(cs, s, w)); s += 1 }
-    }
-    sortedDistinct(hs)
+    val buf = asciiNormBytes(text)
+    if (buf == null) return hashedSet(charGrams(text, n))
+    val w = math.min(buf.length, n)
+    windowHashedSet(buf, math.max(buf.length - n + 1, 1))(s => s, _ + w)
   }
 
   /** signatures(doc_id, band_id, band_hash) over character-n-gram sets. */
@@ -763,7 +673,7 @@ object Dedup {
 
   /** Exact all-pairs n-gram Jaccard ≥ 0.8 over a SMALL doc set (ground truth). */
   def ngramBrute(docs: DataFrame): DataFrame =
-    jaccardBrute(docs.select(col("doc_id"), ngramSetUdf(col("text"))), NgramThreshold)
+    jaccardCols(bruteJoin(docs, ngramSetUdf(col("text")))(jaccard, _ >= NgramThreshold))
 
   // ---------------------------------------------------------------- embedding
 
@@ -877,10 +787,15 @@ object Dedup {
     val tables = if (tablesOverride > 0) tablesOverride else tablesFor(planes, threshold)
     val sigs = embeddingBands(embs, -1L, EmbDim, tables, planes)
       .select(col("vec_id").as("doc_id"), col("table_id").as("band_id"), col("bits").as("band_hash"))
-    lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, EmbBucketCap,
-        col("embedding"), None)(embeddingCosine, _ >= threshold)
-      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), round(col("score"), 4).as("cos"))
+    cosCols(lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, EmbBucketCap,
+      col("embedding"))(embeddingCosine, _ >= threshold))
   }
+
+  /** An embedding family's verified pairs as (vec_a, vec_b, cos), the
+    * score rounded to 4 places.
+    */
+  private def cosCols(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), round(col("score"), 4).as("cos"))
 
   /** Near-dup CLUSTERS from a pair list: connected components over the
     * pair graph, every member mapped to its cluster representative (the
@@ -895,8 +810,11 @@ object Dedup {
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
       .select(col("node").as("doc_id"), col("comp").as("cluster_rep"))
 
-  /** Exact all-pairs cosine ≥ threshold (ground truth for recall specs). */
+  /** Exact all-pairs cosine ≥ threshold (ground truth for recall specs):
+    * the compiled [[embeddingCosine]], so, like the LSH verify, a pair of
+    * vectors of unequal lengths scores 0.0 (no prefix cosine).
+    */
   def embeddingBrute(embs: DataFrame, threshold: Double = 0.35): DataFrame =
-    bruteMatches(embs.select(col("vec_id"), col("embedding")),
-      r => floatArr(r.getSeq[Float](1)), threshold, "vec_a", "vec_b", "cos")(cosineArr)
+    cosCols(bruteJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), col("embedding"))(
+      embeddingCosine, _ >= threshold))
 }

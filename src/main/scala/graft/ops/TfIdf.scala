@@ -107,36 +107,18 @@ object TfIdf {
 
   /** χ² score of (token, category) association over a docs(doc_id, text,
     * category) table — A14 feature selection (ChiSquared.java:10).
-    * Standard 2×2 χ² with the observed/expected contingency counts.
+    * Standard 2×2 χ² over the [[contingency]] counts.
     */
   def chiSquared(docs: DataFrame, minCount: Long = 5): DataFrame = {
-    // N folded into the lazy plan (1-row aggregate broadcast-crossed) —
-    // no driver-side count() job; count→double cast yields the identical
-    // double the old lit(n) carried
-    val nDf = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val tokDocs = docs
-      .select(col("doc_id"), col("category"),
-        explode(array_distinct(Dedup.tokensCol(col("text")))).as("token"))
-    // same single-pass shape as contingency: n1x = category-sum of n11
-    // (one category per doc); eager localCheckpoint for the same
-    // pushed-filter-breaks-reuse reason
-    val tokCatAll = tokDocs.groupBy(col("token"), col("category"))
-      .agg(count(lit(1)).as("n11"))
-      .localCheckpoint(true)
-    val tokCat = tokCatAll.filter(col("n11") >= minCount)
-    val tokTotal = tokCatAll.groupBy(col("token")).agg(sum(col("n11")).as("n1x"))
-    val catTotal = docs.groupBy(col("category")).agg(count(lit(1)).as("nx1"))
-    val n = col("n_docs")
-    tokCat
-      .join(broadcast(tokTotal), Seq("token"))
-      .join(broadcast(catTotal), Seq("category"))
-      .crossJoin(broadcast(nDf))
-      .withColumn("n10", col("n1x") - col("n11"))
-      .withColumn("n01", col("nx1") - col("n11"))
-      .withColumn("n00", n - col("n1x") - col("n01"))
-      .withColumn("chi2", round(
-        n * pow(col("n11") * col("n00") - col("n10") * col("n01"), 2) /
-          (col("n1x") * (n - col("n1x")) * col("nx1") * (n - col("nx1"))), 4))
-      .select(col("token"), col("category"), col("n11"), col("chi2"))
+    // n11 = A, n10 = B, n01 = C, n00 = D, with N and D cast to double
+    // (exact: every count is below 2⁵³) and the terms in the order of
+    // the text_chi2 replay's formula
+    val n = col("n_total").cast("double")
+    val n1x = col("a") + col("b")
+    val nx1 = col("a") + col("c")
+    contingency(docs, minCount)
+      .select(col("token"), col("category"), col("a").as("n11"), round(
+        n * pow(col("a") * col("d").cast("double") - col("b") * col("c"), 2) /
+          (n1x * (n - n1x) * nx1 * (n - nx1)), 4).as("chi2"))
   }
 }

@@ -332,6 +332,79 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", wasAqe)
   }
 
+  /** Runs `body` with the given SQL confs set, restoring them after. */
+  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val was = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally was.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("set-family LSH plans evaluate the set kernel in one exchange subtree, with no size prune") {
+    // the payload kernel runs once per document: both payload joins of the
+    // verify share one exchange, and no set-size join evaluates it again
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF, Size}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      val d = docsDf((1L to 20L).map(i => i -> s"text body ${i % 7} and more words $i"))
+      def setKernel(e: Expression) = e.exists {
+        case u: ScalaUDF => u.dataType match {
+          case ArrayType(LongType, _) => true
+          case _ => false
+        }
+        case _ => false
+      }
+      // the nodes of one stage: `p` and its descendants up to the next exchange
+      def stage(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap {
+        case _: Exchange => Nil
+        case c => stage(c)
+      }
+      Seq("minhash" -> Dedup.minhashNearDups(d), "ngram" -> Dedup.ngramJaccard(d)).foreach {
+        case (f, df) =>
+          val plan = df.queryExecution.executedPlan
+          val sizes = plan.collect { case p if p.expressions.exists(_.exists(_.isInstanceOf[Size])) => p }
+          assert(sizes.isEmpty, s"$f: a size( runs in\n$plan")
+          val roots = plan +: plan.collect { case e: Exchange => e.child }
+          val evaluating = roots.count(r => stage(r).exists(_.expressions.exists(setKernel)))
+          assert(evaluating == 1, s"$f: the set kernel runs in $evaluating stages of\n$plan")
+      }
+    }
+  }
+
+  test("brute-force plans are a nested-loop or cartesian self-join at any broadcast threshold") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import spark.implicits._
+    // repeated token cycles and scaled vectors: near-dups in every family
+    val d = docsDf(for (g <- 0 until 4; r <- 2 to 4) yield (g * 10L + r) ->
+      Seq.fill(r)((0 until 30).map(i => s"g${g}w$i").mkString(" ")).mkString(" "))
+    val e = (for (g <- 0 until 5; (k, sc) <- Seq(0 -> 1f, 1 -> 2f, 2 -> 0.5f)) yield
+      (g * 10L + k, Array.tabulate(64)(i => math.sin(i * (0.3 + g) + g).toFloat * sc)))
+      .toDF("vec_id", "embedding")
+    def brutes() = Seq("minhash" -> Dedup.minhashBrute(d), "ngram" -> Dedup.ngramBrute(d),
+      "embedding" -> Dedup.embeddingBrute(e))
+    def rows() = brutes().map { case (f, df) => f -> df.collect().map(_.toSeq).toSet }.toMap
+    def joins(expect: SparkPlan => Boolean) =
+      withConfs("spark.sql.adaptive.enabled" -> "false") {
+        brutes().foreach { case (f, df) =>
+          val plan = df.queryExecution.executedPlan
+          assert(plan.collect { case j if expect(j) => j }.nonEmpty, s"$f:\n$plan")
+          assert(plan.collect { case g: GenerateExec => g }.isEmpty, s"$f: a generator in\n$plan")
+        }
+      }
+    val atDefault = rows()
+    atDefault.foreach { case (f, r) => assert(r.nonEmpty, s"$f: no pairs") }
+    joins(_.isInstanceOf[BroadcastNestedLoopJoinExec])
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      joins(_.isInstanceOf[CartesianProductExec])
+      assert(rows() == atDefault)
+    }
+  }
+
   test("IVF ANN achieves decent recall vs brute force on real embeddings") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = e.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding"))

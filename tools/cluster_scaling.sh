@@ -7,9 +7,9 @@
 #
 # Protocol per level (graft.Scaling cluster: the same timed run and
 # protocol as `Scaling once`, which tools/scaling_pinned.sh runs per local
-# level): one submit = Small warm-up + SCALING_RUNS full-pipeline repeats,
-# min taken; fresh UUID scratch + cache release per repeat, so nothing is
-# reused. The
+# level): one submit = one discarded run at the measured scale +
+# SCALING_RUNS full-pipeline repeats, min taken; fresh UUID scratch + cache
+# release per repeat, so nothing is reused. The
 # N-executor config runs with the WORKER (and therefore its executor
 # children, which inherit the affinity mask) pinned to exactly N host
 # cores — an unpinned low config free-rides idle host cores for GC/JIT and
@@ -33,7 +33,7 @@ submit() { # submit <totalCores>
   # the dominant noise source (BENCH/raw_r5.md addendum 18: fresh-page
   # materialization collapses to ~100-170 MiB/s under concurrent
   # in-process faulting). Pre-touch moves the fault storm to executor
-  # startup, which the Small warm-up run absorbs before anything is timed.
+  # startup, which the discarded warm-up run absorbs before anything is timed.
   /opt/spark/bin/spark-submit \
     --master spark://localhost:7077 \
     --driver-memory 16g \

@@ -1,8 +1,8 @@
 #!/bin/bash
 # CPU-pinned N-vs-4N scaling evidence (the faithful "N and 4N cores"
 # emulation), and the only local N-vs-4N protocol: each level is one
-# `graft.Scaling once` JVM (Small warm-up, then min of SCALING_RUNS runs,
-# a fresh session each) pinned with taskset to exactly its cores, so CPU,
+# `graft.Scaling once` JVM (one discarded run at the measured scale, then
+# min of SCALING_RUNS runs, a fresh session each) pinned with taskset to exactly its cores, so CPU,
 # GC, JIT, and memory bandwidth all scale with the emulated cluster size.
 # Both levels unpinned in one JVM would let the low level borrow the
 # host's idle cores for GC/JIT and memory traffic, deflating T_lo and
@@ -17,6 +17,7 @@ NFILES=${1:-2000000}
 NLO=${2:-4}
 NHI=$((4 * NLO))
 RUNS=${SCALING_RUNS:-2}
+mkdir -p target # the per-level logs go here; a fresh checkout has none yet
 
 run_once() { # cores -> prints seconds (min of RUNS, warm JVM)
   local cores=$1
