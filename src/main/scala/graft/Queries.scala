@@ -273,8 +273,8 @@ object Queries {
     """SELECT n_name, levenshtein(n_name, 'ARGENTINA') AS dist
       |FROM nation ORDER BY n_name""".stripMargin
 
-  /** F4: Jaro-Winkler via the custom codegen Catalyst expression
-    * (graft.functions.JaroWinklerExpr) — DuckDB's jaro_winkler_similarity
+  /** F4: Jaro-Winkler via the compiled kernel call
+    * (graft.functions.JaroWinkler) — DuckDB's jaro_winkler_similarity
     * uses the same textbook formulation (0.7 boost threshold, p=0.1).
     */
   val f4JaroWinkler: Q = (s, dir) =>

@@ -1,46 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
-/** Jaro-Winkler similarity as a native Catalyst expression WITH codegen
-  * (SURVEY §2.3 F4 / §4: the one function where a custom Expression is
-  * justified — it sits in the per-candidate scoring hot path).
-  *
-  * `doGenCode` emits a direct static call into the shared scalar
-  * implementation (graft.kg.Text.jaroWinkler), so the expression stays
-  * inside WholeStageCodegen with no UDF serialization overhead, while the
-  * scalar oracle uses the SAME function → bitwise-identical scores.
+/** Jaro-Winkler similarity (SURVEY §2.3 F4) as a compiled static call into
+  * the shared scalar implementation (graft.kg.Text.jaroWinkler via
+  * VectorKernels.jaroWinkler): it stays inside WholeStageCodegen with no
+  * UDF serialization, while the scalar oracle runs the SAME function →
+  * bitwise-identical scores. A null side gives null.
   */
-case class JaroWinklerExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaro_winkler"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.kg.Text.jaroWinkler(a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.kg.Text$$.MODULE$$.jaroWinkler($a.toString(), $b.toString())")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
 object JaroWinkler {
   /** Column API: jaro_winkler(a, b) ∈ [0,1]. */
   def jaroWinkler(a: Column, b: Column): Column =
-    GraftBridge.column(JaroWinklerExpr(GraftBridge.expression(a),
-      GraftBridge.expression(b)))
+    VectorKernels.invoke("jaroWinkler", DoubleType, Seq(a, b), Seq(StringType, StringType))
 
   /** Register as a SQL function: SELECT jaro_winkler(a, b) ... */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerExpr(exprs(0), exprs(1)), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction("jaro_winkler",
+      exprs => GraftBridge.expression(
+        jaroWinkler(GraftBridge.column(exprs(0)), GraftBridge.column(exprs(1)))),
+      "scala_udf")
 }

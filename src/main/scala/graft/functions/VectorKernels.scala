@@ -1,21 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.functions.{coalesce, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen kernels for the three vector folds that sit on the
-  * per-pair frame — the widest rows of the whole pipeline (one row per
-  * candidate pair, each carrying two tvec entry arrays and two embedding
-  * arrays).
+/** Compiled kernels for the per-pair feature folds of the scorer (name
+  * similarity, TF-IDF cosine, embedding cosine), the dim-table folds of
+  * Features (entry norm, weighted neighbour average), the near-dup verify
+  * of ops.Dedup (sorted-set Jaccard, embedding cosine) and Jaro-Winkler.
   *
-  * Why expressions and not the previous formulations:
+  * Why kernels and not the previous formulations:
   *   - text_cos was a Scala UDF over Seq[Row]: every evaluation converted
   *     both entry arrays through CatalystTypeConverters — one
   *     GenericRowWithSchema + two boxed fields PER ENTRY per pair.
@@ -25,12 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     and box every intermediate accumulator.
   *   - the near-dup LSH verify (ops.Dedup) scored hashed-set Jaccard and
   *     embedding cosine with Scala UDFs over Seq[Long]/Seq[Float]: a boxed
-  *     conversion of both arrays per candidate pair. It now runs
-  *     sorted_jaccard and cosine_sim.
+  *     conversion of both arrays per candidate pair.
   * Each kernel below is a single static method over the unsafe ArrayData
   * (no per-element materialization beyond an UnsafeRow view for struct
-  * entries), called from both `eval` and `doGenCode`, so the projection
-  * stays inside WholeStageCodegen.
+  * entries). The Column API calls it through Spark's `StaticInvoke`: one
+  * static call per row inside WholeStageCodegen, a reflective call when
+  * codegen is off, null in → null out, and `inputTypes` checks (or
+  * exactly widens, e.g. float → double) each argument's layout at
+  * analysis, so a kernel never decodes a layout it does not read.
   *
   * Bit-exactness: every fold visits elements in exactly the order of the
   * formulation it replaces (ascending index / ascending-hash merge), and
@@ -76,35 +75,32 @@ object VectorKernels {
     s / n.toDouble
   }
 
-  /** One-pass cosine over two numeric arrays (double or float elements,
-    * floats widened exactly like the retired formulation's cast). The three
-    * accumulators are summed independently in ascending index order, so
-    * each is IEEE-identical to its old separate `aggregate` fold.
+  /** One-pass cosine over two array<double> (float callers are widened
+    * exactly, by the analyzer or once per row of their own frame). The
+    * three accumulators are summed independently in ascending index order,
+    * so each is IEEE-identical to its old separate `aggregate` fold.
     * Returns the old zip_with semantics for the edge cases: a zero norm on
     * a FULLY-summed side → 0.0; length mismatch (zip_with null-padding
     * poisoned the dot) → null, surfaced via the boxed return.
     */
-  def cosine(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean)
-      : java.lang.Double = {
+  def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val la = a.numElements(); val lb = b.numElements()
     var na = 0.0; var nb = 0.0; var dot = 0.0
     var i = 0
     while (i < la) {
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val x = a.getDouble(i)
       na += x * x; i += 1
     }
     i = 0
     while (i < lb) {
-      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val y = b.getDouble(i)
       nb += y * y; i += 1
     }
     if (na == 0.0 || nb == 0.0) return java.lang.Double.valueOf(0.0)
     if (la != lb) return null
     i = 0
     while (i < la) {
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; i += 1
+      dot += a.getDouble(i) * b.getDouble(i); i += 1
     }
     java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
@@ -215,283 +211,69 @@ object VectorKernels {
     new GenericArrayData(out)
   }
 
+  /** Jaro-Winkler of two strings — graft.kg.Text.jaroWinkler, the scalar
+    * the oracle runs, so scores are bitwise-identical.
+    */
+  def jaroWinkler(a: UTF8String, b: UTF8String): Double =
+    graft.kg.Text.jaroWinkler(a.toString, b.toString)
+
+  /** A (h, w) entry array: the layout textCos and entryNorm read. */
+  private val Entries = ArrayType(StructType(Seq(
+    StructField("h", LongType), StructField("w", DoubleType))))
+
+  private val Doubles = ArrayType(DoubleType)
+
+  /** `kernel` of this object called on `args`, each cast at analysis to its
+    * `inputTypes` entry (or rejected if it cannot be); a null argument
+    * gives null without calling the kernel.
+    */
+  private[functions] def invoke(kernel: String, dataType: DataType,
+      args: Seq[Column], inputTypes: Seq[DataType]): Column =
+    GraftBridge.column(StaticInvoke(getClass, dataType, kernel,
+      args.map(GraftBridge.expression), inputTypes))
+
   /** Column API: L2 norm of a (h, w) entry array (null array → null, like
     * the aggregate formulation).
     */
   def entryNormCol(tw: Column): Column =
-    GraftBridge.column(EntryNormExpr(GraftBridge.expression(tw)))
+    invoke("entryNorm", DoubleType, Seq(tw), Seq(Entries))
 
   /** Column API: weighted neighbour-average vector over a (dst, w, vec)
-    * struct array (null input → null, element nulls per the zip semantics).
+    * struct array (null input → null, element nulls per the zip
+    * semantics). A float weight or float vec elements are widened exactly.
     */
   def weightedVecAvg(nb: Column, dim: Int): Column =
-    GraftBridge.column(WeightedAvgExpr(GraftBridge.expression(nb), dim))
-
-  private val Kernel = "graft.functions.VectorKernels$.MODULE$"
+    invoke("weightedAvg", ArrayType(DoubleType), Seq(nb, lit(dim)),
+      Seq(ArrayType(StructType(Seq(StructField("dst", LongType),
+        StructField("w", DoubleType), StructField("vec", Doubles)))), IntegerType))
 
   /** Column API: TF-IDF cosine of two (h, w) entry arrays with norms;
     * any-null input → 0.0 (the caller-side coalesce folded in).
     */
   def textCosine(eVec: Column, eNorm: Column, aVec: Column, aNorm: Column): Column =
-    GraftBridge.column(TextCosineExpr(GraftBridge.expression(eVec),
-      GraftBridge.expression(eNorm), GraftBridge.expression(aVec),
-      GraftBridge.expression(aNorm)))
+    coalesce(invoke("textCos", DoubleType, Seq(eVec, eNorm, aVec, aNorm),
+      Seq(Entries, DoubleType, Entries, DoubleType)), lit(0.0))
 
   /** Column API: mean Jaro-Winkler of cand vs a names array; null names
     * array or null cand → 0.0.
     */
   def nameSim(names: Column, cand: Column): Column =
-    GraftBridge.column(NameSimExpr(GraftBridge.expression(names),
-      GraftBridge.expression(cand)))
+    coalesce(invoke("meanJw", DoubleType, Seq(names, cand),
+      Seq(ArrayType(StringType), StringType)), lit(0.0))
 
   /** Column API: cosine of two numeric arrays (nullable — null inputs or
     * mismatched lengths yield null, zero norms yield 0.0, exactly like the
-    * aggregate/zip_with formulation this replaces).
+    * aggregate/zip_with formulation this replaces). A float array is
+    * widened per row here: callers that score pairs widen their vectors
+    * once, before the pair join.
     */
   def cosineSim(a: Column, b: Column): Column =
-    GraftBridge.column(CosineExpr(GraftBridge.expression(a),
-      GraftBridge.expression(b)))
+    invoke("cosine", DoubleType, Seq(a, b), Seq(Doubles, Doubles))
 
   /** Column API: Jaccard of two sorted distinct array<long> sets; a null
     * or empty side → 0.0.
     */
   def sortedJaccard(a: Column, b: Column): Column =
-    GraftBridge.column(SortedJaccardExpr(GraftBridge.expression(a),
-      GraftBridge.expression(b)))
-
-  private[functions] def isFloatArr(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-}
-
-/** text_cos(etw, en, atw, an): double, never null (missing inputs → 0.0). */
-case class TextCosineExpr(etw: Expression, en: Expression,
-    atw: Expression, an: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(etw, en, atw, an)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def prettyName: String = "text_cosine"
-
-  override def eval(input: InternalRow): Any = {
-    val v1 = etw.eval(input); val v2 = en.eval(input)
-    val v3 = atw.eval(input); val v4 = an.eval(input)
-    if (v1 == null || v2 == null || v3 == null || v4 == null) 0.0
-    else VectorKernels.textCos(v1.asInstanceOf[ArrayData],
-      v2.asInstanceOf[Double], v3.asInstanceOf[ArrayData],
-      v4.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c1 = etw.genCode(ctx); val c2 = en.genCode(ctx)
-    val c3 = atw.genCode(ctx); val c4 = an.genCode(ctx)
-    ev.copy(code = code"""
-      ${c1.code}
-      ${c2.code}
-      ${c3.code}
-      ${c4.code}
-      double ${ev.value} = 0.0;
-      if (!(${c1.isNull} || ${c2.isNull} || ${c3.isNull} || ${c4.isNull})) {
-        ${ev.value} = graft.functions.VectorKernels$$.MODULE$$.textCos(
-          ${c1.value}, ${c2.value}, ${c3.value}, ${c4.value});
-      }""", isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(etw = newChildren(0), en = newChildren(1),
-      atw = newChildren(2), an = newChildren(3))
-}
-
-/** name_sim(names, cand): double, never null (null names/cand → 0.0). */
-case class NameSimExpr(names: Expression, cand: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(names, cand)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def prettyName: String = "name_sim"
-
-  override def eval(input: InternalRow): Any = {
-    val n = names.eval(input); val c = cand.eval(input)
-    if (n == null || c == null) 0.0
-    else VectorKernels.meanJw(n.asInstanceOf[ArrayData],
-      c.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c1 = names.genCode(ctx); val c2 = cand.genCode(ctx)
-    ev.copy(code = code"""
-      ${c1.code}
-      ${c2.code}
-      double ${ev.value} = 0.0;
-      if (!(${c1.isNull} || ${c2.isNull})) {
-        ${ev.value} = graft.functions.VectorKernels$$.MODULE$$.meanJw(
-          ${c1.value}, ${c2.value});
-      }""", isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(names = newChildren(0), cand = newChildren(1))
-}
-
-/** sorted_jaccard(a, b) over sorted distinct array<long>: double, never
-  * null (a null side → 0.0, like the empty set).
-  */
-case class SortedJaccardExpr(a: Expression, b: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(a, b)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def prettyName: String = "sorted_jaccard"
-
-  override def checkInputDataTypes(): TypeCheckResult = (a.dataType, b.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (x, y) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs two array<bigint>, got ${x.catalogString} and ${y.catalogString}")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val va = a.eval(input); val vb = b.eval(input)
-    if (va == null || vb == null) 0.0
-    else VectorKernels.sortedJaccard(va.asInstanceOf[ArrayData],
-      vb.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ca = a.genCode(ctx); val cb = b.genCode(ctx)
-    ev.copy(code = code"""
-      ${ca.code}
-      ${cb.code}
-      double ${ev.value} = 0.0;
-      if (!(${ca.isNull} || ${cb.isNull})) {
-        ${ev.value} = graft.functions.VectorKernels$$.MODULE$$.sortedJaccard(
-          ${ca.value}, ${cb.value});
-      }""", isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(a = newChildren(0), b = newChildren(1))
-}
-
-/** entry_norm(tw): double, null iff the array is null. */
-case class EntryNormExpr(tw: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(tw)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = tw.nullable
-  override def prettyName: String = "entry_norm"
-
-  override def eval(input: InternalRow): Any = {
-    val v = tw.eval(input)
-    if (v == null) null
-    else VectorKernels.entryNorm(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = tw.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = ${c.isNull};
-      double ${ev.value} = 0.0;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.functions.VectorKernels$$.MODULE$$.entryNorm(${c.value});
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(tw = newChildren(0))
-}
-
-/** weighted_vec_avg(nb, dim): array<double> (see VectorKernels.weightedAvg
-  * for the mirrored zip-chain null semantics).
-  */
-case class WeightedAvgExpr(nb: Expression, dim: Int) extends Expression {
-
-  override def children: Seq[Expression] = Seq(nb)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "weighted_vec_avg"
-
-  /** weightedAvg reads each entry as getStruct(k, 3) with getDouble(1) and
-    * getArray(2).getDouble(j): any other layout (a float weight, an
-    * array<float> vec) would decode as garbage doubles, so it must fail
-    * analysis instead.
-    */
-  override def checkInputDataTypes(): TypeCheckResult = nb.dataType match {
-    case ArrayType(StructType(Array(_, StructField(_, DoubleType, _, _),
-        StructField(_, ArrayType(DoubleType, _), _, _))), _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<struct<_, double, array<double>>>, got ${other.catalogString}")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = nb.eval(input)
-    if (v == null) null
-    else VectorKernels.weightedAvg(v.asInstanceOf[ArrayData], dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = nb.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.VectorKernels$$.MODULE$$.weightedAvg(
-          ${c.value}, $dim);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(nb = newChildren(0))
-}
-
-/** cosine(a, b) over array<double|float>: nullable (null input or length
-  * mismatch → null; zero norm → 0.0).
-  */
-case class CosineExpr(a: Expression, b: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(a, b)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cosine_sim"
-
-  private lazy val aFloat = VectorKernels.isFloatArr(a.dataType)
-  private lazy val bFloat = VectorKernels.isFloatArr(b.dataType)
-
-  override def eval(input: InternalRow): Any = {
-    val va = a.eval(input); val vb = b.eval(input)
-    if (va == null || vb == null) null
-    else {
-      val r = VectorKernels.cosine(va.asInstanceOf[ArrayData], aFloat,
-        vb.asInstanceOf[ArrayData], bFloat)
-      if (r == null) null else r.doubleValue()
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ca = a.genCode(ctx); val cb = b.genCode(ctx)
-    val boxed = ctx.freshName("boxedCos")
-    ev.copy(code = code"""
-      ${ca.code}
-      ${cb.code}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = 0.0;
-      if (!(${ca.isNull} || ${cb.isNull})) {
-        java.lang.Double $boxed = graft.functions.VectorKernels$$.MODULE$$.cosine(
-          ${ca.value}, $aFloat, ${cb.value}, $bFloat);
-        if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.doubleValue(); }
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(a = newChildren(0), b = newChildren(1))
+    coalesce(invoke("sortedJaccard", DoubleType, Seq(a, b),
+      Seq(ArrayType(LongType), ArrayType(LongType))), lit(0.0))
 }

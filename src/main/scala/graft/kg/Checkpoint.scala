@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * output). Alongside the data, `<root>/_checkpoint/stage=<stage>/` gets
   * one row per stable hash-bucket: row count, order-independent content
   * hash (bit_xor of per-row xxhash64), and wall time. The content hash is
-  * what the resume test uses to prove byte-equivalence, and the `repos`
-  * stage rows double as the sha256(content) lineage set.
+  * what the resume test uses to prove byte-equivalence. The sha256(content)
+  * lineage set is its own stage, `lineage`, beside the `corpus` stage.
   */
 object Checkpoint {
 

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -158,17 +158,6 @@ object Features {
     (accVec, vectorize(entTok, "entity_id"))
   }
 
-  /** Compiled per-pair TF-IDF cosine between two token-SORTED (token, w)
-    * entry arrays with precomputed norms: a sorted-merge dot product as a
-    * native codegen expression (functions/VectorKernels.scala — this sits
-    * on the widest frame of the pipeline; the previous Scala-UDF form
-    * converted both entry arrays to Seq[Row] per pair). The merge visits
-    * entity tokens in ascending order, exactly the fold order of the
-    * scalar oracle; null/missing inputs score 0.0 like the old coalesce.
-    */
-  def textCosCol(eVec: Column, eNorm: Column, aVec: Column, aNorm: Column): Column =
-    graft.functions.VectorKernels.textCosine(eVec, eNorm, aVec, aNorm)
-
   // ---------------------------------------------------------------- graph
 
   /** Social-graph edges from per-file co-occurrence of the author with the
@@ -206,8 +195,9 @@ object Features {
     */
   def sgVectors(edges: DataFrame, accountEmbeddings: DataFrame,
       dim: Int = CorpusGen.EmbDim): DataFrame = {
-    // the kernel reads array<double> only; a float-vector table is widened
-    // here (exact; a no-op cast on the double tables CorpusGen writes)
+    // the kernel reads array<double>; a float-vector table is widened here,
+    // once per embedding row before the edge join (exact; a no-op cast on
+    // the double tables CorpusGen writes)
     val emb = accountEmbeddings.select(col("accountId").as("dst"),
       col("vec").cast("array<double>").as("vec"))
     edges.join(emb, Seq("dst"))

@@ -142,7 +142,7 @@ object ScalarOracle {
       while (j < CorpusGen.EmbDim) { acc(j) = acc(j) / wsum; j += 1 }
       sgVec(src) = acc
     }
-    // Similarity.cosineCol mirror (index-order folds, 0-guard)
+    // VectorKernels.cosine mirror (index-order folds, 0-guard)
     def cosineMirror(a: Seq[Double], b: Array[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb2 = 0.0
       var i = 0

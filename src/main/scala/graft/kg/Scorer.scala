@@ -1,6 +1,7 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.VectorKernels
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Features (north_star: "name similarity, context cosine, popularity
   * prior" replacing the reference's NN):
   *   - name_sim      mean Jaro-Winkler over entity names (NameScorer.java:42-53)
-  *                   — the codegen JaroWinklerExpr inside transform/aggregate,
-  *                   no row UDF in the per-pair path
+  *                   — the compiled VectorKernels.nameSim fold, no row
+  *                   UDF in the per-pair path
   *   - text_cos      TF-IDF cosine of the entity abstract vs the account's
   *                   aggregated corpus text (DBTextScorerv2.java:38-42,
   *                   BuildUserLSA.java:54-58 — Features.textVectors)
@@ -25,8 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * score = sigmoid(w·x + b) as Column arithmetic. The per-pair stage is
   * UDF-free: string/name normalization runs once on the (small) dimension
-  * tables; every per-pair expression is built-ins + the codegen
-  * JaroWinklerExpr, and all fp folds follow a sorted order shared with the
+  * tables; every per-pair expression is built-ins + the compiled
+  * VectorKernels folds, and all fp folds follow a sorted order shared with the
   * scalar oracle (ScalarOracle.scala) for bitwise equality.
   *
   * Selection (W3, PrepareTrainingSet.java:904-926): per entity the argmax
@@ -66,21 +67,6 @@ object Scorer {
   val distinctTokensUdf = udf((s: String) =>
     Text.tokens(s).distinct.map(graft.ops.Dedup.xxLane(0, _)).distinct.toSeq)
 
-  /** Mean Jaro-Winkler of the candidate name vs all (pre-normalized) entity
-    * names — F5 as a native codegen fold over the names array
-    * (functions/VectorKernels.scala; the previous `aggregate` higher-order
-    * form was interpreted — ArrayAggregate is CodegenFallback — on the
-    * per-pair frame). Same ascending-index fold and sum/size division;
-    * null/empty names or null candidate → 0.0 like the old coalesce.
-    */
-  def nameSimCol(namesNorm: Column, candNorm: Column): Column =
-    graft.functions.VectorKernels.nameSim(namesNorm, candNorm)
-
-  /** Per-pair feature table (entity_id, account_id, screen_name, freq,
-    * name_sim, text_cos, desc_overlap, sg_cos, log_followers, log_freq,
-    * verified_f) — the UDF-free feature stage, exposed separately from the
-    * weighting so weights can be swept without recomputing features.
-    */
   /** Default candidates ⋈ entity-dim strategy: broadcast the entity side.
     * Measured A/B at 2M files/local[16] — the plain shuffle-join
     * alternative SORTS 5M+ candidate rows carrying the wide entity feature
@@ -94,14 +80,6 @@ object Scorer {
   /** Bucket count of the pipeline's bucketed featurize tables. */
   val FeaturizeBuckets = 64
 
-  /** The scale path for the pair join (conf.bucketedFeaturize): write both
-    * sides as tables bucketed + sorted on entity_id, read back, join —
-    * the scans report HashPartitioning(entity_id), so the join plans with
-    * ZERO Exchange (BucketingSpec asserts this and output equality with the
-    * broadcast path). At cluster scale the bucketed candidates/entity-dim
-    * tables would live once per pipeline run and feed every downstream
-    * consumer with co-located reads.
-    */
   /** Serializes writers per table prefix within this JVM (keeps the
     * generation numbering race-free in-process; cross-JVM collisions are
     * handled by the per-run uuid tag in the table name).
@@ -112,6 +90,14 @@ object Scorer {
   private val GenDirRe = """.*_g(\d+)_[0-9a-f]{8}_(candidates|entity_dim)""".r
 
   /** Bucketed pair join with GENERATION-UNIQUE table names.
+    *
+    * The scale path for the pair join (conf.bucketedFeaturize): write both
+    * sides as tables bucketed + sorted on entity_id, read back, join —
+    * the scans report HashPartitioning(entity_id), so the join plans with
+    * ZERO Exchange (BucketingSpec asserts this and output equality with the
+    * broadcast path). At cluster scale the bucketed candidates/entity-dim
+    * tables would live once per pipeline run and feed every downstream
+    * consumer with co-located reads.
     *
     * The old drop→rewrite on a fixed name had an unfixable reader race:
     * a concurrent same-prefix run (parallel Scaling sessions sharing one
@@ -235,6 +221,11 @@ object Scorer {
     (acc, ent)
   }
 
+  /** Per-pair feature table (entity_id, account_id, screen_name, freq,
+    * name_sim, text_cos, desc_overlap, sg_cos, log_followers, log_freq,
+    * verified_f) — the UDF-free feature stage, exposed separately from the
+    * weighting so weights can be swept without recomputing features.
+    */
   def featurize(candidates: DataFrame, entities: DataFrame, accounts: DataFrame,
       scan: DataFrame, accountEmbeddings: DataFrame,
       entityEmbeddings: DataFrame,
@@ -262,11 +253,11 @@ object Scorer {
 
     joined.select(col("entity_id"), col("account_id"), col("screen_name"),
       col("freq"),
-      nameSimCol(col("names_norm"), col("account_name_norm")).as("name_sim"),
-      Features.textCosCol(col("e_tvec"), col("e_tnorm"),
+      VectorKernels.nameSim(col("names_norm"), col("account_name_norm")).as("name_sim"),
+      VectorKernels.textCosine(col("e_tvec"), col("e_tnorm"),
         col("a_tvec"), col("a_tnorm")).as("text_cos"),
       descOverlap.as("desc_overlap"),
-      coalesce(graft.ops.Similarity.cosineCol(col("evec"), col("sgvec")),
+      coalesce(VectorKernels.cosineSim(col("evec"), col("sgvec")),
         lit(0.0)).as("sg_cos"),
       log(10.0, col("followers").cast("double") + lit(1.0)).as("log_followers"),
       log(10.0, col("freq").cast("double") + lit(1.0)).as("log_freq"),

@@ -764,6 +764,12 @@ object Dedup {
   private[graft] def embeddingCosine(a: Column, b: Column): Column =
     coalesce(VectorKernels.cosineSim(a, b), lit(0.0))
 
+  /** The embedding families' payload: the float vector widened exactly to
+    * the array<double> the cosine kernel reads, once per vector in the
+    * payload frame — never per candidate pair.
+    */
+  private val doubleEmbedding = col("embedding").cast("array<double>")
+
   /** Embedding-cosine near-dup over embeddings(vec_id, embedding): standard
     * multi-table random-hyperplane LSH — independent hash tables of
     * `planes` sign bits each (planes scales ~log₂N via planesFor, tables
@@ -788,7 +794,7 @@ object Dedup {
     val sigs = embeddingBands(embs, -1L, EmbDim, tables, planes)
       .select(col("vec_id").as("doc_id"), col("table_id").as("band_id"), col("bits").as("band_hash"))
     cosCols(lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, EmbBucketCap,
-      col("embedding"))(embeddingCosine, _ >= threshold))
+      doubleEmbedding)(embeddingCosine, _ >= threshold))
   }
 
   /** An embedding family's verified pairs as (vec_a, vec_b, cos), the
@@ -815,6 +821,6 @@ object Dedup {
     * vectors of unequal lengths scores 0.0 (no prefix cosine).
     */
   def embeddingBrute(embs: DataFrame, threshold: Double = 0.35): DataFrame =
-    cosCols(bruteJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), col("embedding"))(
+    cosCols(bruteJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), doubleEmbedding)(
       embeddingCosine, _ >= threshold))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.VectorKernels.cosineSim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (array<float>), two tiers:
   *
   *   - `bruteForceTopK` — exact cosine top-k: broadcast the (small) query
-  *     set against the corpus, score with codegen'd zip_with/aggregate,
+  *     set against the corpus, score with the compiled cosine kernel,
   *     keep top-k per query via WindowGroupLimit. Baseline + verifier.
   *   - `ivfTopK` — the scale path: k-means-lite IVF. Centroids are fixed
   *     pseudo-random unit-ish vectors (deterministic — no Date/rand);
@@ -22,25 +23,21 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine similarity of two array<double|float> columns — a one-pass
-    * native codegen kernel (functions/VectorKernels.scala). The previous
-    * aggregate/zip_with formulation was interpreted (higher-order functions
-    * are CodegenFallback) and walked each array three times; the kernel
-    * keeps each accumulator's ascending-index IEEE fold, so results are
-    * bit-identical (VectorKernelsSpec pins this, the ann/dedup oracle
-    * replays gate it end-to-end).
+  /** `df` with its embedding widened to array<double> (exact), once per
+    * row before any pair join: the compiled cosine reads doubles, and an
+    * array cast on the scored pairs would build a new array per pair.
     */
-  def cosineCol(a: Column, b: Column): Column =
-    graft.functions.VectorKernels.cosineSim(a, b)
+  private def widened(df: DataFrame): DataFrame =
+    df.withColumn("embedding", col("embedding").cast("array<double>"))
 
   /** Exact top-k by cosine for each query vector.
     * queries(query_id, embedding) is broadcast; corpus(vec_id, embedding).
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
-    val scored = corpus.alias("c")
-      .join(broadcast(queries.alias("q")))
+    val scored = widened(corpus).alias("c")
+      .join(broadcast(widened(queries).alias("q")))
       .select(col("q.query_id").as("query_id"), col("c.vec_id").as("vec_id"),
-        cosineCol(col("q.embedding"), col("c.embedding")).as("cos"))
+        cosineSim(col("q.embedding"), col("c.embedding")).as("cos"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
@@ -61,30 +58,34 @@ object Similarity {
   def centroidCol(c: Int, dim: Int): Column =
     array(centroidVec(c, dim).map(lit(_)).toSeq: _*)
 
-  /** Nearest-centroid id among nCells fixed centroids (argmax cosine). */
+  /** Nearest-centroid id among nCells fixed centroids (argmax cosine);
+    * `emb` is array<double>, or it is widened once per centroid.
+    */
   def cellOf(emb: Column, nCells: Int, dim: Int): Column = {
     val scores = (0 until nCells).map(c =>
-      struct(cosineCol(emb, centroidCol(c, dim)).as("s"), lit(c).as("c")))
+      struct(cosineSim(emb, centroidCol(c, dim)).as("s"), lit(c).as("c")))
     array_max(array(scores: _*)).getField("c")
   }
 
-  /** Top nProbe cells per query (by centroid cosine, descending). */
+  /** Top nProbe cells per query (by centroid cosine, descending); `emb`
+    * as in [[cellOf]].
+    */
   def probeCells(emb: Column, nCells: Int, dim: Int, nProbe: Int): Column = {
     val scores = (0 until nCells).map(c =>
-      struct(cosineCol(emb, centroidCol(c, dim)).as("s"), lit(c).as("c")))
+      struct(cosineSim(emb, centroidCol(c, dim)).as("s"), lit(c).as("c")))
     slice(reverse(array_sort(array(scores: _*))), 1, nProbe).getField("c")
   }
 
   /** IVF ANN: probe `nProbe` of `nCells` inverted lists per query. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10,
       nCells: Int = 16, nProbe: Int = 4, dim: Int = 32): DataFrame = {
-    val assigned = corpus.withColumn("cell", cellOf(col("embedding"), nCells, dim))
-    val probes = queries
+    val assigned = widened(corpus).withColumn("cell", cellOf(col("embedding"), nCells, dim))
+    val probes = widened(queries)
       .withColumn("cell", explode(probeCells(col("embedding"), nCells, dim, nProbe)))
     val scored = assigned.alias("c")
       .join(broadcast(probes.alias("q")), col("c.cell") === col("q.cell"))
       .select(col("q.query_id").as("query_id"), col("c.vec_id").as("vec_id"),
-        cosineCol(col("q.embedding"), col("c.embedding")).as("cos"))
+        cosineSim(col("q.embedding"), col("c.embedding")).as("cos"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))

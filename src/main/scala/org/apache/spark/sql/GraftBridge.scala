@@ -3,9 +3,9 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Column ⇄ Expression bridge. Spark 4 made the classic converters
-  * `private[sql]`, so custom Catalyst expressions (graft.functions.*) go
-  * through this one-liner living inside the sql package. No Spark
-  * internals are reimplemented here.
+  * `private[sql]`, so the kernel calls of graft.functions (Catalyst
+  * `StaticInvoke` nodes) go through this one-liner living inside the sql
+  * package. No Spark internals are reimplemented here.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

@@ -4,8 +4,9 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Custom Catalyst expression specs: codegen path, interpreted path, and
-  * SQL registration all agree with the shared scalar implementation.
+/** Jaro-Winkler specs: the compiled call's codegen path, its interpreted
+  * path, and the SQL registration all agree with the shared scalar
+  * implementation.
   */
 class FunctionsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -14,30 +15,39 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     ("same", "same"), ("", ""), ("a", "b"),
     ("Customer#000000001", "Customer#000000010"))
 
-  test("JaroWinklerExpr (codegen) equals the scalar implementation") {
+  private val want = pairs.map { case (a, b) => graft.kg.Text.jaroWinkler(a, b) }
+
+  private def pairsDf = {
     import spark.implicits._
-    val df = pairs.toDF("a", "b")
-    val got = df.select(JaroWinkler.jaroWinkler(col("a"), col("b"))).collect()
-      .map(_.getDouble(0))
-    val want = pairs.map { case (a, b) => graft.kg.Text.jaroWinkler(a, b) }
-    got.zip(want).foreach { case (g, w) => assert(g == w) }
+    spark.sparkContext.parallelize(pairs, 2).toDF("a", "b")
+  }
+
+  test("JaroWinklerExpr (codegen) equals the scalar implementation") {
+    interpretedAndCodegen { codegen =>
+      val got = collectIn(pairsDf.select(JaroWinkler.jaroWinkler(col("a"), col("b"))), codegen)
+        .map(_.getDouble(0))
+      assert(got.toSeq == want, s"codegen=$codegen")
+    }
   }
 
   test("jaro_winkler is registered and usable from SQL") {
-    import spark.implicits._
     JaroWinkler.register(spark)
-    pairs.toDF("a", "b").createOrReplaceTempView("jw_pairs")
-    val got = spark.sql("SELECT jaro_winkler(a, b) FROM jw_pairs").collect()
-      .map(_.getDouble(0))
-    val want = pairs.map { case (a, b) => graft.kg.Text.jaroWinkler(a, b) }
-    got.zip(want).foreach { case (g, w) => assert(g == w) }
+    pairsDf.createOrReplaceTempView("jw_pairs")
+    interpretedAndCodegen { codegen =>
+      val got = collectIn(spark.sql("SELECT jaro_winkler(a, b) FROM jw_pairs"), codegen)
+        .map(_.getDouble(0))
+      assert(got.toSeq == want, s"codegen=$codegen")
+    }
   }
 
   test("nulls propagate (BinaryExpression null-intolerant default)") {
     import spark.implicits._
-    val df = Seq((Option("x"), Option.empty[String])).toDF("a", "b")
-    val r = df.select(JaroWinkler.jaroWinkler(col("a"), col("b"))).collect()
-    assert(r(0).isNullAt(0))
+    val df = spark.sparkContext.parallelize(Seq(
+      (Option("x"), Option.empty[String]), (Option.empty[String], Option("x"))), 1).toDF("a", "b")
+    interpretedAndCodegen { codegen =>
+      val r = collectIn(df.select(JaroWinkler.jaroWinkler(col("a"), col("b"))), codegen)
+      assert(r.forall(_.isNullAt(0)), s"codegen=$codegen")
+    }
   }
 
   test("F19 vector concat: built-in concat appends feature arrays in order") {

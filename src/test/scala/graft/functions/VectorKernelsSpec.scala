@@ -1,16 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
-/** The three native vector kernels must be BIT-identical to the Column
-  * formulations they replaced (which themselves are pinned end-to-end by
-  * the scalar oracle and the DuckDB replays). Each test evaluates old and
-  * new on the same adversarial frame and compares raw doubles with ==
-  * (no tolerance).
+/** The compiled kernels must be BIT-identical to the Column formulations
+  * they replaced (which themselves are pinned end-to-end by the scalar
+  * oracle and the DuckDB replays). Each test evaluates old and new on the
+  * same adversarial frame, once interpreted (StaticInvoke's reflective
+  * call) and once under whole-stage codegen (its generated static call),
+  * and compares raw doubles with == (no tolerance).
   */
 class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -23,6 +24,14 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
     z ^ (z >>> 31)
   }
   private def rnd01(seed: Long): Double = (mix(seed) >>> 11).toDouble / (1L << 53).toDouble
+
+  /** (old, new) per row of `df`: the legacy formulation as Spark runs it
+    * (a higher-order fold keeps its Project out of whole-stage codegen),
+    * and the kernel alone in the mode `codegen` selects.
+    */
+  private def oldNew(df: DataFrame, old: Column, nw: Column, codegen: Boolean): Seq[Row] =
+    df.select(old).collect().toSeq.zip(collectIn(df.select(nw), codegen))
+      .map { case (o, n) => Row(o.get(0), n.get(0)) }
 
   // ---------------------------------------------------------------- textCos
 
@@ -83,22 +92,22 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
         Row(e, en, a, an)
       }, 2), schema)
 
-    val out = df.select(
-      legacyTextCos(col("etw"), col("en"), col("atw"), col("an")).as("old"),
-      VectorKernels.textCosine(col("etw"), col("en"), col("atw"), col("an")).as("nw"))
-      .collect()
-    out.foreach { r =>
-      val o = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      assert(java.lang.Double.doubleToRawLongBits(o) ==
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
-        s"old=$o new=${r.getDouble(1)}")
+    interpretedAndCodegen { codegen =>
+      oldNew(df, legacyTextCos(col("etw"), col("en"), col("atw"), col("an")),
+        VectorKernels.textCosine(col("etw"), col("en"), col("atw"), col("an")),
+        codegen).foreach { r =>
+        val o = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+        assert(java.lang.Double.doubleToRawLongBits(o) ==
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+          s"codegen=$codegen old=$o new=${r.getDouble(1)}")
+      }
     }
   }
 
   // ---------------------------------------------------------------- nameSim
 
   test("NameSimExpr ≡ legacy aggregate formulation (incl. empty/null arrays)") {
-    def legacy(names: org.apache.spark.sql.Column, cand: org.apache.spark.sql.Column) =
+    def legacy(names: Column, cand: Column) =
       coalesce(
         when(size(names) > 0,
           aggregate(names, lit(0.0),
@@ -112,20 +121,21 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
       val n = k % 5
       (Seq.tabulate(n)(i => pool((k + i * 3) % pool.length)), pool(k % pool.length))
     } ++ Seq((null, "abc"), (Seq.empty[String], "abc"))
-    val df = rows.toDF("names", "cand")
-    val out = df.select(legacy(col("names"), col("cand")).as("old"),
-      VectorKernels.nameSim(col("names"), col("cand")).as("nw")).collect()
-    out.foreach { r =>
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
-        s"old=${r.getDouble(0)} new=${r.getDouble(1)}")
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("names", "cand")
+    interpretedAndCodegen { codegen =>
+      oldNew(df, legacy(col("names"), col("cand")),
+        VectorKernels.nameSim(col("names"), col("cand")), codegen).foreach { r =>
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+          s"codegen=$codegen old=${r.getDouble(0)} new=${r.getDouble(1)}")
+      }
     }
   }
 
   // ---------------------------------------------------------------- cosine
 
   test("CosineExpr ≡ legacy zip_with/aggregate on double arrays (zero norms, mismatch, nulls)") {
-    def legacy(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
+    def legacy(a: Column, b: Column) = {
       val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
         lit(0.0), (acc, v) => acc + v)
       val na = aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double"))
@@ -142,20 +152,21 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
       (vec(9, 8), vec(10, 12)),             // length mismatch → null
       (null, vec(11, 8)),                   // null side → null
       (Seq.empty[Double], Seq.empty[Double]))
-    val df = rows.toDF("a", "b")
-    val out = df.select(legacy(col("a"), col("b")).as("old"),
-      graft.ops.Similarity.cosineCol(col("a"), col("b")).as("nw")).collect()
-    out.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1), s"null mismatch: $r")
-      if (!r.isNullAt(0))
-        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-          java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
-          s"old=${r.getDouble(0)} new=${r.getDouble(1)}")
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b")
+    interpretedAndCodegen { codegen =>
+      oldNew(df, legacy(col("a"), col("b")),
+        VectorKernels.cosineSim(col("a"), col("b")), codegen).foreach { r =>
+        assert(r.isNullAt(0) == r.isNullAt(1), s"codegen=$codegen null mismatch: $r")
+        if (!r.isNullAt(0))
+          assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+            java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+            s"codegen=$codegen old=${r.getDouble(0)} new=${r.getDouble(1)}")
+      }
     }
   }
 
   test("CosineExpr ≡ legacy on float arrays and mixed float/double") {
-    def legacy(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
+    def legacy(a: Column, b: Column) = {
       val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
         lit(0.0), (acc, v) => acc + v)
       val na = aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double"))
@@ -166,22 +177,20 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
       (Seq.tabulate(12)(i => (rnd01(k * 17 + i) * 2.0 - 1.0).toFloat),
        Seq.tabulate(12)(i => (rnd01(k * 19 + i + 7) * 2.0 - 1.0).toFloat))
     }
-    val df = rows.toDF("a", "b")
-    // float vs float
-    df.select(legacy(col("a"), col("b")).as("old"),
-      graft.ops.Similarity.cosineCol(col("a"), col("b")).as("nw")).collect()
-      .foreach { r =>
-        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-          java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
-      }
-    // mixed: float vs double literal array (the IVF centroid shape)
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b")
+    // the float side is widened exactly by the analyzer's cast
     val cen = graft.ops.Similarity.centroidCol(3, 12)
-    df.select(legacy(col("a"), cen).as("old"),
-      graft.ops.Similarity.cosineCol(col("a"), cen).as("nw")).collect()
-      .foreach { r =>
-        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-          java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+    interpretedAndCodegen { codegen =>
+      // float vs float, and mixed: float vs double literal array (the IVF
+      // centroid shape)
+      Seq(col("b"), cen).foreach { b =>
+        oldNew(df, legacy(col("a"), b), VectorKernels.cosineSim(col("a"), b),
+          codegen).foreach { r =>
+          assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+            java.lang.Double.doubleToRawLongBits(r.getDouble(1)), s"codegen=$codegen $r")
+        }
       }
+    }
   }
 
   test("EntryNormExpr ≡ sqrt(aggregate(tw, 0, acc + w·w)) bit-exactly") {
@@ -194,24 +203,25 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
     val schema = StructType(Seq(StructField("tw", entrySchema)))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rowsets.map(Row(_)), 2), schema)
-    val got = df.select(
-      sqrt(aggregate(col("tw"), lit(0.0),
-        (acc, s) => acc + s.getField("w") * s.getField("w"))).as("old"),
-      VectorKernels.entryNormCol(col("tw")).as("nw")).collect()
-    got.foreach { r =>
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
-    }
     // null array → null, like the aggregate formulation
     val nullDf = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(null)), 1), schema)
-    assert(nullDf.select(VectorKernels.entryNormCol(col("tw")))
-      .collect()(0).isNullAt(0))
+    interpretedAndCodegen { codegen =>
+      oldNew(df,
+        sqrt(aggregate(col("tw"), lit(0.0),
+          (acc, s) => acc + s.getField("w") * s.getField("w"))),
+        VectorKernels.entryNormCol(col("tw")), codegen).foreach { r =>
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), s"codegen=$codegen $r")
+      }
+      assert(collectIn(nullDf.select(VectorKernels.entryNormCol(col("tw"))), codegen)(0)
+        .isNullAt(0))
+    }
   }
 
   test("WeightedAvgExpr ≡ legacy transform/aggregate/zip_with chain bit-exactly") {
     val dim = 8
-    def legacy(nb: org.apache.spark.sql.Column) =
+    def legacy(nb: Column) =
       transform(
         aggregate(nb, array_repeat(lit(0.0), dim),
           (acc, x) => zip_with(acc, x.getField("vec"),
@@ -235,74 +245,69 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
     val schema = StructType(Seq(StructField("nb", nbSchema)))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(cases.map(Row(_)), 2), schema)
-    val out = df.select(legacy(col("nb")).as("old"),
-      VectorKernels.weightedVecAvg(col("nb"), dim).as("nw")).collect()
-    out.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1), s"array-null mismatch: $r")
-      if (!r.isNullAt(0)) {
-        val o = r.getSeq[Any](0); val n = r.getSeq[Any](1)
-        assert(o.length == n.length, s"length mismatch: $o vs $n")
-        o.zip(n).foreach {
-          case (null, null) => ()
-          case (a: Double, b: Double) =>
-            assert(java.lang.Double.doubleToRawLongBits(a) ==
-              java.lang.Double.doubleToRawLongBits(b), s"old=$a new=$b")
-          case (a, b) => fail(s"element null mismatch: $a vs $b")
-        }
-      }
-    }
     // null nb column → null, like the lazy-eval chain
     val nullDf = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(null)), 1), schema)
-    assert(nullDf.select(VectorKernels.weightedVecAvg(col("nb"), dim))
-      .collect()(0).isNullAt(0))
     // empty nb: the legacy chain THROWS under ANSI (double 0/0 divide);
     // sgVectors can never produce it (groupBy output has ≥1 row, weights
     // are > 0), and the kernel keeps IEEE semantics: dim NaN elements
     val emptyDf = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(Seq.empty[Row])), 1), schema)
-    val got = emptyDf.select(VectorKernels.weightedVecAvg(col("nb"), dim))
-      .collect()(0).getSeq[Double](0)
-    assert(got.length == dim && got.forall(_.isNaN))
+    interpretedAndCodegen { codegen =>
+      oldNew(df, legacy(col("nb")),
+        VectorKernels.weightedVecAvg(col("nb"), dim), codegen).foreach { r =>
+        assert(r.isNullAt(0) == r.isNullAt(1), s"codegen=$codegen array-null mismatch: $r")
+        if (!r.isNullAt(0)) {
+          val o = r.getSeq[Any](0); val n = r.getSeq[Any](1)
+          assert(o.length == n.length, s"length mismatch: $o vs $n")
+          o.zip(n).foreach {
+            case (null, null) => ()
+            case (a: Double, b: Double) =>
+              assert(java.lang.Double.doubleToRawLongBits(a) ==
+                java.lang.Double.doubleToRawLongBits(b), s"codegen=$codegen old=$a new=$b")
+            case (a, b) => fail(s"codegen=$codegen element null mismatch: $a vs $b")
+          }
+        }
+      }
+      assert(collectIn(nullDf.select(VectorKernels.weightedVecAvg(col("nb"), dim)), codegen)(0)
+        .isNullAt(0))
+      val got = collectIn(emptyDf.select(VectorKernels.weightedVecAvg(col("nb"), dim)),
+        codegen)(0).getSeq[Double](0)
+      assert(got.length == dim && got.forall(_.isNaN))
+    }
   }
 
-  test("WeightedAvgExpr rejects a float weight or an array<float> vec at analysis") {
+  test("weightedVecAvg widens float w and vec exactly") {
     def nbOf(w: DataType, vecElem: DataType) = StructType(Seq(StructField("nb",
       ArrayType(StructType(Seq(StructField("dst", LongType), StructField("w", w),
         StructField("vec", ArrayType(vecElem))))))))
-    def analyze(schema: StructType, row: Row) =
-      spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema)
-        .select(VectorKernels.weightedVecAvg(col("nb"), 2)).collect()
-    Seq(
-      nbOf(FloatType, DoubleType) -> Row(Seq(Row(1L, 0.5f, Seq(1.0, 2.0)))),
-      nbOf(DoubleType, FloatType) -> Row(Seq(Row(1L, 0.5, Seq(1.0f, 2.0f))))).foreach {
-      case (schema, row) =>
-        val e = intercept[org.apache.spark.sql.AnalysisException](analyze(schema, row))
-        assert(e.getMessage.contains("weighted_vec_avg"), e.getMessage)
+    def avg(schema: StructType, rows: Seq[Row], codegen: Boolean) =
+      collectIn(spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        .select(VectorKernels.weightedVecAvg(col("nb"), 3)), codegen).toSeq.map(_.getSeq[Double](0))
+    // float-representable neighbours, so each layout carries the same values
+    val nbs: Seq[Seq[(Long, Float, Seq[Float])]] = Seq.tabulate(12) { k =>
+      Seq.tabulate(1 + k % 4)(i => (k * 10L + i, (rnd01(k * 7 + i) * 3.0).toFloat,
+        Seq.tabulate(3)(j => (rnd01(k * 31 + i * 5 + j) * 2.0 - 1.0).toFloat)))
     }
-    assert(analyze(nbOf(DoubleType, DoubleType), Row(Seq(Row(1L, 2.0, Seq(1.0, 2.0)))))
-      .head.getSeq[Double](0) == Seq(1.0, 2.0))
+    def rows(wf: Float => Any, vf: Float => Any) = nbs.map(nb =>
+      Row(nb.map { case (d, w, v) => Row(d, wf(w), v.map(vf)) }))
+    interpretedAndCodegen { codegen =>
+      val want = avg(nbOf(DoubleType, DoubleType), rows(_.toDouble, _.toDouble), codegen)
+      Seq(
+        avg(nbOf(FloatType, DoubleType), rows(identity, _.toDouble), codegen),
+        avg(nbOf(DoubleType, FloatType), rows(_.toDouble, identity), codegen),
+        avg(nbOf(FloatType, FloatType), rows(identity, identity), codegen)).foreach { got =>
+        assert(got.map(_.map(java.lang.Double.doubleToRawLongBits)) ==
+          want.map(_.map(java.lang.Double.doubleToRawLongBits)), s"codegen=$codegen")
+      }
+    }
+    // a layout the analyzer cannot cast to (dst, double, array<double>) still fails analysis
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      avg(nbOf(DoubleType, StringType), Seq(Row(Seq(Row(1L, 0.5, Seq("x"))))), codegen = true))
+    assert(e.getMessage.contains("weightedAvg"), e.getMessage)
   }
 
   // ------------------------------------------------------- near-dup verify
-
-  /** `body` once interpreted (no whole-stage, no expression codegen) and
-    * once under whole-stage codegen.
-    */
-  private def interpretedAndCodegen(body: Boolean => Unit): Unit = {
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val was = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      Seq(false -> Seq("false", "NO_CODEGEN"), true -> Seq("true", "CODEGEN_ONLY"))
-        .foreach { case (codegen, vals) =>
-          keys.zip(vals).foreach { case (k, v) => spark.conf.set(k, v) }
-          body(codegen)
-        }
-    } finally was.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("SortedJaccardExpr ≡ Dedup.sortedJaccard, interpreted and compiled") {
     def set(seed: Long, n: Int, mod: Long): Seq[Long] =
@@ -320,7 +325,8 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
       val out = df.select(col("a"), col("b"),
         VectorKernels.sortedJaccard(col("a"), col("b")).as("j"))
       val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("sorted_jaccard(") && !plan.contains("ScalaUDF"), plan)
+      assert(plan.contains("static_invoke(graft.functions.VectorKernels.sortedJaccard(") &&
+        !plan.contains("ScalaUDF"), plan)
       assert(plan.contains("*(1) Project [") == codegen, plan) // whole-stage marker
       out.collect().foreach { r =>
         def arr(i: Int) = if (r.isNullAt(i)) Array.empty[Long] else r.getSeq[Long](i).toArray
@@ -329,11 +335,14 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
           java.lang.Double.doubleToRawLongBits(want), s"codegen=$codegen $r want $want")
       }
     }
-    // the kernel reads elements with getLong: any other element type fails analysis
+    // the kernel reads elements with getLong: an int set is widened exactly,
+    // and an element type the analyzer cannot cast to bigint fails analysis
+    assert(Seq((Seq(1, 2), Seq(2, 3))).toDF("a", "b")
+      .select(VectorKernels.sortedJaccard(col("a"), col("b"))).head().getDouble(0) == 1.0 / 3.0)
     val e = intercept[org.apache.spark.sql.AnalysisException](
-      Seq((Seq(1, 2), Seq(2, 3))).toDF("a", "b")
+      Seq((Seq("1", "2"), Seq("2", "3"))).toDF("a", "b")
         .select(VectorKernels.sortedJaccard(col("a"), col("b"))).collect())
-    assert(e.getMessage.contains("sorted_jaccard"), e.getMessage)
+    assert(e.getMessage.contains("sortedJaccard"), e.getMessage)
   }
 
   test("embedding verify: cosine_sim ≡ Dedup.cosineArr on equal lengths, 0.0 on null or mismatch") {
@@ -372,7 +381,8 @@ class VectorKernelsSpec extends AnyFunSuite with SparkTestBase {
       VectorKernels.textCosine(col("etw"), col("en"), col("atw"), col("an")))
       .queryExecution.executedPlan.toString
     // the `*(n)` prefix is the WholeStageCodegen marker in the compact form
-    assert(plan.contains("*(1) Project [text_cosine"), plan)
+    assert(plan.contains(
+      "*(1) Project [coalesce(static_invoke(graft.functions.VectorKernels.textCos("), plan)
     assert(!plan.contains("ScalaUDF"), plan)
   }
 }

@@ -28,7 +28,7 @@ class FeaturesSpec extends AnyFunSuite with SparkTestBase {
     val a = Seq((1L, Seq((20L, 3.0), (30L, 4.0)), 5.0))
       .toDF("entity_id", "a_tvec", "a_tnorm")
     val got = e.join(a, Seq("entity_id"))
-      .select(Features.textCosCol(col("e_tvec"), col("e_tnorm"),
+      .select(graft.functions.VectorKernels.textCosine(col("e_tvec"), col("e_tnorm"),
         col("a_tvec"), col("a_tnorm")).as("cos"))
       .collect()(0).getDouble(0)
     val want = (1.0 * 3.0) / (math.sqrt(5.0) * 5.0)

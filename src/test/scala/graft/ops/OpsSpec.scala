@@ -299,7 +299,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import graft.functions.{CosineExpr, SortedJaccardExpr}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
     val wasAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -308,7 +308,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       val e = (1L to 20L).map(i => (i, Array.tabulate(64)(j => math.sin(i * j).toFloat)))
         .toDF("vec_id", "embedding")
       def scores(e: Expression) = e.exists {
-        case _: SortedJaccardExpr | _: CosineExpr => true
+        case i: StaticInvoke => Set("sortedJaccard", "cosine")(i.functionName)
         case _ => false
       }
       def isVerify(p: SparkPlan) = p match {
