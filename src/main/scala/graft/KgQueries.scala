@@ -13,14 +13,15 @@ import graft.kg._
   * (ScalarOracle.scala).
   *
   * The synthesis scale follows the driver's sf dir so bench reflects a
-  * bigger corpus than verify. One Pipeline.compute Result is MEMOIZED per
-  * (session, sf dir): kg_mentions / kg_dictionary / kg_candidates /
-  * kg_triples / kg_evaluation / kg_social_graph all reuse the same
-  * persisted intermediates instead of re-running corpus→dictionary→scoring
-  * per query (the round-1 bench paid that full chain twice). Only
-  * kg_corpus reads `content`; kg_mentions and kg_social_graph derive from
-  * the pipeline's own scan parquet (Result.scan), so their DuckDB replays
-  * check the frames the pipeline consumes.
+  * bigger corpus than verify. One Pipeline.compute Result is MEMOIZED, for
+  * the last (session, scale) asked for: kg_mentions / kg_dictionary /
+  * kg_candidates / kg_triples / kg_evaluation / kg_social_graph all reuse
+  * the same persisted intermediates instead of re-running
+  * corpus→dictionary→scoring per query (the round-1 bench paid that full
+  * chain twice). Only kg_corpus reads `content`; kg_mentions and
+  * kg_social_graph derive from the pipeline's own scan parquet
+  * (Result.scan), so their DuckDB replays check the frames the pipeline
+  * consumes.
   */
 object KgQueries {
 
@@ -31,66 +32,29 @@ object KgQueries {
     else if (dir.contains("sf0.01")) CorpusGen.Small
     else CorpusGen.Tiny
 
-  // Keyed by the session OBJECT so a fresh session never sees a Result
-  // bound to a stopped one. Weak keying can NOT reclaim entries — the
-  // Result's DataFrames strongly reference their SparkSession (the key)
-  // through their QueryExecution — so the map is bounded EXPLICITLY:
-  //   - access-order LRU capped at `MaxSessions`: an app that churns
-  //     newSession() per sweep (the Tune/Scaling pattern) evicts (and
-  //     unpersists) the eldest session's entry instead of accumulating
-  //     until application end;
-  //   - ONE shared listener per SparkContext (not one per session) drains
-  //     the whole memo at application end;
-  //   - `evict(session)` releases a session's entry the moment a caller is
-  //     done with it.
-  private val MaxSessions = 4
-  private type SessionMemo =
-    scala.collection.concurrent.TrieMap[String, Pipeline.Result]
-  private val memo =
-    new java.util.LinkedHashMap[SparkSession, SessionMemo](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, SessionMemo]): Boolean =
-        if (size > MaxSessions) { e.getValue.values.foreach(_.unpersist()); true }
-        else false
-    }
-  private val drainRegistered =
-    new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]()
-
-  /** Number of sessions currently memoized (spec surface for the bound). */
-  def memoSessionCount: Int = memo.synchronized(memo.size)
-
-  /** Drop (and unpersist) a session's memoized pipeline results. */
-  def evict(s: SparkSession): Unit = memo.synchronized {
-    val gone = memo.remove(s)
-    if (gone != null) gone.values.foreach(_.unpersist())
-  }
+  // ONE memoized Result, keyed by the session OBJECT (so a fresh session
+  // never sees a Result bound to a stopped one) and the scale. Its callers
+  // (Bench, and Verify through KgOracle) each use one session and one sf
+  // dir; a request for another key unpersists the held Result first, so at
+  // most one pipeline's frames stay cached however often sessions churn.
+  private var memo: Option[((SparkSession, String), Pipeline.Result)] = None
 
   /** One pipeline run per (session, scale) — all kg_* queries share it. */
-  def result(s: SparkSession, dir: String): Pipeline.Result = {
-    val perSession = memo.synchronized {
-      var m = memo.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, Pipeline.Result]
-        memo.put(s, m)
-        val sc = s.sparkContext
-        if (drainRegistered.get(sc) == null) {
-          drainRegistered.put(sc, java.lang.Boolean.TRUE)
-          sc.addSparkListener(
-            new org.apache.spark.scheduler.SparkListener {
-              override def onApplicationEnd(
-                  end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-                memo.synchronized {
-                  val it = memo.values.iterator
-                  while (it.hasNext) { it.next().values.foreach(_.unpersist()); }
-                  memo.clear()
-                }
-            })
-        }
-      }
-      m
+  def result(s: SparkSession, dir: String): Pipeline.Result = synchronized {
+    val scale = scaleFor(dir)
+    val key = (s, scale.name)
+    memo match {
+      case Some((k, r)) if k == key => r
+      case held =>
+        // a stopped context has no cache left to release, and its
+        // scratch went with Scan's application-end drain
+        held.foreach { case ((hs, _), r) =>
+          if (!hs.sparkContext.isStopped) r.unpersist() }
+        memo = None
+        val r = Pipeline.computeForScale(s, scale)
+        memo = Some((key, r))
+        r
     }
-    perSession.getOrElseUpdate(scaleFor(dir).name,
-      Pipeline.computeForScale(s, scaleFor(dir)))
   }
 
   /** Corpus + the north-rule per-row invariant: sha2(content) computed by

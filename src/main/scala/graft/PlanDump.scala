@@ -1,18 +1,17 @@
 package graft
 
-/** Dumps `explain("formatted")` for named SparkEntry queries to files —
-  * the before/after plan evidence for optimization rounds (the judge
-  * checks plan claims against these artifacts; guide §1: capture plans
-  * for every query you touch).
+/** Dumps the `explain("formatted")` plan that runs, for named SparkEntry
+  * queries — the before/after plan evidence for a change to a query.
   *
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]"
   * writes <outDir>/<query>_<suffix>.txt per query.
   *
   * The session is `Scaling.session($SPARK_GRAFT_CPUS)`, whose configs
-  * mirror graft.Bench (local[cpus], shuffle partitions = cpus, AQE on) so
-  * the dumped initial plans match what the bench executes (AQE plans print
-  * isFinalPlan=false before execution; Exchange/join-strategy shape is
-  * what matters).
+  * mirror graft.Bench (local[cpus], shuffle partitions = cpus, AQE on).
+  * Each query runs once (`queryExecution.toRdd.count()`) before it is
+  * explained, so the file holds AQE's final plan (isFinalPlan=true), with
+  * its whole-stage codegen ids and the join strategies it settled on, not
+  * the initial plan an unexecuted query prints.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,8 +23,9 @@ object PlanDump {
     val spark = Scaling.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
+      val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+      qe.toRdd.count()
+      val plan = qe.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),

@@ -71,7 +71,8 @@ final case class KgConf(
   * tie-break, and the >threshold back-off second pass.
   *
   * Reference: FillFromIndex.java:87-158 (J1 join + A7 rollup + W1 top-K +
-  * J11 back-off ladder) and AllNamesStrategy.java:68-117 (query names).
+  * J11 back-off ladder) and AllNamesStrategy.java:29-117 (query names and
+  * the back-off rungs, all derived in one per-entity pass: [[taggedNames]]).
   *
   * Scale notes: the dictionary is corpus-derived and huge; the entity-name
   * side is small → broadcast the ENTITY side into the join so the dictionary
@@ -81,59 +82,52 @@ final case class KgConf(
   */
 object CandidateGen {
 
-  /** Query-name expansion (AllNamesStrategy semantics): normalized names ∪
-    * labels, plus "Last, First"-swapped variants, length ≥ 3, distinct.
+  /** One query name of an entity with its back-off rung flags. */
+  final case class QueryName(qname: String, in_r1: Boolean, in_r2: Boolean)
+
+  /** An entity's query names with per-rung membership flags, each raw name
+    * normalized and swapped once:
+    *   - the names: normalized names ∪ labels plus their "Last, First"-
+    *     swapped variants, length ≥ 3, distinct, sorted (AllNamesStrategy
+    *     semantics, AllNamesStrategy.java:68-117);
+    *   - in_r1 ⇔ the name is one of the top-3 names, the reference's
+    *     NAMES_THRESHOLD intermediate rung (AllNamesStrategy.java:29-64:
+    *     names ranked by multiplicity in names∪labels; golden ladder
+    *     behavior AllNamesStrategyTest.java:65-101). Multiplicity is counted
+    *     over the swapped-normalized forms (the reference swaps person
+    *     "Last, First" before counting, AllNamesStrategy.java:96-103), with
+    *     the tie-break (count desc, name asc) for a total order where the
+    *     reference's HashMap iteration is unstable;
+    *   - in_r2 ⇔ the name is the primary name, the first declared name
+    *     normalized and swapped: the strictest rung (option 2+).
+    * Every top-3 or primary name is a swapped-normalized raw name, so the
+    * ones that pass the length gate are among the names by construction.
     */
-  val queryNamesUdf = udf((names: Seq[String], labels: Seq[String]) => {
-    val all = (Option(names).getOrElse(Seq.empty) ++ Option(labels).getOrElse(Seq.empty))
-    all.iterator
+  def taggedNames(names: Seq[String], labels: Seq[String]): Seq[QueryName] = {
+    val norm = (Option(names).getOrElse(Seq.empty) ++ Option(labels).getOrElse(Seq.empty))
       .map(Text.normalizeName)
-      .flatMap(n => Iterator(n, Text.swapLastFirst(n)))
-      .filter(_.length >= 3)
-      .toVector.distinct.sorted
-  })
-
-  /** Primary query name = first declared name, normalized + swapped —
-    * the strictest rung of the back-off ladder (AllNamesStrategy option 2+).
-    */
-  val primaryNameUdf = udf((names: Seq[String]) =>
-    if (names == null || names.isEmpty) ""
-    else Text.swapLastFirst(Text.normalizeName(names.head)))
-
-  /** Top-3 query names — the reference's NAMES_THRESHOLD intermediate rung
-    * (AllNamesStrategy.java:29-64: names ranked by multiplicity in
-    * names∪labels; golden ladder behavior AllNamesStrategyTest.java:65-101).
-    * Multiplicity is counted over the swapped-normalized forms (the
-    * reference swaps person "Last, First" before counting,
-    * AllNamesStrategy.java:96-103); tie-break (count desc, name asc) for a
-    * total order where the reference's HashMap iteration is unstable.
-    * The returned names are ⊆ the queryNamesUdf expansion by construction
-    * (each is swap(normalize(raw)) with the same length gate).
-    */
-  val top3NamesUdf = udf((names: Seq[String], labels: Seq[String]) =>
-    (Option(names).getOrElse(Seq.empty) ++ Option(labels).getOrElse(Seq.empty))
-      .map(n => Text.swapLastFirst(Text.normalizeName(n)))
-      .filter(_.length >= 3)
+    val swapped = norm.map(Text.swapLastFirst)
+    val top3 = swapped.filter(_.length >= 3)
       .groupBy(identity).toSeq
       .map { case (n, g) => (n, g.size) }
       .sortBy { case (n, c) => (-c, n) }
-      .take(3).map(_._1).toVector)
+      .take(3).map(_._1).toSet
+    val primary = if (names == null || names.isEmpty) "" else swapped.head
+    (norm ++ swapped).filter(_.length >= 3).distinct.sorted
+      .map(q => QueryName(q, top3(q), q == primary))
+  }
 
-  /** (entity_id, qname, in_r1, in_r2) — one row per query name of a live
-    * entity, with per-rung membership flags: in_r1 ⇔ the qname is one of
-    * the entity's top-3 names (intermediate back-off rung), in_r2 ⇔ it is
-    * the primary name (strictest rung).
+  private val taggedNamesUdf = udf(taggedNames _)
+
+  /** (entity_id, qname, in_r1, in_r2): the [[taggedNames]] of every live
+    * entity, one row per query name.
     */
-  private def taggedQueryNames(entities: DataFrame): DataFrame =
+  private[kg] def taggedQueryNames(entities: DataFrame): DataFrame =
     entities
       .filter(!col("dead")) // P6 dead-entity filter, ProcessDataset.java:192-195
       .select(col("id").as("entity_id"),
-        explode(queryNamesUdf(col("names"), col("labels"))).as("qname"),
-        top3NamesUdf(col("names"), col("labels")).as("top3"),
-        primaryNameUdf(col("names")).as("primary_q"))
-      .select(col("entity_id"), col("qname"),
-        array_contains(col("top3"), col("qname")).as("in_r1"),
-        (col("qname") === col("primary_q")).as("in_r2"))
+        explode(taggedNamesUdf(col("names"), col("labels"))).as("q"))
+      .select(col("entity_id"), col("q.*"))
 
   /** The PRE-cutoff candidate rollup (entity_id, account_id, freq) — every
     * account the dictionary matched after back-off and fuzzy blocking,

@@ -124,7 +124,10 @@ object Canonicalize {
       .select(col("src").as("node"), col("comp"))
   }
 
-  /** entity_id → representative (entities not in any component map to self). */
+  /** entity_id → representative: one row per entity of `alignments`, an
+    * entity in no component mapping to itself. Triples.materialize emits
+    * these rows as its owl:sameAs triples.
+    */
   def representatives(spark: SparkSession, alignments: DataFrame,
       conf: KgConf = KgConf()): DataFrame = {
     // ≤1 row per entity by the star precondition, so the left join below

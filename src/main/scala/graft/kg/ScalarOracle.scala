@@ -241,8 +241,9 @@ object ScalarOracle {
 
         // ---------------- scoring (mirrors Scorer.score Column arithmetic)
         val (eEntries, eNorm) = entityVector(ent.abstractText)
-        // hashed-token mirror of Scorer.distinctTokensUdf (xxLane = the
-        // xxhash64 expression; hashed-then-distinct like the UDF)
+        // hashed-token mirror of Scorer's array_distinct over
+        // Features.tokenHashesUdf (xxLane = the xxhash64 expression;
+        // hashed-then-distinct like the Spark side)
         val absTokSet = Text.tokens(ent.abstractText).distinct
           .map(graft.ops.Dedup.xxLane(0, _)).distinct.toSet
         val homepage = ent.homepage

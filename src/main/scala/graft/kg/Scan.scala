@@ -306,7 +306,7 @@ object Scan {
     * this gives the in-memory compute() path the same materialization.
     */
   // pending scratch dirs per SparkContext, drained by ONE shared cleanup
-  // listener (drainRegistered pattern, KgQueries.scala) — the previous
+  // listener per context — the previous
   // form registered a fresh listener per materialize() call, which a
   // long-lived session running N pipelines accumulated N of (each holding
   // its path and firing a redundant delete at shutdown)

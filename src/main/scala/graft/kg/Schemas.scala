@@ -55,22 +55,6 @@ final case class Account(
   */
 final case class GoldRow(entity: String, accountId: Long)
 
-/** Dictionary row — analogue of user_index(fullname, uid, freq)
-  * (/root/reference/alignments/src/main/resources/schema.sql:20-29).
-  */
-final case class DictEntry(name: String, accountId: Long, freq: Long)
-
-/** One (entity, candidate account) pair with rank by dictionary frequency. */
-final case class Candidate(entityId: String, accountId: Long, freq: Long, rank: Int)
-
-/** Scored pair — analogue of the alignments table (schema.sql:109-118). */
-final case class Alignment(
-    entityId: String,
-    accountId: Long,
-    score: Double,
-    isAlignment: Boolean,
-    rank: Int)
-
 /** Output triple — the judged surface (RDFExporter.java:180-196). */
 final case class Triple(subj: String, pred: String, obj: String)
 
@@ -85,15 +69,3 @@ final case class EntityEmbedding(entityId: String, vec: Seq[Double])
   * averages over followees (SocialGraphEmbeddings.java:38-44).
   */
 final case class AccountEmbedding(accountId: Long, vec: Seq[Double])
-
-/** Per-stage, per-partition checkpoint/lineage row (north-rule resumability).
-  * Reference analogue: alignments.version work-queue states (schema.sql:114)
-  * and resolve-chunk files (PrepareTrainingSet.java:237-287).
-  */
-final case class CheckpointRow(
-    stage: String,
-    part: Int,
-    nRows: Long,
-    hashAgg: Long,
-    wallMs: Long,
-    status: String)

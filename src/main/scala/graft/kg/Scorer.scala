@@ -1,7 +1,7 @@
 package graft.kg
 
 import graft.functions.VectorKernels
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,6 +33,10 @@ import org.apache.spark.sql.functions._
   * Selection (W3, PrepareTrainingSet.java:904-926): per entity the argmax
   * wins only if (best − second) > margin AND best > minScore.
   *
+  * Evaluation (A12): `evaluate` (the scorer's own picks) and
+  * `gridEvaluation` (every decision point of the grid) are one tp/fp/fn →
+  * precision/recall/f1 fold, `prf`, over different pick rules.
+  *
   * Scale notes: candidates ⋈ entities is broadcast on the entity dim;
   * candidates ⋈ accounts joins on account_id — at 10^12-file scale the
   * accounts dim may exceed broadcast size, so that join stays a shuffle
@@ -57,15 +61,15 @@ object Scorer {
 
   val normNameUdf = udf((s: String) => Text.normalizeName(s))
 
-  /** Distinct tokens carried as xxhash64 hashes (graft.ops.Dedup.xxLane
-    * mirrors the Catalyst expression, and the scalar oracle hashes with the
-    * same function): the arrays ride the entity broadcast and the per-pair
-    * intersect, so 8-byte longs beat strings on both; a cross-token
-    * collision needs ~|vocab|²/2⁶⁴ luck and the oracle collides
-    * identically. Hashed-then-distinct so both sides count set-wise.
+  /** Distinct tokens carried as xxhash64 hashes, in first-seen order
+    * ([[Features.tokenHashesUdf]], whose hash the scalar oracle shares):
+    * the arrays ride the entity broadcast and the per-pair intersect, so
+    * 8-byte longs beat strings on both; a cross-token collision needs
+    * ~|vocab|²/2⁶⁴ luck and the oracle collides identically.
+    * Hashed-then-distinct so both sides count set-wise.
     */
-  val distinctTokensUdf = udf((s: String) =>
-    Text.tokens(s).distinct.map(graft.ops.Dedup.xxLane(0, _)).distinct.toSeq)
+  private def distinctTokenHashes(text: Column): Column =
+    array_distinct(Features.tokenHashesUdf(text))
 
   /** Default candidates ⋈ entity-dim strategy: broadcast the entity side.
     * Measured A/B at 2M files/local[16] — the plain shuffle-join
@@ -201,7 +205,7 @@ object Scorer {
 
     val ent = entities.select(col("id").as("entity_id"),
         namesNormUdf(col("names")).as("names_norm"),
-        distinctTokensUdf(col("abstractText")).as("abs_tok"),
+        distinctTokenHashes(col("abstractText")).as("abs_tok"),
         col("homepage"))
       .join(broadcast(hpCounts), Seq("homepage"), "left")
       .withColumn("hp_count", coalesce(col("hp_count"), lit(0L)))
@@ -212,7 +216,7 @@ object Scorer {
     val acc = accounts.select(col("accountId").as("account_id"),
         col("screenName").as("screen_name"),
         normNameUdf(col("name")).as("account_name_norm"),
-        distinctTokensUdf(col("description")).as("desc_tok"),
+        distinctTokenHashes(col("description")).as("desc_tok"),
         col("followers"), col("friends"), col("listed"), col("statuses"),
         col("verified"), col("url"), col("lastStatusAt"))
       .join(accVec.withColumnRenamed("tvec", "a_tvec")
@@ -346,35 +350,47 @@ object Scorer {
         col("is_alignment"))
   }
 
-  /** A12: P/R/F1 vs gold with reference abstain semantics
-    * (CustomEvaluation.java:30-53): right pick → TP; wrong pick → FP+FN;
-    * abstain on an entity that has a gold account → FN.
+  /** The P/R/F1 fold of `decided(gold_account, picked, picked_ok)`, one
+    * row per `keys` group, with the reference abstain semantics
+    * (CustomEvaluation.java:30-53): a right pick → TP; a wrong pick →
+    * FP+FN; no pick on an entity that has a gold account → FN.
+    * `picked_ok` says whether the entity's pick is taken.
     */
-  def evaluate(alignments: DataFrame, gold: DataFrame): DataFrame = {
-    val picks = alignments.filter(col("is_alignment"))
-      .select(col("entity_id"), col("account_id").as("picked"))
-    val g = gold.select(col("entity").as("entity_id"),
-      col("accountId").as("gold_account"))
-    val j = g.join(picks, Seq("entity_id"), "left")
-    j.agg(
-      sum(when(col("picked") === col("gold_account"), 1).otherwise(0)).as("tp"),
-      sum(when(col("picked").isNotNull &&
-        (col("gold_account") < 0 || col("picked") =!= col("gold_account")), 1)
-        .otherwise(0)).as("fp"),
-      sum(when(col("gold_account") >= 0 &&
-        (col("picked").isNull || col("picked") =!= col("gold_account")), 1)
-        .otherwise(0)).as("fn"))
+  private def prf(decided: DataFrame, keys: Column*): DataFrame =
+    decided.groupBy(keys: _*)
+      .agg(
+        sum(when(col("picked_ok") && col("picked") === col("gold_account"), 1)
+          .otherwise(0)).as("tp"),
+        sum(when(col("picked_ok") &&
+          (col("gold_account") < 0 || col("picked") =!= col("gold_account")), 1)
+          .otherwise(0)).as("fp"),
+        sum(when(col("gold_account") >= 0 &&
+          (!col("picked_ok") || col("picked") =!= col("gold_account")), 1)
+          .otherwise(0)).as("fn"))
       .withColumn("precision", col("tp") / greatest(col("tp") + col("fp"), lit(1)))
       .withColumn("recall", col("tp") / greatest(col("tp") + col("fn"), lit(1)))
       .withColumn("f1", lit(2.0) * col("precision") * col("recall") /
         greatest(col("precision") + col("recall"), lit(1e-9)))
+
+  private def goldAccounts(gold: DataFrame): DataFrame =
+    gold.select(col("entity").as("entity_id"), col("accountId").as("gold_account"))
+
+  /** A12: P/R/F1 vs gold — [[prf]] over the scorer's own picks (tp, fp,
+    * fn, precision, recall, f1).
+    */
+  def evaluate(alignments: DataFrame, gold: DataFrame): DataFrame = {
+    val picks = alignments.filter(col("is_alignment"))
+      .select(col("entity_id"), col("account_id").as("picked"))
+    prf(goldAccounts(gold).join(picks, Seq("entity_id"), "left")
+      .withColumn("picked_ok", col("picked").isNotNull))
   }
 
   /** A12 grid sweep (PrepareTrainingSet.java:936-1039): ONE DataFrame job
     * evaluating every (minScore, margin) decision point of the reference's
     * 20×5 grid. Scores are fixed per pair — only the selection rule varies
     * — so the per-entity (best, second, picked) triple is computed once and
-    * cross-joined with the 100-point grid.
+    * cross-joined with the 100-point grid, then folded by [[prf]] per
+    * point (P/R/F1 rounded to 6 decimals).
     */
   def gridEvaluation(alignments: DataFrame, gold: DataFrame,
       spark: SparkSession): DataFrame = {
@@ -390,31 +406,16 @@ object Scorer {
       ms <- 0 until 20
       mg <- 0 until 5
     } yield (ms * 0.05, mg * 0.1)).toDF("min_score", "margin")
-    val g = gold.select(col("entity").as("entity_id"),
-      col("accountId").as("gold_account"))
-    val decided = g.join(per, Seq("entity_id"), "left")
+    val decided = goldAccounts(gold).join(per, Seq("entity_id"), "left")
       .crossJoin(broadcast(grid))
       .withColumn("picked_ok",
         col("picked").isNotNull &&
           col("best") - col("second") > col("margin") &&
           col("best") > col("min_score"))
-    decided.groupBy(col("min_score"), col("margin"))
-      .agg(
-        sum(when(col("picked_ok") && col("picked") === col("gold_account"), 1)
-          .otherwise(0)).as("tp"),
-        sum(when(col("picked_ok") &&
-          (col("gold_account") < 0 || col("picked") =!= col("gold_account")), 1)
-          .otherwise(0)).as("fp"),
-        sum(when(col("gold_account") >= 0 &&
-          (!col("picked_ok") || col("picked") =!= col("gold_account")), 1)
-          .otherwise(0)).as("fn"))
-      .withColumn("precision", col("tp") / greatest(col("tp") + col("fp"), lit(1)))
-      .withColumn("recall", col("tp") / greatest(col("tp") + col("fn"), lit(1)))
-      .withColumn("f1", round(lit(2.0) * col("precision") * col("recall") /
-        greatest(col("precision") + col("recall"), lit(1e-9)), 6))
+    prf(decided, col("min_score"), col("margin"))
       .select(col("min_score"), col("margin"), col("tp"), col("fp"), col("fn"),
         round(col("precision"), 6).as("precision"),
-        round(col("recall"), 6).as("recall"), col("f1"))
+        round(col("recall"), 6).as("recall"), round(col("f1"), 6).as("f1"))
   }
 
   /** A13 candidate-distribution diagnostics (PrepareTrainingSet.java:332-415):

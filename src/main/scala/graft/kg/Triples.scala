@@ -28,11 +28,11 @@ import org.apache.spark.sql.functions._
   * CONSTRUCTION (alignments hold one row per (entity, account), cand_iri
   * embeds both keys, and foaf:account fires at most once per entity), so
   * that branch — the bulk of the output — is a pure map over the scored
-  * pairs with NO shuffle; only the entity-level sameAs (duplicated ×topK
-  * under a global distinct) and the account-level identifier/name pair
-  * (duplicated ×fan-in) are deduplicated, each as a distinct over a
-  * NARROW key projection ≪ the triple set. The previous formulation ran
-  * one global distinct over every materialized triple string — the
+  * pairs with NO shuffle; the entity-level sameAs comes one row per
+  * entity from the representatives, and only the account-level
+  * identifier/name pair (duplicated ×fan-in) is deduplicated, as a distinct
+  * over a NARROW key projection ≪ the triple set. The previous formulation
+  * ran one global distinct over every materialized triple string — the
   * second-widest shuffle of the pipeline at 13M triples.
   */
 object Triples {
@@ -47,7 +47,14 @@ object Triples {
   private def t(subj: Column, pred: String, obj: Column): Column =
     struct(subj.as("subj"), lit(pred).as("pred"), obj.cast("string").as("obj"))
 
-  /** triples(subj, pred, obj) from scored alignments + representatives. */
+  /** triples(subj, pred, obj) from scored alignments + representatives.
+    *
+    * Precondition: `reps(entity_id, rep)` holds exactly one row per entity
+    * of `alignments`, with `rep` already coalesced to the entity itself
+    * when it is in no component: the frame [[Canonicalize.representatives]]
+    * builds from the same alignments. The owl:sameAs rows are that frame,
+    * projected.
+    */
   def materialize(alignments: DataFrame, reps: DataFrame): DataFrame = {
     val a = alignments
       .withColumn("acc_iri", accountIri(col("screen_name")))
@@ -62,15 +69,8 @@ object Triples {
       .filter(col("t").isNotNull)
       .select(col("t.subj"), col("t.pred"), col("t.obj"))
 
-    // one row per entity WITHOUT a distinct Exchange: `rank` is a
-    // row_number over the entity partition (Scorer.score), so rank = 1
-    // selects exactly one row per entity present in alignments — the same
-    // set a distinct over entity_id produced, as a map-side filter instead
-    // of a full shuffle of |entities|×topK ids
-    val sameAs = alignments.filter(col("rank") === 1).select(col("entity_id"))
-      .join(reps, Seq("entity_id"), "left")
-      .select(col("entity_id").as("subj"), lit("owl:sameAs").as("pred"),
-        coalesce(col("rep"), col("entity_id")).as("obj"))
+    val sameAs = reps.select(col("entity_id").as("subj"),
+      lit("owl:sameAs").as("pred"), col("rep").as("obj"))
 
     val acct = alignments.select(col("account_id"), col("screen_name")).distinct()
       .select(explode(array(

@@ -45,6 +45,11 @@ object TfIdf {
     * N is folded into the lazy plan (1-row aggregate broadcast-crossed),
     * no driver count. Gate: A ≥ minCount
     * (FeatureSelection.DEFAULT_MIN_FEATURE_FREQ).
+    *
+    * Eager: building the frame runs one Spark job (the (token, category)
+    * aggregate's `localCheckpoint`), and the result reads executor-local
+    * checkpoint blocks, so it stays valid only while the executors holding
+    * them live; losing one makes the frame unrecoverable.
     */
   def contingency(docs: DataFrame, minCount: Long = 5): DataFrame = {
     val nDf = docs.agg(count(lit(1)).as("n_total"))
@@ -83,6 +88,7 @@ object TfIdf {
     * truncates nearly every score to 0 — an evident bug, so the intended
     * real-valued form is computed here). Raw IEEE doubles: integer inputs →
     * one exact product + one division, bit-identical cross-engine.
+    * Eager and tied to executor block liveness, like [[contingency]].
     */
   def mutualInformation(docs: DataFrame, minCount: Long = 5): DataFrame =
     contingency(docs, minCount)
@@ -95,6 +101,7 @@ object TfIdf {
     * +∞ → Double.MAX_VALUE clamp. The reference's 0/0 corner (A·D = 0 with
     * B·C = 0) yields NaN there; defined as 0.0 here so the score stays
     * total-ordered and comparable.
+    * Eager and tied to executor block liveness, like [[contingency]].
     */
   def oddsRatio(docs: DataFrame, minCount: Long = 5): DataFrame =
     contingency(docs, minCount)
@@ -108,6 +115,7 @@ object TfIdf {
   /** χ² score of (token, category) association over a docs(doc_id, text,
     * category) table — A14 feature selection (ChiSquared.java:10).
     * Standard 2×2 χ² over the [[contingency]] counts.
+    * Eager and tied to executor block liveness, like [[contingency]].
     */
   def chiSquared(docs: DataFrame, minCount: Long = 5): DataFrame = {
     // n11 = A, n10 = B, n01 = C, n00 = D, with N and D cast to double

@@ -11,7 +11,10 @@ For each side it prints one line of JSON:
   - expressions: class/object definitions that extend a Catalyst
     expression base (Expression, UnaryExpression, BinaryExpression, ...);
   - local_checkpoints: `localCheckpoint(` call sites outside comments,
-    with the number of files that hold them.
+    with the number of files that hold them;
+  - udfs: `udf(...)` and `udf { ... }` definitions outside comments
+    (the boxed per-row converters a compiled kernel or a built-in
+    replaces).
 
 The base revision is read with `git show`; nothing is written anywhere.
 """
@@ -30,6 +33,7 @@ EXPR_BASES = re.compile(
     r"TernaryExpression|QuaternaryExpression|SeptenaryExpression|"
     r"BinaryOperator|UnaryMathExpression|BinaryMathExpression)\b")
 DEF_HEAD = re.compile(r"\b(?:class|object)\s+\w+[^{=]*?\bextends\b([^{=]*)", re.S)
+UDF_DEF = re.compile(r"\budf\s*[({]")
 
 
 def code_only(text):
@@ -74,7 +78,7 @@ def code_only(text):
 
 def measure(files):
     """files: [(path, text)] → the metrics of the module docstring."""
-    lines = code_lines = expressions = checkpoints = 0
+    lines = code_lines = expressions = checkpoints = udfs = 0
     checkpoint_files = set()
     for path, text in files:
         lines += text.count("\n") + (0 if text.endswith("\n") or not text else 1)
@@ -82,13 +86,14 @@ def measure(files):
         code_lines += n_code
         expressions += sum(1 for m in DEF_HEAD.finditer(code)
                            if EXPR_BASES.search(m.group(1)))
+        udfs += len(UDF_DEF.findall(code))
         k = code.count("localCheckpoint(")
         if k:
             checkpoints += k
             checkpoint_files.add(path)
     return {"lines": lines, "code_lines": code_lines, "expressions": expressions,
             "local_checkpoints": checkpoints,
-            "local_checkpoint_files": len(checkpoint_files)}
+            "local_checkpoint_files": len(checkpoint_files), "udfs": udfs}
 
 
 def git(*args):
