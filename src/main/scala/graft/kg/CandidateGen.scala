@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Reuse
+
 /** Pipeline tuning knobs (reference constants in BASELINE.md). */
 final case class KgConf(
     topK: Int = 40,              // CANDIDATES_THRESHOLD, PrepareTrainingSet.java:73
@@ -182,7 +184,7 @@ object CandidateGen {
     // exact-name candidates get fuzzy candidates via character-shingle
     // banding against the dictionary's (distinct) names.
     if (!conf.fuzzyEnabled) exact else {
-      // local checkpoints: `exact` is referenced by three consumers
+      // Reuse.materialize: `exact` is referenced by three consumers
       // (the emptiness probe, the anti-join, the union) and `lonely` by
       // two — checkpointing computes each once. They are not lazy: under
       // AQE, Dataset.checkpoint finalizes the adaptive plan, so building
@@ -191,11 +193,10 @@ object CandidateGen {
       // explicit unpersist bookkeeping is owed (the round-3 leak:
       // rollupAll's persists were unreachable by Result.unpersist and
       // accumulated across pipeline runs).
-      val exactLc = exact.localCheckpoint(false)
+      val exactLc = Reuse.materialize(exact, "candidates.exact", eager = false)
       val withCand = exactLc.select(col("entity_id")).distinct()
-      val lonely = tagged.select(col("entity_id"), col("qname"))
-        .join(withCand, Seq("entity_id"), "left_anti")
-        .localCheckpoint(false)
+      val lonely = Reuse.materialize(tagged.select(col("entity_id"), col("qname"))
+        .join(withCand, Seq("entity_id"), "left_anti"), "candidates.lonely", eager = false)
       // no lonely entities → skip the whole fuzzy branch (band explosion +
       // per-band window count over the dictionary names) entirely.
       // This eager probe costs one driver scheduling round-trip per run at

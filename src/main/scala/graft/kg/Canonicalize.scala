@@ -3,6 +3,8 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Reuse
+
 /** Stage 5: canonicalization — connected components over high-confidence
   * same-as edges (score ≥ strongThreshold, ScoreEntities.java:141), every
   * node rewritten to its component representative (min id).
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   * MapReduce and Beyond", SOCC'14): each round joins the current labels to
   * the symmetrized edge list, takes min(neighbor label, own label), and
   * stops when no label changes. Rounds are O(log n) on these graphs;
-  * `localCheckpoint` cuts lineage each round so plans stay flat.
+  * `Reuse.materialize` cuts lineage each round so plans stay flat.
   *
   * Scale notes: every round is one shuffle on node id; the edge list is
   * symmetrized once up front. Skewed celebrity components are bounded by
@@ -32,16 +34,15 @@ object Canonicalize {
     * silently returning non-converged labels would mean wrong components.
     */
   def components(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint (eager) BOTH materializes and TRUNCATES the logical
+    // Reuse.materialize (eager) BOTH materializes and TRUNCATES the logical
     // plan. Each round's plan embeds the previous round's frame twice
     // (once in the neighbor join, once in the union), so without lineage
     // truncation the plan tree doubles per round — exponential analysis
     // cost by iteration ~15 (the classic iterative-DataFrame trap; persist
     // alone caches data but keeps the logical plan growing).
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = Reuse.materialize(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), "components.edges")
 
     // seed with round 1's result for free: starting labels are usually
     // labels₀(node) = node, and the first loop round computes
@@ -50,11 +51,10 @@ object Canonicalize {
     // skips one full join+union+checkpoint+count round; the remaining
     // trajectory (and the fixpoint) is identical because min-label
     // propagation is monotone and this is the loop's own round-1 state.
-    var labels = sym.groupBy(col("src"))
+    var labels = Reuse.materialize(sym.groupBy(col("src"))
       .agg(min(col("dst")).as("mind"))
       .select(col("src").as("node"),
-        least(col("src"), col("mind")).as("comp"))
-      .localCheckpoint(true)
+        least(col("src"), col("mind")).as("comp")), "components.labels")
 
     var iter = 0
     var converged = false
@@ -74,11 +74,10 @@ object Canonicalize {
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), col("comp"),
           lit(null).cast(labels.schema("comp").dataType).as("old"))
-      val next = viaNeighbors
+      val next = Reuse.materialize(viaNeighbors
         .unionByName(labels.select(col("node"), col("comp"), col("comp").as("old")))
         .groupBy(col("node"))
-        .agg(min(col("comp")).as("comp"), max(col("old")).as("old"))
-        .localCheckpoint(true)
+        .agg(min(col("comp")).as("comp"), max(col("old")).as("old")), "components.round")
       val changed = next.filter(col("comp") =!= col("old")).count()
       labels = next.select(col("node"), col("comp"))
       converged = changed == 0
@@ -107,7 +106,7 @@ object Canonicalize {
     * window (Scorer W3) emits at most one `is_alignment` row per entity, so
     * each entity (src) carries at most one edge while an account IRI (dst)
     * may center many entities. The generic loop above costs
-    * O(diameter) driver round-trips (eager localCheckpoint + count per
+    * O(diameter) driver round-trips (eager materialize + count per
     * round, ~10 jobs) — pure fixed overhead per pipeline run that stopped
     * amortizing once the parallel stages got fast; this form is fully lazy
     * inside the consumer's plan (StarComponentsSpec pins equality with the

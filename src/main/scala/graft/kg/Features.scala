@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Reuse
+
 /** Feature-side tables for the scorer: per-account corpus-text TF-IDF
   * vectors, per-entity abstract vectors (same IDF model), and the social
   * graph with weighted-average followee embeddings.
@@ -129,13 +131,14 @@ object Features {
     */
   def textVectors(scan: DataFrame, accounts: DataFrame,
       entities: DataFrame): (DataFrame, DataFrame) = {
-    // localCheckpoint (eager, MEMORY_AND_DISK) instead of persist(): the
+    // Reuse.materialize (eager, serialized) instead of persist(): the
     // frame feeds three consumers (N agg, df agg, vector build) so it must
     // materialize once — and checkpoint blocks are released by the
     // ContextCleaner when the frame is GC'd, unlike catalog-cached plans,
     // which a long-lived session (Bench memo, Tune, GoldEvalSpec) would
-    // accumulate forever.
-    val accTok = accountTokenCounts(scan, accounts).localCheckpoint(true)
+    // accumulate forever. It stays one row per (account, token): each
+    // consumer reads it at that grain.
+    val accTok = Reuse.materialize(accountTokenCounts(scan, accounts), "features.accTok")
     // IDF corpus size N as a 1-row frame cross-joined into the idf model —
     // no driver-side count() action; the whole model stays one lazy plan.
     val nDf = accTok.agg(countDistinct(col("account_id")).as("n_acc"))

@@ -157,7 +157,7 @@ object Pipeline {
     val entEmb = keep("entity_embeddings")(entityEmbeddings)
     // the dim-side feature frames (accVec/sgVec/hp lookup) and the
     // dictionary→candidates chain are independent, but each blocks the
-    // driver on an eager job (textVectors' localCheckpoint vs the
+    // driver on an eager job (textVectors' accTok materialization vs the
     // candidate-ladder probe) — build the dims on a Future so the two
     // chains' jobs interleave instead of running back-to-back (the same
     // overlap the two bucketed table writes use in Scorer.bucketedEntJoin).

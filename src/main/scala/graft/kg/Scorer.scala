@@ -1,6 +1,7 @@
 package graft.kg
 
 import graft.functions.VectorKernels
+import graft.Reuse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -171,7 +172,7 @@ object Scorer {
   /** The two dimension-side feature frames — acc(account_id, …features) and
     * ent(entity_id, …features) — extracted from featurize so the pipeline
     * can build them CONCURRENTLY with the candidate chain: the only eager
-    * point in here (textVectors' accTok localCheckpoint) is independent of
+    * point in here (textVectors' accTok materialization) is independent of
     * the dictionary/candidates jobs, and running the two driver-blocking
     * chains on one thread serializes ~10 s of per-run floor at bench scale
     * (Pipeline.compute overlaps them on a Future, the same pattern as the
@@ -438,11 +439,11 @@ object Scorer {
     // lazy despite eager = false: under AQE, Dataset.checkpoint finalizes
     // the adaptive plan, so both chains' shuffle stages run here, while
     // this frame is built, not at the consumer's action.
-    val rollupKeys = rollupAll.select(col("entity_id"), col("account_id"))
-      .localCheckpoint(false)
-    val candKeyRank = candidates
-      .select(col("entity_id"), col("account_id"), col("rank"))
-      .localCheckpoint(false)
+    val rollupKeys = Reuse.materialize(rollupAll.select(col("entity_id"), col("account_id")),
+      "candidateStats.rollupKeys", eager = false)
+    val candKeyRank = Reuse.materialize(
+      candidates.select(col("entity_id"), col("account_id"), col("rank")),
+      "candidateStats.candKeyRank", eager = false)
     val candKeys = candKeyRank.select(col("entity_id"), col("account_id"))
     def scalarRow(df: DataFrame, stat: String): DataFrame =
       df.agg(count(lit(1)).as("n"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Reuse
 import graft.functions.VectorKernels
 
 /** Deduplication operators for large-scale training-data pipelines, over a
@@ -17,10 +18,11 @@ import graft.functions.VectorKernels
   * `cosine_sim`, `bit_count`). The four near-duplicate families generate
   * their candidates with one LSH similarity join, [[lshJoin]]:
   *
-  *   1. band signatures — (doc_id, band_id, band_hash), one compiled
-  *      kernel pass per doc (the minhash kernels reproduce Spark's hash
-  *      values bit-for-bit, so the banding equals the built-in expression
-  *      form at a fraction of its cost);
+  *   1. band signatures — one compiled kernel pass per doc (the minhash
+  *      kernels reproduce Spark's hash values bit-for-bit, so the banding
+  *      equals the built-in expression form at a fraction of its cost),
+  *      stored one row per doc, its band array, and exploded to
+  *      (doc_id, band_id, band_hash) rows where they are read;
   *   2. band pairs — bucket sizes counted first, buckets above the
   *      family's cap dropped (with several bands a true near-dup pair
   *      still collides in another band w.h.p.; the cap bounds fan-out to
@@ -251,9 +253,17 @@ object Dedup {
   // ---------------------------------------------------- generic skeleton
 
   /** (doc_a, doc_b) pairs from shared band keys, with hot buckets
-    * (> bucketCap rows) excluded from pair generation. `sigs` is
-    * (doc_id, band_id, band_hash); band_hash may be any groupable type.
-    * A pair that collides in k bands comes out k times.
+    * (> bucketCap rows) excluded from pair generation. `sigs` holds
+    * doc_id, and `bands` turns each of its rows into the doc's
+    * (band_id, band_hash) columns, or rows when it is a generator;
+    * band_hash may be any groupable type. A pair that collides in k bands
+    * comes out k times.
+    *
+    * `sigs` feeds the bucket count and both self-join sides, so it is
+    * materialized as given and `bands` applied on each read: the signature
+    * kernel runs once per doc. [[lshJoin]] passes one row per doc (its
+    * band array, or the SimHash), which stores a fraction of the bytes of
+    * the exploded rows.
     *
     * The one cap form for every family: the hot buckets come from the
     * partial-aggregated [[droppedBuckets]] count and prune the signatures
@@ -272,12 +282,8 @@ object Dedup {
     * (object-boundary serialization per generated pair; the join emits
     * pairs entirely inside WholeStageCodegen).
     */
-  private def bandPairs(sigs: DataFrame, bucketCap: Int): DataFrame = {
-    // localCheckpoint: the signatures feed the bucket count and both
-    // self-join sides — without it the signature kernel runs three times.
-    // The frame is small (N × bands rows of (id, int, key)).
-    val sigsC = sigs.select(col("doc_id"), col("band_id"), col("band_hash"))
-      .localCheckpoint(true)
+  private def bandPairs(sigs: DataFrame, bucketCap: Int, bands: Column*): DataFrame = {
+    val sigsC = Reuse.materialize(sigs, "dedup.signatures").select(col("doc_id") +: bands: _*)
     val ok = sigsC.join(droppedBuckets(sigsC, bucketCap), Seq("band_id", "band_hash"), "left_anti")
     ok.alias("l")
       .join(ok.alias("r"),
@@ -293,7 +299,8 @@ object Dedup {
     * deduplicates only the survivors.
     */
   def candidatePairs(sigs: DataFrame, bucketCap: Int): DataFrame =
-    bandPairs(sigs, bucketCap).distinct()
+    bandPairs(sigs.select(col("doc_id"), col("band_id"), col("band_hash")), bucketCap,
+      col("band_id"), col("band_hash")).distinct()
 
   /** Buckets dropped by `bucketCap` (diagnostic surface — "no silent caps"):
     * (band_id, band_hash, bucket_sz) for every hot bucket.
@@ -320,7 +327,8 @@ object Dedup {
   }
 
   /** The LSH similarity join every near-dup family runs: the band pairs
-    * of `sigs` under `cap`, [[verified]], and a distinct of the survivors.
+    * under `cap` of `sigs`, one row per doc from which `bands` reads the
+    * doc's band array, [[verified]], and a distinct of the survivors.
     *
     * The distinct runs on the survivors, not the candidates: a pair that
     * collides in k bands is scored k times (1.05× to 1.34× the distinct
@@ -332,11 +340,16 @@ object Dedup {
     * per document (the two payload joins share one exchange), which
     * measured cheaper than storing the payload.
     */
-  private def lshJoin(rows: DataFrame, sigs: DataFrame, cap: Int, payload: Column)(
-      sim: (Column, Column) => Column, keep: Column => Column): DataFrame =
+  private def lshJoin(rows: DataFrame, sigs: DataFrame, bands: Column, cap: Int, payload: Column)(
+      sim: (Column, Column) => Column, keep: Column => Column): DataFrame = {
+    // outer, with the same rows: every array holds all its bands, and a
+    // plain posexplode of a stored column gets an inferred `size(bands) > 0`
+    // filter, a pass over every signature that drops nothing
+    val perBand = posexplode_outer(bands).as(Seq("band_id", "band_hash"))
     verified(rows, payload)((a, b) =>
-      bandPairs(sigs, cap).join(a, Seq("doc_a")).join(b, Seq("doc_b")))(sim, keep)
+      bandPairs(sigs, cap, perBand).join(a, Seq("doc_a")).join(b, Seq("doc_b")))(sim, keep)
       .distinct()
+  }
 
   /** The all-pairs ground truth: [[verified]] on every pair doc_a < doc_b,
     * a self-join of the payload frame with the verify in its condition.
@@ -384,8 +397,8 @@ object Dedup {
     // drop the hint and collapse on signature rows instead (sha-identical
     // docs have identical signatures, so rep selection can run on the
     // compact (id, sha, sig) frame without ever touching content).
-    val members = repMembers(docs)
-      .localCheckpoint(true) // feeds the rep filter + both expansion joins
+    // feeds the rep filter + both expansion joins
+    val members = Reuse.materialize(repMembers(docs), "dedup.repMembers")
     val repIds = members.filter(col("doc_id") === col("rep_id"))
       .select(col("doc_id"))
     val repDocs = docs.join(broadcast(repIds), Seq("doc_id"), "left_semi")
@@ -406,10 +419,12 @@ object Dedup {
   /** A set family's near-dups: [[lshJoin]] with a Jaccard verify, inside
     * the exact pre-pass. Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
     */
-  private def jaccardNearDups(docs: DataFrame, bands: DataFrame => DataFrame,
+  private def jaccardNearDups(docs: DataFrame, bands: Column => Column,
       set: Column, threshold: Double): DataFrame =
-    withExactPrepass(docs, "jaccard", lit(1.0))(d =>
-      jaccardCols(lshJoin(d, bands(d), SetBucketCap, set)(jaccard, _ >= threshold)))
+    withExactPrepass(docs, "jaccard", lit(1.0)) { d =>
+      val sigs = d.select(col("doc_id"), bands(col("text")).as("bands"))
+      jaccardCols(lshJoin(d, sigs, col("bands"), SetBucketCap, set)(jaccard, _ >= threshold))
+    }
 
   // ---------------------------------------------------------------- minhash
 
@@ -507,10 +522,13 @@ object Dedup {
     * compiled kernel pass per doc.
     */
   def minhashBands(docs: DataFrame, shingleK: Int = ShingleK, lanes: Int = Lanes,
-      bands: Int = Bands): DataFrame = {
-    val bandsUdf = udf((text: String) => shingleBandMinsOf(text, shingleK, lanes, bands))
-    docs.select(col("doc_id"), posexplode(bandsUdf(col("text"))).as(Seq("band_id", "band_hash")))
-  }
+      bands: Int = Bands): DataFrame =
+    docs.select(col("doc_id"), posexplode(minhashBandArray(col("text"), shingleK, lanes, bands))
+      .as(Seq("band_id", "band_hash")))
+
+  /** One doc's minhash band array, the kernel behind [[minhashBands]]. */
+  private def minhashBandArray(text: Column, shingleK: Int, lanes: Int, bands: Int): Column =
+    udf((t: String) => shingleBandMinsOf(t, shingleK, lanes, bands)).apply(text)
 
   private val shingleSetUdf = udf((text: String) => shingleHashedSetOf(text, ShingleK))
 
@@ -519,7 +537,8 @@ object Dedup {
     * (doc_a, doc_b, jaccard), doc_a < doc_b.
     */
   def minhashNearDups(docs: DataFrame): DataFrame =
-    jaccardNearDups(docs, minhashBands(_), shingleSetUdf(col("text")), MinhashThreshold)
+    jaccardNearDups(docs, minhashBandArray(_, ShingleK, Lanes, Bands), shingleSetUdf(col("text")),
+      MinhashThreshold)
 
   /** Exact all-pairs token-shingle Jaccard ≥ 0.7 over a SMALL doc set —
     * the brute-force ground truth the LSH path is verified against
@@ -556,13 +575,11 @@ object Dedup {
     * duplicate-heavy buckets from forming in the first place.
     */
   def simhashNearDups(docs: DataFrame): DataFrame = {
-    def bands(sims: DataFrame): DataFrame =
-      sims.select(col("doc_id"), posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band_id", "band_hash")))
+    val bands = array((0 until 4).map(b =>
+      shiftrightunsigned(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)
     withExactPrepass(docs, "hamming", lit(0)) { d =>
       val sims = d.select(col("doc_id"), simhashUdf(tokensCol(col("text"))).as("sim"))
-      lshJoin(sims, bands(sims), SimBucketCap, col("sim"))(
+      lshJoin(sims, sims, bands, SimBucketCap, col("sim"))(
         (a, b) => bit_count(a.bitwiseXOR(b)), _ <= MaxHamming)
         .withColumnRenamed("score", "hamming")
     }
@@ -653,10 +670,13 @@ object Dedup {
 
   /** signatures(doc_id, band_id, band_hash) over character-n-gram sets. */
   def ngramBands(docs: DataFrame, n: Int = NgramN, lanes: Int = Lanes,
-      bands: Int = Bands): DataFrame = {
-    val bandsUdf = udf((text: String) => ngramBandMinsOf(text, n, lanes, bands))
-    docs.select(col("doc_id"), posexplode(bandsUdf(col("text"))).as(Seq("band_id", "band_hash")))
-  }
+      bands: Int = Bands): DataFrame =
+    docs.select(col("doc_id"), posexplode(ngramBandArray(col("text"), n, lanes, bands))
+      .as(Seq("band_id", "band_hash")))
+
+  /** One doc's n-gram band array, the kernel behind [[ngramBands]]. */
+  private def ngramBandArray(text: Column, n: Int, lanes: Int, bands: Int): Column =
+    udf((t: String) => ngramBandMinsOf(t, n, lanes, bands)).apply(text)
 
   private val ngramSetUdf = udf((text: String) => ngramHashedSetOf(text, NgramN))
 
@@ -669,7 +689,8 @@ object Dedup {
     * j=0.8, ≈0.997 at j=0.9. Returns (doc_a, doc_b, jaccard).
     */
   def ngramJaccard(docs: DataFrame): DataFrame =
-    jaccardNearDups(docs, ngramBands(_), ngramSetUdf(col("text")), NgramThreshold)
+    jaccardNearDups(docs, ngramBandArray(_, NgramN, Lanes, Bands), ngramSetUdf(col("text")),
+      NgramThreshold)
 
   /** Exact all-pairs n-gram Jaccard ≥ 0.8 over a SMALL doc set (ground truth). */
   def ngramBrute(docs: DataFrame): DataFrame =
@@ -737,9 +758,14 @@ object Dedup {
   def embeddingBands(embs: DataFrame, nVec: Long, dim: Int = EmbDim,
       tables: Int = 16, planesOverride: Int = -1): DataFrame = {
     val planes = if (planesOverride > 0) planesOverride else planesFor(nVec)
+    embs.select(col("vec_id"),
+      posexplode(embeddingBitArray(col("embedding"), planes, tables, dim)).as(Seq("table_id", "bits")))
+  }
+
+  /** One vector's per-table sign bits, the kernel behind [[embeddingBands]]. */
+  private def embeddingBitArray(v: Column, planes: Int, tables: Int, dim: Int): Column = {
     val mat = Array.tabulate(tables * planes)(p => planeVec(p, dim))
-    val bitsUdf = udf((v: Seq[Float]) => embeddingBits(v, planes, tables, dim, mat))
-    embs.select(col("vec_id"), posexplode(bitsUdf(col("embedding"))).as(Seq("table_id", "bits")))
+    udf((v: Seq[Float]) => embeddingBits(v, planes, tables, dim, mat)).apply(v)
   }
 
   /** Cosine of two float vectors (index-order accumulation — matches the
@@ -791,10 +817,10 @@ object Dedup {
       "embeddingNearDups needs nVec >= 0 (approximate corpus size) or an explicit planesOverride")
     val planes = if (planesOverride > 0) planesOverride else planesFor(nVec)
     val tables = if (tablesOverride > 0) tablesOverride else tablesFor(planes, threshold)
-    val sigs = embeddingBands(embs, -1L, EmbDim, tables, planes)
-      .select(col("vec_id").as("doc_id"), col("table_id").as("band_id"), col("bits").as("band_hash"))
-    cosCols(lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, EmbBucketCap,
-      doubleEmbedding)(embeddingCosine, _ >= threshold))
+    val sigs = embs.select(col("vec_id").as("doc_id"),
+      embeddingBitArray(col("embedding"), planes, tables, EmbDim).as("bands"))
+    cosCols(lshJoin(embs.select(col("vec_id").as("doc_id"), col("embedding")), sigs, col("bands"),
+      EmbBucketCap, doubleEmbedding)(embeddingCosine, _ >= threshold))
   }
 
   /** An embedding family's verified pairs as (vec_a, vec_b, cos), the
@@ -807,7 +833,7 @@ object Dedup {
     * pair graph, every member mapped to its cluster representative (the
     * min doc_id) — the dedup endgame: keep the representative, drop the
     * rest. Reuses the kg pipeline's iterative min-label propagation
-    * (Canonicalize.components — localCheckpoint'd rounds, O(diameter)).
+    * (Canonicalize.components — materialized rounds, O(diameter)).
     * Only docs that appear in ≥1 pair are emitted (singletons keep
     * themselves trivially).
     */

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Reuse
+
 /** TF-IDF and χ² feature scoring over documents — SURVEY §2.3 F16/F17 and
   * §2.4 A14, expressed as plain joins/aggregates (DuckDB-oracle-checkable)
   * rather than MLlib fit/transform, so semantics are explicit and the plan
@@ -47,7 +49,7 @@ object TfIdf {
     * (FeatureSelection.DEFAULT_MIN_FEATURE_FREQ).
     *
     * Eager: building the frame runs one Spark job (the (token, category)
-    * aggregate's `localCheckpoint`), and the result reads executor-local
+    * aggregate's `Reuse.materialize`), and the result reads executor-local
     * checkpoint blocks, so it stays valid only while the executors holding
     * them live; losing one makes the frame unrecoverable.
     */
@@ -60,14 +62,13 @@ object TfIdf {
     // category-sum of the (token, category) counts — each doc has exactly
     // one category, so sum(a) ≡ the old count over tokDocs (the old
     // groupBy(token) branch re-ran the whole tokenize+explode with its own
-    // Exchange). The aggregate is localCheckpoint'd (eager, per-invocation
+    // Exchange). The aggregate is materialized (eager, per-invocation
     // — fresh blocks every call, released by the ContextCleaner on GC)
     // because the two consumers' pushed-down join filters otherwise break
     // the subtree's canonical equality and exchange reuse does NOT fire;
     // the frame is small (≤ |vocab| × |categories| rows).
-    val tokCatAll = tokDocs.groupBy(col("token"), col("category"))
-      .agg(count(lit(1)).as("a"))
-      .localCheckpoint(true)
+    val tokCatAll = Reuse.materialize(tokDocs.groupBy(col("token"), col("category"))
+      .agg(count(lit(1)).as("a")), "tfidf.tokCat")
     val tokCat = tokCatAll.filter(col("a") >= minCount)
     val tokTotal = tokCatAll.groupBy(col("token")).agg(sum(col("a")).as("n1x"))
     val catTotal = docs.groupBy(col("category")).agg(count(lit(1)).as("nx1"))

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A long-lived session (Bench memo, Tune sweeps, the driver's Verify)
   * runs many pipelines — cached frames must not accumulate. Explicitly
-  * persisted frames are released by Result.unpersist(); localCheckpoint
+  * persisted frames are released by Result.unpersist(); Reuse.materialize
   * blocks (rollupAll, textVectors) are released by the ContextCleaner once
   * the frames are GC-unreachable. Round 3 leaked two persists per run
   * (rollupAll's full/exact were unreachable by Result.unpersist).
@@ -13,13 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
 
   private def cachedCount: Int = {
-    // the cleaner runs asynchronously after GC — give it a bounded nudge
+    // the cleaner runs asynchronously after GC — give it a bounded nudge,
+    // until nothing is left or the count holds for `Steady` GC rounds in a
+    // row (a Result held on purpose, as by the KgQueries memo, never
+    // reaches 0)
+    val Steady = 4
     var n = spark.sparkContext.getPersistentRDDs.size
     var tries = 0
-    while (n > 0 && tries < 40) {
+    var same = 0
+    while (n > 0 && same < Steady && tries < 40) {
       System.gc()
       Thread.sleep(250)
-      n = spark.sparkContext.getPersistentRDDs.size
+      val next = spark.sparkContext.getPersistentRDDs.size
+      same = if (next == n) same + 1 else 0
+      n = next
       tries += 1
     }
     n

@@ -10,8 +10,10 @@ For each side it prints one line of JSON:
     and the lines of `/* ... */` / `/** ... */` blocks);
   - expressions: class/object definitions that extend a Catalyst
     expression base (Expression, UnaryExpression, BinaryExpression, ...);
-  - local_checkpoints: `localCheckpoint(` call sites outside comments,
-    with the number of files that hold them;
+  - raw_local_checkpoints: `localCheckpoint(` call sites outside comments
+    and outside Reuse.scala, the one helper that may call it, with the
+    number of files that hold them;
+  - materialize_sites: `Reuse.materialize(` call sites outside comments;
   - udfs: `udf(...)` and `udf { ... }` definitions outside comments
     (the boxed per-row converters a compiled kernel or a built-in
     replaces).
@@ -78,7 +80,7 @@ def code_only(text):
 
 def measure(files):
     """files: [(path, text)] → the metrics of the module docstring."""
-    lines = code_lines = expressions = checkpoints = udfs = 0
+    lines = code_lines = expressions = checkpoints = materializes = udfs = 0
     checkpoint_files = set()
     for path, text in files:
         lines += text.count("\n") + (0 if text.endswith("\n") or not text else 1)
@@ -87,13 +89,15 @@ def measure(files):
         expressions += sum(1 for m in DEF_HEAD.finditer(code)
                            if EXPR_BASES.search(m.group(1)))
         udfs += len(UDF_DEF.findall(code))
-        k = code.count("localCheckpoint(")
+        materializes += code.count("Reuse.materialize(")
+        k = 0 if os.path.basename(path) == "Reuse.scala" else code.count("localCheckpoint(")
         if k:
             checkpoints += k
             checkpoint_files.add(path)
     return {"lines": lines, "code_lines": code_lines, "expressions": expressions,
-            "local_checkpoints": checkpoints,
-            "local_checkpoint_files": len(checkpoint_files), "udfs": udfs}
+            "raw_local_checkpoints": checkpoints,
+            "raw_local_checkpoint_files": len(checkpoint_files),
+            "materialize_sites": materializes, "udfs": udfs}
 
 
 def git(*args):
